@@ -7,8 +7,8 @@ Spark starts, and cached per (seed, pages).  A corpus directory holds
   per core;
 * ``expected_triples.parquet`` and ``aliases.parquet`` (the synth
   contract tables);
-* ``meta.json`` with the page count and the planted-junk count, then a
-  ``_DONE`` marker.
+* ``meta.json`` with the page count and the planted junk pages' urls,
+  then a ``_DONE`` marker.
 
 Pages start after the synthesizer's chunking-adversarial edge pages
 (empty page, one-word page, ...): those are unit-test fixtures, not
@@ -53,10 +53,10 @@ def write_corpus(out_dir: str, seed: int, n_pages: int) -> None:
         os.path.join(tmp, "aliases.parquet"),
     )
     # the synthesizer's own definition of a planted junk page
-    junk = sum(synth._is_planted_junk(i, seed, JUNK_RATE)
-               for i in range(start, start + n_pages))
+    junk_urls = [url for i, url in enumerate(pages.column("url").to_pylist())
+                 if synth._is_planted_junk(start + i, seed, JUNK_RATE)]
     with open(os.path.join(tmp, "meta.json"), "w") as f:
-        json.dump({"seed": seed, "pages": n_pages, "junk": junk}, f)
+        json.dump({"seed": seed, "pages": n_pages, "junk_urls": junk_urls}, f)
     open(os.path.join(tmp, "_DONE"), "w").close()
     shutil.rmtree(out_dir, ignore_errors=True)
     os.rename(tmp, out_dir)

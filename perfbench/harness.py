@@ -69,13 +69,16 @@ class RunContext:
         return os.path.join(self.run_dir, *parts)
 
     def export_env(self) -> None:
-        """Environment the Spark JVM and its Python workers inherit: the
-        checkout on the import path and every scratch file inside it."""
+        """Environment the Spark JVMs and Python workers inherit: the
+        checkout on the import path and every scratch file inside it
+        (no JVM perf-data file under /tmp either)."""
         paths = [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(
             os.pathsep) if p]
         os.environ["PYTHONPATH"] = os.pathsep.join(paths)
         os.environ["SPARK_LOCAL_DIRS"] = self.path("spark-local")
         os.environ["TMPDIR"] = self.path("tmp")
+        os.environ["JAVA_TOOL_OPTIONS"] = (
+            f"-XX:-UsePerfData -Djava.io.tmpdir={self.path('tmp')}")
 
     def cleanup(self) -> None:
         shutil.rmtree(self.run_dir, ignore_errors=True)
@@ -89,10 +92,7 @@ class RunContext:
 def start_session(ctx: RunContext):
     from driftmind_spark.session import get_spark
 
-    conf = {
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={ctx.path('tmp')}",
-        "spark.sql.warehouse.dir": ctx.path("warehouse"),
-    }
+    conf = {"spark.sql.warehouse.dir": ctx.path("warehouse")}
     if ctx.trace:
         conf.update({
             "spark.eventLog.enabled": "true",
@@ -199,9 +199,12 @@ def _tree_rss_bytes(root: int) -> int:
 class RssSampler:
     """Samples the resident set of this process and all its descendants
     (the Spark JVM, Python worker daemon and workers) every ``interval``
-    seconds on a background thread; ``peak_mb`` is the largest sample."""
+    seconds on a background thread; ``peak_mb`` is the largest sample.
+    Disabled samplers (untraced runs, which do not report memory) start
+    no thread, so the timed window shares the GIL with nothing."""
 
-    def __init__(self, interval: float = 0.25):
+    def __init__(self, enabled: bool, interval: float = 0.25):
+        self.enabled = enabled
         self.interval = interval
         self.peak = 0
         self._stop = threading.Event()
@@ -215,12 +218,14 @@ class RssSampler:
                 return
 
     def __enter__(self):
-        self._thread.start()
+        if self.enabled:
+            self._thread.start()
         return self
 
     def __exit__(self, *exc):
-        self._stop.set()
-        self._thread.join()
+        if self.enabled:
+            self._stop.set()
+            self._thread.join()
 
     @property
     def peak_mb(self) -> float:

@@ -25,6 +25,11 @@ from .corpus import ensure_corpus
 N_PAGES = 600
 PARITY_SAMPLE = 25
 MIN_TRIPLE_PR = 0.95
+# The gate's language guess is a heuristic: on some seeds it rejects a
+# few entity-dense German pages as bad_lang (3 of 541 real pages on seed
+# 706), so real pages may be rejected up to this share; planted junk
+# must all be rejected.
+MAX_FALSE_REJECT = 0.01
 # pipeline stages in the order run() executes them; each is the job
 # description group dm:<run_id>:<stage>
 STAGES = ("extract", "quality", "dedup", "chunks", "chunk_dedup", "triples",
@@ -63,9 +68,18 @@ def check_outputs(corpus: str, out_dir: str, metrics: dict, meta: dict,
     if sum(extract_rows.values()) != n_pages:
         failures.append(f"lineage extract rows {sum(extract_rows.values())} "
                         f"!= pages fed {n_pages}")
-    if metrics.get("quality_dropped") != meta["junk"]:
+    rejected = _read(os.path.join(out_dir, "quality_audit"),
+                     ["url"]).column("url").to_pylist()
+    junk = set(meta["junk_urls"])
+    passed_junk, false_rejects = junk - set(rejected), set(rejected) - junk
+    if metrics.get("quality_dropped") != len(rejected):
         failures.append(f"quality_dropped {metrics.get('quality_dropped')} "
-                        f"!= planted junk {meta['junk']}")
+                        f"!= {len(rejected)} quality_audit rows")
+    if passed_junk:
+        failures.append(f"{len(passed_junk)} of {len(junk)} planted junk "
+                        "pages passed the quality gate")
+    if len(false_rejects) > MAX_FALSE_REJECT * (n_pages - len(junk)):
+        failures.append(f"{len(false_rejects)} real pages rejected as junk")
 
     kept = set(_read(os.path.join(out_dir, "extracted_dedup"),
                      ["url"]).column("url").to_pylist())
@@ -115,7 +129,7 @@ def run(ctx: harness.RunContext) -> dict:
         # a re-used out_dir/run_id silently skips committed buckets
         raise RuntimeError(f"{out_dir} exists; every build starts empty")
 
-    with harness.RssSampler() as rss:
+    with harness.RssSampler(ctx.trace) as rss:
         spark, _, setup = harness.set_up(ctx)
         t0 = time.perf_counter()
         epoch0 = time.time()
@@ -139,13 +153,13 @@ def run(ctx: harness.RunContext) -> dict:
         "metrics": {
             "setup_s": (setup["setup_s"], "s"),
             "docs_per_s": (pages / wall, "pages/s"),
-            "latency_p50_ms": (wall * 1000, "ms"),
-            "latency_p90_ms": (wall * 1000, "ms"),
+            "query_p50_ms": (wall * 1000, "ms"),
+            "query_p90_ms": (wall * 1000, "ms"),
             "written_bytes_per_doc": (written / pages, "B/page"),
         },
     }
     if ctx.trace:
-        result["layers"] = {"process.peak_rss_mb": (rss.peak_mb, "MiB")}
+        result["layers"] = {"peak_rss_mb": (rss.peak_mb, "MiB")}
         result["layers"].update(_layer_metrics(
             ctx, metrics, setup, written, files, epoch0, t0))
     return result
