@@ -1,6 +1,6 @@
 """Run one benchmark workload and print its result as one JSON line.
 
-    python3 perfbench/run.py --workload kg_build --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload kg_build --seed 1 --seconds 16 --trace 0
 
 Run from the root of a checkout.  The workload runs in this process
 against the checkout's ``driftmind_spark`` package on ``local[nproc]``.
