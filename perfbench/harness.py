@@ -9,6 +9,7 @@ itself against.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -237,18 +238,40 @@ class RssSampler:
 # ---------------------------------------------------------------------------
 
 
+def tree_hash() -> str:
+    """Hash of the Python sources of the package under test and of the
+    benchmark in this checkout: a traced run compares itself only with
+    untraced runs of the same code."""
+    h = hashlib.sha1()
+    for top in ("driftmind_spark", "perfbench"):
+        for dirpath, dirnames, names in os.walk(os.path.join(ROOT, top)):
+            dirnames.sort()
+            for n in sorted(names):
+                if n.endswith(".py"):
+                    path = os.path.join(dirpath, n)
+                    h.update(os.path.relpath(path, ROOT).encode())
+                    with open(path, "rb") as f:
+                        h.update(f.read())
+    return h.hexdigest()
+
+
 def _walls_path(workload: str) -> str:
     return os.path.join(WORK, f"untraced-{workload}.jsonl")
 
 
 def record_untraced_wall(workload: str, seed: int, wall_s: float) -> None:
+    """Record the measured wall of an untraced run whose checks passed."""
     with open(_walls_path(workload), "a") as f:
-        f.write(json.dumps({"seed": seed, "wall_s": wall_s}) + "\n")
+        f.write(json.dumps({"tree": tree_hash(), "seed": seed,
+                            "wall_s": wall_s}) + "\n")
 
 
 def untraced_walls(workload: str) -> list[float]:
+    """Walls of the recorded untraced runs of the current code."""
+    tree = tree_hash()
     try:
         with open(_walls_path(workload)) as f:
-            return [json.loads(line)["wall_s"] for line in f if line.strip()]
+            rows = [json.loads(line) for line in f if line.strip()]
     except FileNotFoundError:
         return []
+    return [r["wall_s"] for r in rows if r.get("tree") == tree]

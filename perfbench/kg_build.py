@@ -19,7 +19,7 @@ import sys
 import time
 from collections import Counter
 
-from . import harness
+from . import harness, stream_leg
 from .corpus import ensure_corpus
 
 N_PAGES = 600
@@ -214,5 +214,7 @@ def _layer_metrics(ctx, metrics, setup, written, files, epoch0,
         layers[f"{stage}.shuffle_write_bytes"] = (
             g(stage, "shuffle_write_bytes"), "B")
         layers[f"{stage}.spill_bytes"] = (g(stage, "spill_bytes"), "B")
+    # the streaming leg runs only in search_serve's traced run
+    layers.update(stream_leg.leg_layers(None, groups))
     ctx.tracer.write(ctx.trace_output, {"event_log_groups": groups})
     return layers

@@ -110,7 +110,8 @@ _SQL_UPDATE = ("org.apache.spark.sql.execution.ui."
 
 def job_group(description: str | None) -> str:
     """``dm:<run_id>:<stage>`` -> stage; ``bench:<group>[:<id>]`` ->
-    group; anything else -> ``other``."""
+    group; a streaming micro-batch (Spark sets ``... batch = <n>``) ->
+    ``stream``; anything else -> ``other``."""
     if not description:
         return "other"
     parts = description.split(":")
@@ -118,6 +119,8 @@ def job_group(description: str | None) -> str:
         return parts[-1]
     if parts[0] == "bench" and len(parts) >= 2:
         return parts[1]
+    if "\nbatch = " in description:
+        return "stream"
     return "other"
 
 
