@@ -12,7 +12,40 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..kernels.textproc import MIME_TYPES
+from ..kernels.textproc import (
+    ALL_STOP_WORDS,
+    MIME_TYPES,
+    MULTI_LANGUAGE_SYNONYMS,
+    extract_meaningful_terms,
+)
+
+# ---------------------------------------------------------------------------
+# Driver-side literal arrays as ONE parsed expression.  ``F.array`` over
+# ``F.lit`` costs a py4j round trip per element (about 170 ms for the 257
+# stop words); one ``F.expr`` costs about 2 ms.  Array and string literals
+# reach generated code by reference, so a plan built from them compiles to
+# the same code whatever their values.
+# ---------------------------------------------------------------------------
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal.  ``$`` goes in as ``\\u0024`` so
+    the parser's ``${var}`` substitution never sees it."""
+    return "'" + (s.replace("\\", "\\\\").replace("'", "\\'")
+                  .replace("$", "\\u0024")) + "'"
+
+
+def str_array_sql(values) -> str:
+    return f"CAST(array({', '.join(map(_sql_str, values))}) AS ARRAY<STRING>)"
+
+
+def double_array_sql(values) -> str:
+    """One string literal cast to doubles: three expression nodes to
+    analyse instead of one per element.  Exact: ``repr`` of a finite
+    float parses back to the same double."""
+    return (f"CAST(split('{','.join(repr(float(v)) for v in values)}', ',')"
+            " AS ARRAY<DOUBLE>)")
+
 
 # ---------------------------------------------------------------------------
 # F3 — cache normalization (EmbeddingService.cs:95-104), SQL-flavored:
@@ -40,7 +73,7 @@ def terms_array(col: Column, stop_words: tuple[str, ...]) -> Column:
     # null-free arrays (the two differ only in null placement), but
     # array_sort expands to a lambda-comparator expression — more
     # generated code to compile per cold query and a slower sort.
-    stop_lit = F.array(*[F.lit(w) for w in stop_words])
+    stop_lit = F.expr(str_array_sql(stop_words))
     toks = F.split(F.lower(col), _TERM_SPLIT_PATTERN)
     long_enough = F.filter(toks, lambda t: F.length(t) > 2)
     return F.sort_array(F.array_except(long_enough, stop_lit))
@@ -118,32 +151,38 @@ def truncate_at_word(col: Column, max_length: int = 150) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def l2_norm(a: Column) -> Column:
+# Arguments are SQL expressions (column names, say) and each function is
+# one parsed expression: building the same tree node by node through
+# ``F.aggregate``/``F.zip_with`` costs a py4j round trip per node and per
+# lambda.
+
+
+def l2_norm_sql(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0.0D, (acc, v) -> acc + v * v))"
+
+
+def l2_norm(a: str) -> Column:
     """Euclidean norm as the exact left-fold aggregate ``cosine_sim``
     uses, split out so join operators can HOIST it to before the join:
     each side's norm is then evaluated once per vector instead of once
     per candidate pair (pure common-subexpression motion — same
     expression, same float summation order, bit-identical values)."""
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
+    return F.expr(l2_norm_sql(a))
 
 
-def cosine_sim_prenorm(
-    a: Column, b: Column, na: Column, nb: Column
-) -> Column:
-    """``cosine_sim`` with the two norms supplied as precomputed columns
-    (see ``l2_norm``).  Only the dot product remains per-pair work."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def cosine_sim_prenorm(a: str, b: str, na: str, nb: str) -> Column:
+    """``cosine_sim`` with the two norms supplied as precomputed
+    expressions (see ``l2_norm``).  Only the dot product remains
+    per-pair work."""
+    return F.expr(
+        f"CASE WHEN size({a}) != size({b}) OR {na} = 0.0D OR {nb} = 0.0D"
+        f" THEN 0.0D ELSE aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
+        f" 0.0D, (acc, v) -> acc + v) / ({na} * {nb}) END"
     )
-    return F.when(
-        (F.size(a) != F.size(b)) | (na == 0.0) | (nb == 0.0), F.lit(0.0)
-    ).otherwise(dot / (na * nb))
 
 
-def cosine_sim(a: Column, b: Column) -> Column:
-    return cosine_sim_prenorm(a, b, l2_norm(a), l2_norm(b))
+def cosine_sim(a: str, b: str) -> Column:
+    return cosine_sim_prenorm(a, b, l2_norm_sql(a), l2_norm_sql(b))
 
 
 # ---------------------------------------------------------------------------
@@ -153,6 +192,68 @@ def cosine_sim(a: Column, b: Column) -> Column:
 
 def blend_score(vector_score: Column, text_relevance: Column) -> Column:
     return vector_score * F.lit(0.7) + text_relevance * F.lit(0.3)
+
+
+# ---------------------------------------------------------------------------
+# F5 (exact) — RelevanceAnalyzer.CalculateRelevanceScore as one native
+# expression, equal bit for bit to kernels.textproc.calculate_relevance_score.
+# ---------------------------------------------------------------------------
+
+# one string literal split into an array: analysing a 257-element
+# array(...) costs about 15 ms per occurrence, the split form 1-2 ms;
+# the optimizer folds both to the same literal
+_STOP_WORDS_SQL = f"split({_sql_str(' '.join(sorted(ALL_STOP_WORDS)))}, ' ')"
+
+
+def _query_terms_sql(query: str) -> str:
+    """The query's meaningful terms, each with its forward and reverse
+    synonym lists, as one array-of-struct literal."""
+    syn = {k: {s.lower() for s in v} for k, v in MULTI_LANGUAGE_SYNONYMS.items()}
+    rows = [
+        f"named_struct('term', {_sql_str(t)}, "
+        f"'fwd', {str_array_sql(sorted(syn.get(t, ())))}, "
+        f"'rev', {str_array_sql(k for k, v in syn.items() if t in v)})"
+        for t in extract_meaningful_terms(query)
+    ]
+    return (f"CAST(array({', '.join(rows)}) AS ARRAY<STRUCT<term: STRING, "
+            "fwd: ARRAY<STRING>, rev: ARRAY<STRING>>>)")
+
+
+# weight of one query term ``t``: exact match (2.0), substring but not a
+# space-separated word (1.0), a forward and a reverse synonym hit (1.5
+# each); ``{ct}`` is the content's meaningful-term set, ``{low}`` the
+# lowered content
+_TERM_WEIGHT_SQL = (
+    "IF(array_contains({ct}, t.term), 2.0D, 0.0D)"
+    " + IF(contains({low}, t.term) AND NOT array_contains(split({low}, ' '), t.term),"
+    " 1.0D, 0.0D)"
+    " + IF(arrays_overlap({ct}, t.fwd), 1.5D, 0.0D)"
+    " + IF(arrays_overlap({ct}, t.rev), 1.5D, 0.0D)"
+)
+_RELEVANCE_SQL = (
+    "CASE WHEN size({q}) = 0 THEN coalesce({vs}, 0.0D)"
+    " ELSE aggregate({q}, 0.0D, (acc, t) -> acc + " + _TERM_WEIGHT_SQL + ","
+    " total -> CASE WHEN {vs} IS NULL THEN {text}"
+    " ELSE {vs} * 0.7D + {text} * 0.3D END) END"
+)
+
+
+def relevance_score(content: str, vector_score: str, query: str) -> Column:
+    """``calculate_relevance_score(content, query, vector_score)`` as one
+    native Column over the SQL expressions ``content`` and
+    ``vector_score`` (column names, say).  The query enters only as
+    literals in a fixed template, so the expression has the same shape
+    for every query.  Every term weight is a multiple of 0.5, so summing
+    per term instead of per kind gives the kernel's double exactly."""
+    q = _query_terms_sql(query)
+    low = f"lower(coalesce({content}, ''))"
+    # array_except is a hash-set difference; its dedup is harmless, every
+    # use is a membership test
+    ct = (f"array_except(filter(split({low}, {_sql_str(_TERM_SPLIT_PATTERN)}),"
+          f" w -> length(w) > 2), {_STOP_WORDS_SQL})")
+    text = f"least(1.0D, total / (size({q}) * 2.0D))"
+    return F.expr(_RELEVANCE_SQL.format(q=q, vs=vector_score, ct=ct, low=low,
+                                        text=text))
 
 
 # ---------------------------------------------------------------------------

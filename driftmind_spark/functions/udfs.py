@@ -14,7 +14,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
-    DoubleType,
     FloatType,
     LongType,
     StringType,
@@ -26,7 +25,6 @@ from ..kernels import hashing as hk
 from ..kernels.extract import extract_main_text
 from ..kernels.openie import extract_triples
 from ..kernels.textproc import (
-    calculate_relevance_score,
     chunk_text,
     is_follow_up_question,
     normalize_for_caching,
@@ -181,26 +179,6 @@ def simhash_udf(text: pd.Series) -> pd.Series:
 @pandas_udf(LongType())
 def fingerprint_udf(text: pd.Series) -> pd.Series:
     return text.map(lambda t: hk.rolling_fingerprint(t or ""))
-
-
-# ---------------------------------------------------------------------------
-# Relevance scoring (F5) — exact-port variant for fixture parity; the
-# SQL-expressible blend lives in functions/text.py.
-# ---------------------------------------------------------------------------
-
-
-def make_relevance_udf(query: str):
-    @pandas_udf(DoubleType())
-    def relevance_udf(content: pd.Series, vector_score: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                calculate_relevance_score(c or "", query,
-                                          None if pd.isna(v) else float(v))
-                for c, v in zip(content, vector_score)
-            ]
-        )
-
-    return relevance_udf
 
 
 @pandas_udf(BooleanType())

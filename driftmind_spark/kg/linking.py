@@ -116,7 +116,7 @@ def score_candidate_pairs(
         pairs.withColumn("jaccard", jac("norm_a", "norm_b"))
         .withColumn("emb_a", embed("norm_a"))
         .withColumn("emb_b", embed("norm_b"))
-        .withColumn("cosine", cosine_sim(F.col("emb_a"), F.col("emb_b")))
+        .withColumn("cosine", cosine_sim("emb_a", "emb_b"))
         .drop("emb_a", "emb_b")
     )
     return (

@@ -679,7 +679,7 @@ def embedding_near_dups(
     (±1 coefficient planes, sign bits, probe flip) is mirrored literally
     in the DuckDB oracle."""
     budf = _near_dup_key_udf(dim, n_planes, n_tables, seed, n_probes)
-    vec_d = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    vec_d = "transform(embedding, x -> CAST(x AS DOUBLE))"
     # vector norm hoisted out of the verification cosine (see
     # functions.text.l2_norm): evaluated once per VECTOR instead of once
     # per candidate pair — bit-identical.  Two selects, not one: with
@@ -689,7 +689,7 @@ def embedding_near_dups(
     # explode over plain attributes pins them below it.
     base = embeddings.select(
         F.col("vec_id"),
-        vec_d.alias("vec"),
+        F.expr(vec_d).alias("vec"),
         l2_norm(vec_d).alias("vn"),
         budf("embedding").alias("bks"),
     ).select("vec_id", "vec", "vn", F.explode("bks").alias("bucket_key"))
@@ -702,9 +702,7 @@ def embedding_near_dups(
         )
         base = base.join(F.broadcast(hot), ["bucket_key"], "left_anti")
     a, b = base.alias("a"), base.alias("b")
-    cos = cosine_sim_prenorm(
-        F.col("a.vec"), F.col("b.vec"), F.col("a.vn"), F.col("b.vn")
-    )
+    cos = cosine_sim_prenorm("a.vec", "b.vec", "a.vn", "b.vn")
     return (
         a.join(b, "bucket_key")
         .filter(F.col("a.vec_id") < F.col("b.vec_id"))

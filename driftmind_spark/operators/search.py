@@ -1,5 +1,5 @@
-"""The POST /search pipeline (SURVEY.md §3.2) as one DataFrame
-expression over a chunks table.
+"""The POST /search pipeline (SURVEY.md §3.2) as one JVM-only DataFrame
+plan over a chunks table.
 
 Reference flow (SearchOrchestrationService.cs:39-312) — follow-up
 classification, query expansion, dual hybrid search, merge-dedup,
@@ -7,25 +7,45 @@ chunk-0 metadata join, 0.7/0.3 re-scoring, history boosts, threshold,
 per-document diversification, top-k, adjacent-context assembly — with
 the per-request network hops replaced by one declarative plan:
 
-  chunks -> vector score (cosine vs broadcast query vec)
-         -> union(original, expanded) -> max-score dedup (J3)
-         -> relevance blend (F5)
-         -> threshold (P6) -> best-chunk-per-doc (A4) -> top-k (W1)
-         [+ history] -> enhanced second leg (top-20 rescore + x1.8/x1.3
-                        boosts, SearchHistoryService.cs:101-214)
-                     -> reference merge: enhanced first, unseen base
-                        docs fill remaining seats, final top-k
+  chunks -> one scan: vector score = greatest(cos(q), cos(q_expanded))
+            (raise_error on an embedding-size mismatch)
+         -> top cand_k by vector score (T5)
+         -> relevance blend 0.7*vector + 0.3*text (F5, native Column)
+         -> threshold (P6) -> best chunk per doc (A4) -> top-k (W1)
+         [+ history] -> enhanced second leg: one scan, cos(q_expanded),
+                        top-20 -> F5 -> x1.8/x1.3 boosts -> top-15
+                        (SearchHistoryService.cs:101-214)
+                     -> reference merge in one partition: enhanced
+                        first, unseen base docs fill the remaining seats
                         (SearchOrchestrationService.cs:450-483)
-         -> +-k adjacent chunks window (W2/J5)
+         -> broadcast hits x chunks: +-k adjacent chunks (W2/J5)
+         -> final top-k
+
+The reference's two legs (original and expanded query) are one scan:
+per row, the better leg's score is the larger of the two cosines.  That
+equals a union of the legs deduped to the best row per (url,
+chunk_index) because (url, chunk_index) is unique in a chunks table;
+the context step relies on the same uniqueness.  Every top-k is a
+TakeOrderedAndProject (per-partition top-k, then one partition), so the
+steps after it need no exchange and no step shuffles the full table.
+Query-dependent values enter only as literals in fixed SQL templates,
+parsed once each.  A request runs no Python worker and two Spark jobs:
+the broadcast of the hits and the final collect.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import cosine_sim
-from ..functions.udfs import make_relevance_udf
+from ..functions.text import (
+    cosine_sim_prenorm,
+    double_array_sql,
+    l2_norm,
+    l2_norm_sql,
+    relevance_score,
+    str_array_sql,
+)
 from ..kernels.hashing import hashed_ngram_embedding
 from ..kernels.textproc import (
     expand_query,
@@ -41,16 +61,28 @@ HISTORY_DOC_BOOST = 1.8   # SearchHistoryService.cs:162
 HISTORY_KW_BOOST = 1.3    # SearchHistoryService.cs:169
 
 
-def _query_vec_col(query: str, dim: int):
-    return F.array(*[F.lit(float(x))
-                     for x in hashed_ngram_embedding(query, dim).tolist()])
-
-
-def _scored(chunks: DataFrame, query: str, dim: int, label: str) -> DataFrame:
-    qv = F.transform(_query_vec_col(query, dim), lambda x: x.cast("double"))
-    cv = F.transform("embedding", lambda x: x.cast("double"))
-    return chunks.withColumn("vector_score", cosine_sim(cv, qv)).withColumn(
-        "search_leg", F.lit(label)
+def _vector_scored(chunks: DataFrame, queries: list[str], dim: int) -> DataFrame:
+    """``chunks`` plus ``vector_score``: the greatest cosine over the
+    distinct ``queries``, in one scan.  The chunk vector and its norm are
+    computed once per row and shared by every query vector.  A chunk
+    whose embedding size is not ``dim`` fails the job: scored, it would
+    silently get 0.0."""
+    cos = []
+    for q in dict.fromkeys(queries):
+        qv = double_array_sql(hashed_ngram_embedding(q, dim).tolist())
+        cos.append(cosine_sim_prenorm("_cv", qv, "_cn", l2_norm_sql(qv)))
+    mismatch = F.expr(
+        "raise_error(format_string('search: embedding size %d != embedding_dim %d',"
+        f" size(embedding), {dim}))"
+    )
+    vector_score = F.when(F.size("embedding") != dim, mismatch).otherwise(
+        F.greatest(*cos) if len(cos) > 1 else cos[0]
+    )
+    return (
+        chunks.withColumn("_cv", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
+        .withColumn("_cn", l2_norm("_cv"))
+        .withColumn("vector_score", vector_score)
+        .drop("_cv", "_cn")
     )
 
 
@@ -58,25 +90,22 @@ def _history_boosts(df: DataFrame, refs: list[str], kws: list[str]) -> DataFrame
     """SearchHistoryService.cs:155-171: x1.8 when the document id matches
     a mined reference, else x1.3 on keyword overlap — applied to the
     ``score`` column."""
-    if not refs and not kws:
-        return df
-    ref_hit = F.lit(False)
-    for r in refs:
-        # match on the filename stem: the reference compares document
-        # ids against mined FILE names both ways (ChatHistoryAnalyzer
-        # .cs:188-193); our document ids are urls, so the extension
-        # mined from prose ('.pdf') need not equal the url's ('.html')
-        stem = r.rsplit(".", 1)[0].lower()
-        ref_hit = ref_hit | F.lower("url").contains(stem)
-    kw_hit = F.lit(False)
-    for k in kws:
-        kw_hit = kw_hit | F.lower("content").contains(k.lower())
-    return df.withColumn(
-        "score",
-        F.when(ref_hit, F.col("score") * HISTORY_DOC_BOOST)
-        .when(kw_hit, F.col("score") * HISTORY_KW_BOOST)
-        .otherwise(F.col("score")),
+    # match on the filename stem: the reference compares document ids
+    # against mined FILE names both ways (ChatHistoryAnalyzer.cs:188-193);
+    # our document ids are urls, so the extension mined from prose
+    # ('.pdf') need not equal the url's ('.html')
+    stems = str_array_sql(r.rsplit(".", 1)[0].lower() for r in refs)
+    kws_sql = str_array_sql(k.lower() for k in kws)
+    # a factor, not a CASE over ``score``: one reference to ``score``
+    # lets the optimizer fold the re-score and the boost into the
+    # projection of the top-k above them (x1.0 is exact)
+    boost = F.expr(
+        f"CASE WHEN exists({stems}, s -> contains(lower(url), s))"
+        f" THEN {HISTORY_DOC_BOOST!r}D"
+        f" WHEN exists({kws_sql}, k -> contains(lower(content), k))"
+        f" THEN {HISTORY_KW_BOOST!r}D ELSE 1.0D END"
     )
+    return df.withColumn("score", F.col("score") * boost)
 
 
 def enhanced_history_leg(
@@ -96,16 +125,14 @@ def enhanced_history_leg(
     dedups per document."""
     refs = extract_document_references(history)
     kws = extract_history_keywords(history)
-    scored = _scored(chunks, query, embedding_dim, "hist")
-    top_chunks = scored.orderBy(
-        F.desc("vector_score"), F.asc("url"), F.asc("chunk_index")
+    top_chunks = _vector_scored(chunks, [query], embedding_dim).orderBy(
+        F.desc("vector_score"), "url", "chunk_index"
     ).limit(top)
-    rel = make_relevance_udf(query)
-    rescored = top_chunks.withColumn("score", rel("content", "vector_score"))
+    rescored = top_chunks.withColumn(
+        "score", relevance_score("content", "vector_score", query)
+    )
     boosted = _history_boosts(rescored, refs, kws)
-    return boosted.orderBy(
-        F.desc("score"), F.asc("url"), F.asc("chunk_index")
-    ).limit(out_k)
+    return boosted.orderBy(F.desc("score"), "url", "chunk_index").limit(out_k)
 
 
 _RESULT_COLS = ("url", "chunk_index", "content", "score", "vector_score")
@@ -117,27 +144,26 @@ def _merge_enhanced(
     """MergeSearchResults (SearchOrchestrationService.cs:450-483):
     enhanced results enter first (deduped to their best chunk per
     document), base documents not already included fill the remaining
-    seats in score order, and the final list is the top ``max_results``
-    by score.  The enhanced side is <= 15 rows, so the seat count is a
-    driver-side scalar, not a data-dependent collect."""
-    w_doc = Window.partitionBy("url").orderBy(F.desc("score"), F.asc("chunk_index"))
-    enh_best = (
-        enhanced.withColumn("_rn", F.row_number().over(w_doc))
-        .filter(F.col("_rn") == 1)
-        .select(*_RESULT_COLS)
+    seats in score order, and the list is the top ``max_results`` by
+    score (unordered; the context step orders it).  Both inputs are small
+    top-k results, so they share one partition, and the seat count falls
+    out of one top-k ordered enhanced-first: no action at planning time
+    and no exchange."""
+    both = (
+        enhanced.select(*_RESULT_COLS, F.lit(True).alias("_enh"))
+        .unionByName(base.select(*_RESULT_COLS, F.lit(False).alias("_enh")))
+        .coalesce(1)
     )
-    n_enh = enh_best.count()  # bounded by out_k=15
-    seats = max(0, max_results - n_enh)
-    base_kept = (
-        base.select(*_RESULT_COLS)
-        .join(enh_best.select("url"), "url", "left_anti")
-        .orderBy(F.desc("score"), F.asc("url"))
-        .limit(seats)
-    )
+    # per document: its best enhanced chunk, else its (single) base row
     return (
-        enh_best.unionByName(base_kept.select(*_RESULT_COLS))
-        .orderBy(F.desc("score"), F.asc("url"))
+        both.withColumn("_rn", F.expr(
+            "row_number() OVER (PARTITION BY url"
+            " ORDER BY _enh DESC, score DESC, chunk_index)"
+        ))
+        .filter("_rn = 1")
+        .orderBy(F.desc("_enh"), F.desc("score"), "url")
         .limit(max_results)
+        .select(*_RESULT_COLS)
     )
 
 
@@ -151,7 +177,8 @@ def search(
     use_expansion: bool = True,
 ) -> DataFrame:
     """Returns the top ``max_results`` best-chunk-per-document rows with
-    scores and an adjacent-context column."""
+    scores and an adjacent-context column.  Raises (when the plan runs)
+    if a chunk's embedding size is not ``embedding_dim``."""
     history = history or []
     follow_up = is_follow_up_question(query)
     min_score = MIN_SCORE_FOLLOW_UP if follow_up else MIN_SCORE
@@ -160,82 +187,61 @@ def search(
     oversample = 4 if len(query) < 20 else 3
     cand_k = min(max_results * oversample, 100)
 
-    legs = _scored(chunks, query, embedding_dim, "orig")
     expanded = expand_query(query) if use_expansion else query
-    if expanded != query:
-        legs = legs.unionByName(_scored(chunks, expanded, embedding_dim, "exp"))
-
-    # J3 merge-dedup: keep the higher-scoring leg per (url, chunk_index)
-    w_dedup = Window.partitionBy("url", "chunk_index").orderBy(
-        F.desc("vector_score"), F.asc("search_leg")
-    )
-    merged = (
-        legs.withColumn("_rn", F.row_number().over(w_dedup))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "search_leg")
-    )
-
-    # candidate cut before the (python) re-scorer — T5 oversampling.
+    # candidate cut before the re-scorer — T5 oversampling.
     # (url, chunk_index) tie-break: equal-scored chunks at the cut
     # boundary must survive deterministically across partitionings.
-    candidates = merged.orderBy(
-        F.desc("vector_score"), F.asc("url"), F.asc("chunk_index")
+    candidates = _vector_scored(chunks, [query, expanded], embedding_dim).orderBy(
+        F.desc("vector_score"), "url", "chunk_index"
     ).limit(cand_k)
 
     # F5 exact-port re-scoring 0.7*vector + 0.3*text.  The BASE leg is
     # boost-free — the reference applies history boosts only inside the
     # enhanced second leg (SearchOrchestrationService.cs:137-175 computes
     # plain relevance; boosts live in SearchHistoryService.cs:155-171).
-    rel = make_relevance_udf(query)
-    rescored = candidates.withColumn("score", rel("content", "vector_score"))
+    rescored = candidates.withColumn(
+        "score", relevance_score("content", "vector_score", query)
+    )
 
     # P6 threshold -> A4 best chunk per document -> W1 global top-k
-    filtered = rescored.filter(F.col("score") >= min_score)
-    w_doc = Window.partitionBy("url").orderBy(F.desc("score"), F.asc("chunk_index"))
     best = (
-        filtered.withColumn("_rn", F.row_number().over(w_doc))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .orderBy(F.desc("score"), F.asc("url"))
+        rescored.filter(F.col("score") >= min_score)
+        .withColumn("_rn", F.expr(
+            "row_number() OVER (PARTITION BY url ORDER BY score DESC, chunk_index)"
+        ))
+        .filter("_rn = 1")
+        .orderBy(F.desc("score"), "url")
         .limit(max_results)
-    ).select(*_RESULT_COLS)
+        .select(*_RESULT_COLS)
+    )
 
     # history-enhanced SECOND leg + reference merge (the r1 gap): the
     # enhanced leg re-searches with the same (expanded) query, boosts by
     # history evidence, and its results take priority over the base leg
     if history:
-        enh = enhanced_history_leg(
-            chunks, expanded if use_expansion else query, history,
-            embedding_dim,
-        )
+        enh = enhanced_history_leg(chunks, expanded, history, embedding_dim)
         best = _merge_enhanced(best, enh, max_results)
 
     # W2/J5 adjacent context: the +-k chunks around each hit, in order
-    # (ChatService.cs:324-419's context assembly as a range join)
-    ctx = chunks.select(
-        F.col("url").alias("c_url"),
-        F.col("chunk_index").alias("c_idx"),
-        F.col("content").alias("c_content"),
+    # (ChatService.cs:324-419's context assembly as a range join).  The
+    # <= max_results hits are broadcast; each matches at most 2k+1 rows,
+    # so a top-n over that many rows gathers the join into one partition
+    # (per-partition top-n first, so an uncached upstream still runs in
+    # parallel) and the grouping needs no exchange.
+    ctx = chunks.selectExpr("url AS c_url", "chunk_index AS c_idx",
+                            "content AS c_content")
+    joined = F.broadcast(best).join(ctx, F.expr(
+        f"c_url = url AND c_idx BETWEEN chunk_index - {adjacent}"
+        f" AND chunk_index + {adjacent}"
+    ))
+    return (
+        joined.orderBy("url", "chunk_index", "c_idx")
+        .limit(max(0, max_results * (2 * adjacent + 1)))
+        .groupBy(*_RESULT_COLS)
+        .agg(F.expr(
+            "concat_ws('\\n', transform(array_sort(collect_list("
+            "struct(c_idx, c_content))), s -> s.c_content)) AS context"
+        ))
+        .orderBy(F.desc("score"), "url")
+        .limit(max_results)
     )
-    with_ctx = (
-        best.join(
-            ctx,
-            (F.col("c_url") == best.url)
-            & F.col("c_idx").between(
-                best.chunk_index - adjacent, best.chunk_index + adjacent
-            ),
-        )
-        .groupBy("url", "chunk_index", "content", "score", "vector_score")
-        .agg(
-            F.concat_ws(
-                "\n",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("c_idx", "c_content"))
-                    ),
-                    lambda s: s.c_content,
-                ),
-            ).alias("context")
-        )
-    )
-    return with_ctx.orderBy(F.desc("score"), F.asc("url"))

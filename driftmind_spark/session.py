@@ -14,13 +14,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_master() -> str:
+    """``local[n]`` over the cores this process may run on;
+    ``SPARK_GRAFT_CPUS`` overrides n."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "driftmind-spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or default_master()
     if shuffle_partitions is None:
         # 2x the local core count; on a cluster pass this in explicitly.
         cores = master[master.find("[") + 1:master.find("]")] if "[" in master else "32"

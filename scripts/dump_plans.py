@@ -3,7 +3,10 @@
 
 Usage: python scripts/dump_plans.py <tag> [query ...]
 Writes plans/<tag>/<query>_<suffix>.txt (suffix from $PLAN_SUFFIX,
-default "before").  Not part of the bench contract; a measurement aid
+default "before").  Besides the driver queries, ``search`` dumps one
+request plan of ``operators.search.search`` (the driver's ``entry``):
+``python scripts/dump_plans.py search-ab search`` on two trees gives the
+request plans to diff.  Not part of the bench contract; a measurement aid
 for the optimization rounds (guide §1 / §7.2).
 """
 
@@ -16,7 +19,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def main() -> None:
@@ -28,8 +30,9 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
 
-    spark = get_spark(master=f"local[{CPUS}]", app_name="driftmind-plans")
-    qmap = entry_mod.queries()
+    spark = get_spark(app_name="driftmind-plans")
+    qmap = {**entry_mod.queries(),
+            "search": lambda spark, _sf_dir: entry_mod.entry(spark)}
     if not names:
         names = list(qmap)
     outdir = os.path.join(REPO, "plans", tag)

@@ -1,10 +1,18 @@
 """Search-orchestration pipeline (§3.2 rewrite) + expansion/reference
 kernels."""
 
+import uuid
+
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from driftmind_spark.functions.text import relevance_score
 from driftmind_spark.kernels.textproc import (
+    ALL_STOP_WORDS,
+    MULTI_LANGUAGE_SYNONYMS,
+    calculate_relevance_score,
     contains_any_keyword,
     document_referenced,
     expand_query,
@@ -137,3 +145,110 @@ def test_enhanced_second_leg_merge_matches_reference_loop(spark, chunks):
     exp_keys = [(r["url"], r["chunk_index"], round(r["score"], 6))
                 for r in expected]
     assert got_keys == exp_keys
+
+
+# ---- native relevance score vs the kernel ----------------------------------------
+
+_SPLIT_CHARS = " ,.!?:;-()[]\n\r"
+_VOCAB = sorted(
+    set(MULTI_LANGUAGE_SYNONYMS)
+    | {w for syns in MULTI_LANGUAGE_SYNONYMS.values() for w in syns}
+    | set(sorted(ALL_STOP_WORDS)[::8])
+    | {"db", "a", "ab", "DATABASE", "Datenbank", "databases", "xsetupx",
+       "İstanbul", "İİİ", "straße", "STRASSE", "ΣΑΣ", "ΟΔΟΣ", "σας"}
+)
+_token = st.one_of(
+    st.sampled_from(_VOCAB),
+    st.text(alphabet="abcsİßΣσςẞK'\\$%{}\t_", min_size=1, max_size=6),
+    # Latin, Latin-1, Latin Extended-A, Greek and Cyrillic letters
+    st.text(alphabet=st.characters(min_codepoint=0x41, max_codepoint=0x4FF,
+                                   categories=("Lu", "Ll", "Lt", "Mn")),
+            min_size=1, max_size=6),
+)
+_sep = st.sampled_from(list(_SPLIT_CHARS) + ["", "  ", "\t", "_", ".."])
+_text = st.lists(st.tuples(_token, _sep), max_size=10).map(
+    lambda parts: "".join(t + s for t, s in parts)
+)
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    query=_text,
+    rows=st.lists(
+        st.tuples(st.one_of(st.none(), st.just(""), _text),
+                  st.one_of(st.none(), st.floats(-1.0, 1.0))),
+        min_size=1, max_size=6,
+    ),
+)
+@example(query="İstanbul straße ΣΑΣ", rows=[("i̇stanbul STRASSE σας.", 0.5)])
+@example(query="database setup", rows=[("die datenbank, ein setup-lauf", 0.25),
+                                       ("sqlite (lokal)", None)])
+@example(query="the and or db", rows=[("the database", 0.42), (None, None)])
+@example(query="sqlite", rows=[("datenbank\r\nlokal", 0.1), ("xsqlitex", 0.3)])
+@example(query="", rows=[("", None)])
+def test_relevance_column_matches_kernel_exactly(spark, query, rows):
+    """``functions.text.relevance_score`` equals the pure kernel
+    ``calculate_relevance_score`` bit for bit: Unicode case folding,
+    every split character, stop words, short terms, synonyms in both
+    directions, None/empty content, queries without meaningful terms."""
+    df = spark.createDataFrame(
+        [(i, c, v) for i, (c, v) in enumerate(rows)],
+        "i int, content string, vs double",
+    )
+    got = dict(df.select("i", relevance_score("content", "vs", query)).collect())
+    for i, (c, v) in enumerate(rows):
+        assert got[i] == calculate_relevance_score(c or "", query, v), (c, v)
+
+
+# ---- plan shape, job count, misconfiguration ----------------------------------
+
+_HISTORY = ["Earlier we discussed doc-42.pdf about Acme Corp.",
+            "Acme Corp acquired Beta Systems."]
+
+
+@pytest.fixture(scope="module")
+def chunks_table(spark, chunks, tmp_path_factory):
+    """The chunks as a table read back from parquet, like a serving
+    index: no Python in its own lineage."""
+    path = str(tmp_path_factory.mktemp("search") / "chunks")
+    chunks.write.parquet(path)
+    table = spark.read.parquet(path).cache()
+    table.count()
+    return table
+
+
+def _jobs(spark, df) -> int:
+    sc = spark.sparkContext
+    group = f"search-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("history", [None, _HISTORY], ids=["single", "follow_up"])
+def test_search_plan_runs_no_python(spark, chunks_table, history):
+    df = search(chunks_table, "tell me more about Acme Corp database",
+                history=history, embedding_dim=64)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+@pytest.mark.parametrize("query,history,max_jobs", [
+    ("Acme Corp", None, 3),
+    ("Acme Corp database setup", None, 3),  # expands: two query vectors
+    ("tell me more about Acme Corp", _HISTORY, 5),
+], ids=["short", "synonym", "follow_up"])
+def test_search_job_count(spark, chunks_table, query, history, max_jobs):
+    df = search(chunks_table, query, max_results=10, history=history,
+                embedding_dim=64)
+    assert _jobs(spark, df) <= max_jobs
+
+
+def test_search_raises_on_embedding_dim_mismatch(spark, pages_dir):
+    pages = spark.read.parquet(f"{pages_dir}/pages.parquet").limit(20)
+    chunks32 = build_chunks(pages, embedding_dim=32)
+    with pytest.raises(Exception, match="embedding size 32 != embedding_dim 64"):
+        search(chunks32, "Acme Corp", embedding_dim=64).collect()

@@ -862,19 +862,33 @@ def test_hoisted_norm_cosine_bit_identical(spark):
         (3, [1.0, 2.0], [1.0, 2.0, 3.0]),           # size mismatch guard
         (4, [1e-8, 2e-8, 3e-8], [3e8, 2e8, 1e8]),   # extreme magnitudes
         (5, [0.1] * 64, [0.30000000000000004] * 64),  # fold-order sensitive
+        (6, [float("nan"), 1.0], [1.0, 1.0]),       # NaN norm -> NaN
+        (7, [float("inf"), 1.0], [1.0, 1.0]),       # inf / inf -> NaN
     ]
     df = spark.createDataFrame(rows, ["id", "a", "b"])
-    inline = df.select("id", cosine_sim(F.col("a"), F.col("b")).alias("c"))
+
+    def ref_norm(a):
+        return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
+
+    def ref_cosine(a, b):
+        # the same formula built node by node through the Column API
+        dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0),
+                          lambda acc, v: acc + v)
+        na, nb = ref_norm(a), ref_norm(b)
+        return F.when((F.size(a) != F.size(b)) | (na == 0.0) | (nb == 0.0),
+                      F.lit(0.0)).otherwise(dot / (na * nb))
+
+    inline = df.select("id", cosine_sim("a", "b").alias("c"))
     hoisted = (
-        df.withColumn("na", l2_norm(F.col("a")))
-        .withColumn("nb", l2_norm(F.col("b")))
-        .select(
-            "id",
-            cosine_sim_prenorm(
-                F.col("a"), F.col("b"), F.col("na"), F.col("nb")
-            ).alias("c"),
-        )
+        df.withColumn("na", l2_norm("a"))
+        .withColumn("nb", l2_norm("b"))
+        .select("id", cosine_sim_prenorm("a", "b", "na", "nb").alias("c"))
     )
-    got_i = {r["id"]: r["c"] for r in inline.collect()}
-    got_h = {r["id"]: r["c"] for r in hoisted.collect()}
-    assert got_i == got_h  # exact float equality, no tolerance
+    reference = df.select("id", ref_cosine(F.col("a"), F.col("b")).alias("c"))
+    # repr equality: exact, no tolerance, and NaN matches NaN (which
+    # float == would reject) while -0.0 stays distinct from 0.0
+    got_i = {r["id"]: repr(r["c"]) for r in inline.collect()}
+    got_h = {r["id"]: repr(r["c"]) for r in hoisted.collect()}
+    got_r = {r["id"]: repr(r["c"]) for r in reference.collect()}
+    assert got_i == got_h == got_r
+    assert got_i[6] == got_i[7] == "nan"
