@@ -48,16 +48,6 @@ def double_array_sql(values) -> str:
 
 
 # ---------------------------------------------------------------------------
-# F3 — cache normalization (EmbeddingService.cs:95-104), SQL-flavored:
-# trim + lower + collapse all runs of whitespace to single spaces.
-# ---------------------------------------------------------------------------
-
-
-def normalize_text(col: Column) -> Column:
-    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
-
-
-# ---------------------------------------------------------------------------
 # F4 — meaningful terms: split on the reference's punctuation set,
 # keep len>2, drop stop words (broadcast literal array), distinct + sort
 # (sorted so DataFrame and SQL engines agree on array order).
@@ -183,15 +173,6 @@ def cosine_sim_prenorm(a: str, b: str, na: str, nb: str) -> Column:
 
 def cosine_sim(a: str, b: str) -> Column:
     return cosine_sim_prenorm(a, b, l2_norm_sql(a), l2_norm_sql(b))
-
-
-# ---------------------------------------------------------------------------
-# F5 (blend part) — 0.7*vector + 0.3*text (RelevanceAnalyzer.cs:82)
-# ---------------------------------------------------------------------------
-
-
-def blend_score(vector_score: Column, text_relevance: Column) -> Column:
-    return vector_score * F.lit(0.7) + text_relevance * F.lit(0.3)
 
 
 # ---------------------------------------------------------------------------

@@ -2,8 +2,8 @@
 
 Every UDF here is the *slow path* by design policy (SURVEY.md §2.10): it
 exists only where built-in ``pyspark.sql.functions`` cannot express the
-reference's exact semantics (byte-parity extraction/chunking, MinHash,
-OpenIE).  No per-row Python UDFs anywhere (BASELINE.json input_hint).
+reference's exact semantics (byte-parity extraction/chunking, MinHash).
+No per-row Python UDFs anywhere (BASELINE.json input_hint).
 """
 
 from __future__ import annotations
@@ -11,34 +11,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    FloatType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, FloatType, LongType, StringType
 
 from ..kernels import hashing as hk
-from ..kernels.extract import extract_main_text
-from ..kernels.openie import extract_triples
-from ..kernels.textproc import (
-    chunk_text,
-    is_follow_up_question,
-    normalize_for_caching,
-    truncate_content,
-)
-
-# ---------------------------------------------------------------------------
-# Extraction (S4/S5): html binary -> boilerplate-stripped main text
-# ---------------------------------------------------------------------------
-
-
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_main_text)
+from ..kernels.textproc import chunk_text
 
 
 # ---------------------------------------------------------------------------
@@ -53,21 +29,6 @@ def make_chunk_udf(chunk_size: int = 300, overlap: int = 20):
         return text.map(lambda t: chunk_text(t, chunk_size, overlap))
 
     return chunk_udf
-
-
-chunk_text_udf = make_chunk_udf()
-
-
-# ---------------------------------------------------------------------------
-# Normalization for embed-dedupe (F3) — byte-parity variant of the column
-# expression in functions/text.py (used where the C# single-pass
-# double-space replace must hold exactly).
-# ---------------------------------------------------------------------------
-
-
-@pandas_udf(StringType())
-def normalize_for_caching_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: normalize_for_caching(t) if t is not None else None)
 
 
 # ---------------------------------------------------------------------------
@@ -93,38 +54,6 @@ def make_embed_udf(dim: int = 256):
         return pd.Series(list(mat[take]))
 
     return embed_udf
-
-
-embed_udf = make_embed_udf()
-
-
-# ---------------------------------------------------------------------------
-# OpenIE triples (K1): text -> array<struct<subj,pred,obj,conf>>
-# ---------------------------------------------------------------------------
-
-TRIPLE_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("subj", StringType()),
-            StructField("pred", StringType()),
-            StructField("obj", StringType()),
-            StructField("conf", FloatType()),
-        ]
-    )
-)
-
-
-@pandas_udf(TRIPLE_SCHEMA)
-def triples_udf(text: pd.Series, lang: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            [
-                {"subj": s, "pred": p, "obj": o, "conf": c}
-                for (s, p, o, c) in extract_triples(t, lg or "en")
-            ]
-            for t, lg in zip(text, lang)
-        ]
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -165,7 +94,7 @@ def make_minhash_sig_udf(num_perm: int = 128, shingle_k: int = 3, seed: int = 42
 
 
 # ---------------------------------------------------------------------------
-# SimHash (dedup family) + rolling fingerprint
+# SimHash (dedup family)
 # ---------------------------------------------------------------------------
 
 
@@ -175,20 +104,3 @@ def simhash_udf(text: pd.Series) -> pd.Series:
         lambda t: int(np.int64(np.uint64(hk.simhash64((t or "").lower().split()))))
     )
 
-
-@pandas_udf(LongType())
-def fingerprint_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: hk.rolling_fingerprint(t or ""))
-
-
-@pandas_udf(BooleanType())
-def follow_up_udf(query: pd.Series) -> pd.Series:
-    return query.map(is_follow_up_question)
-
-
-def make_truncate_udf(max_length: int = 150):
-    @pandas_udf(StringType())
-    def truncate_udf(content: pd.Series) -> pd.Series:
-        return content.map(lambda c: truncate_content(c, max_length))
-
-    return truncate_udf

@@ -32,10 +32,6 @@ _NET_WHITESPACE_STR = (
 _NET_WHITESPACE = frozenset(_NET_WHITESPACE_STR)
 
 
-def is_net_whitespace(ch: str) -> bool:
-    return ch in _NET_WHITESPACE
-
-
 def net_trim(s: str) -> str:
     """Port of .NET ``string.Trim()``: ``str.strip`` against the exact
     .NET whitespace set (C-level scan; the set-membership char loop this
@@ -604,8 +600,6 @@ MIME_TYPES: dict[str, str] = {
     ".csv": "text/csv",
     ".log": "text/plain",
 }
-
-TEXT_EXTENSIONS = (".txt", ".md", ".json", ".xml", ".csv", ".log")
 
 
 def get_extension(file_name: str) -> str:

@@ -128,8 +128,8 @@ def connected_components(
             stats["rounds"] = 0
             stats["mode"] = "driver_union_find"
         spark = vertices.sparkSession
-        # the label schema follows the VERTEX id type — dedup over media
-        # ids runs CC on strings, the KG path on int64 mention ids
+        # the label schema follows the VERTEX id type — dedup over string
+        # doc ids runs CC on strings, the KG path on int64 mention ids
         from pyspark.sql.types import StructField, StructType
 
         id_type = vertices.schema[id_col].dataType

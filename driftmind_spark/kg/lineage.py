@@ -27,6 +27,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import _path_exists
+
 LINEAGE_SCHEMA = (
     "run_id string, stage string, bucket int, row_count long, "
     "max_warc_ts timestamp, status string"
@@ -44,10 +46,9 @@ def lineage_path(out_dir: str) -> str:
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     path = lineage_path(out_dir)
-    try:
-        return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-    except Exception:
+    if not _path_exists(spark, path):
         return spark.createDataFrame([], LINEAGE_SCHEMA)
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
 
 
 def completed_buckets(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.udfs import extract_text_udf, make_embed_udf
+from ..functions.udfs import make_embed_udf
 
 MAX_PAGE_BYTES = 3 * 1024 * 1024  # appsettings.json:26 (3 MB upload cap)
 
@@ -37,18 +37,6 @@ def validated_pages(pages: DataFrame, langs: tuple[str, ...] | None = None) -> D
     if langs:
         out = out.filter(F.col("lang").isin(*langs))
     return out
-
-
-def extract_pages(pages: DataFrame, use_text_column: bool = False) -> DataFrame:
-    """S3-S5: boilerplate-stripped main text per url.
-
-    ``use_text_column=True`` trusts the pre-extracted ``text`` column (for
-    corpora that ship one); default recomputes from ``html`` via the
-    byte-parity kernel.
-    """
-    if use_text_column:
-        return pages.withColumn("extracted", F.col("text"))
-    return pages.withColumn("extracted", extract_text_udf("html"))
 
 
 def extract_text_table(pages: DataFrame) -> DataFrame:

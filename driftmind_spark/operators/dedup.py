@@ -59,16 +59,6 @@ def _word_ngrams_col(toks: F.Column, n: int) -> F.Column:
     return out
 
 
-def _shingles(text_col: F.Column, k: int = 5) -> F.Column:
-    """Distinct k-char shingles as an array column (JVM-side)."""
-    n = F.greatest(F.length(text_col) - F.lit(k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n), lambda i: F.substring(text_col, i, k)
-        )
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -758,8 +748,7 @@ def dedup_resolution(
     dictionary-sized pair lists, alternating large/small-star
     (Kiveris et al., SoCC'14) at crawl scale.  Composes with every pair
     family here (minhash_lsh_pairs_sql, simhash_near_dups,
-    ngram_jaccard_pairs, embedding_near_dups, exact_dedup via melt, and
-    the image/audio perceptual variants after a column rename).
+    ngram_jaccard_pairs, embedding_near_dups and exact_dedup via melt).
 
     Cluster sizes come from an aggregate + equi-join rather than a
     window (partial aggregation absorbs a giant boilerplate cluster

@@ -13,10 +13,6 @@ from pyspark.sql import functions as F
 
 from ..operators.chunking import validated_pages
 
-PAGES_DDL = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
-
 
 def read_pages(spark: SparkSession, path: str, validate: bool = True) -> DataFrame:
     df = spark.read.parquet(path)

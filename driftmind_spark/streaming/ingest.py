@@ -180,15 +180,6 @@ def _prune_versions(spark: SparkSession, base_dir: str, keep_from: int,
             fs.delete(st.getPath(), True)
 
 
-# Backward-compatible aliases (round-6 names; scripts may import them).
-def _latest_state_version(spark, state_dir, below):
-    return _latest_version(spark, state_dir, below=below)
-
-
-def _prune_state(spark, state_dir, keep_from):
-    _prune_versions(spark, state_dir, keep_from)
-
-
 def _prune_keep_last(spark: SparkSession, base_dir: str, keep: int = 2,
                      prefix: str = "snap_v=") -> None:
     """Delete all but the newest ``keep`` COMMITTED versions, plus any
@@ -412,7 +403,7 @@ def rebuild_kg_snapshot(
 
     Also callable directly after an ``availableNow`` run to fold a
     trailing-batch remainder into a final snapshot when the batch count
-    is not a multiple of ``kg_every`` (scripts/stream_ingest_bench.py).
+    is not a multiple of ``kg_every``.
     """
     from ..kg.graph import build_edges, build_nodes
 
@@ -940,7 +931,7 @@ def stream_ingest(
                 )
                 _write_batch_idempotent(tri, triples_dir, batch_id)
 
-            _prune_state(spark, state_dir, keep_from=batch_id - 1)
+            _prune_versions(spark, state_dir, keep_from=batch_id - 1)
 
             if kg_every is not None and (batch_id + 1) % kg_every == 0:
                 rebuild = (

@@ -127,45 +127,26 @@ def test_broadcast_hint_survives(spark, name):
     assert "Broadcast" in _plan(spark, name), f"{name}: broadcast lost"
 
 
-# ---- round 4: perceptual dedup plan shapes --------------------------------
+# ---- SimHash near-dup blocking plan shape ---------------------------------
 
-def _media_df(spark):
-    import numpy as np
+def test_simhash_pairs_plan_shape(spark):
+    """SimHash blocking over precomputed hashes: equi-join on block
+    values (never a cartesian pairwise compare), the hot-block cap as a
+    broadcast anti join, and no row-python."""
+    from driftmind_spark.operators.dedup import simhash_pairs_from_hashes
 
-    from tests.test_jpeg_codec import _encode_jpeg
-
-    rng = np.random.RandomState(5)
-    rows = [
-        (f"m{i}", bytearray(_encode_jpeg(
-            rng.randint(0, 256, size=(8, 8, 3)).astype(np.uint8))))
-        for i in range(4)
-    ]
-    return spark.createDataFrame(rows, "media_id string, blob binary")
-
-
-def test_image_near_dups_plan_shape(spark):
-    """Perceptual image dedup must inherit the SimHash blocking plan:
-    equi-join on block values (never a cartesian pairwise compare), the
-    hot-block cap as a broadcast anti join, and exactly the decode
-    crossings — no row-python."""
-    from driftmind_spark.operators.multimodal import image_near_dups
-
-    df = image_near_dups(_media_df(spark), max_hamming=6)
+    hashed = spark.createDataFrame(
+        [(1, 0x0F0F0F0F0F0F0F0F), (2, 0x0F0F0F0F0F0F0F0E),
+         (3, -0x0F0F0F0F0F0F0F10), (4, 0x123456789ABCDEF)],
+        "doc_id long, simhash long",
+    )
+    df = simhash_pairs_from_hashes(hashed, max_hamming=6)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan
     anti = [l for l in plan.splitlines() if "LeftAnti" in l]
     assert anti and any("Broadcast" in l for l in anti), "cap not broadcast-anti"
-
-
-def test_audio_near_dups_plan_shape(spark):
-    from driftmind_spark.operators.multimodal import audio_near_dups
-
-    df = audio_near_dups(_media_df(spark), max_hamming=6)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
 
 
 # ---- round 6: passage/chunk dedup + quality gate plan shapes ---------------
