@@ -1,7 +1,6 @@
 """JPEG decoder — pure python + numpy, no image library.
 
-Round 4: closes the JPEG leg of the multimodal pixel seam
-(operators/multimodal.py).  Scope: baseline sequential (SOF0/1) AND
+Scope: baseline sequential (SOF0/1) AND
 progressive (SOF2) huffman DCT JPEGs — together the web's JPEGs —
 with spectral selection, successive approximation (DC and AC
 first/refinement scans, EOB runs), interleaved and single-component
@@ -13,7 +12,8 @@ remaining seam, marked where the frame type is dispatched.
 
 No reference counterpart: the reference processes documents only
 (Services/FileProcessingService.cs:28-37 allowlists .txt/.md/.pdf/
-.docx); this is builder's-brief multimodal surface.
+.docx).  No pipeline stage calls it; only its tests
+(tests/test_jpeg_codec.py, tests/test_codec_fuzz.py) do.
 """
 
 from __future__ import annotations

@@ -2,15 +2,12 @@
 round-1 verdict): codec round-trips, the reference's dispatch + flatten
 semantics over real bytes, the image-only metadata fallback, and the
 mixed-format synth corpus parity contract — pure-kernel and through the
-Spark extract stage — and extraction over random and mutated bytes."""
+Spark extract stage."""
 
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from driftmind_spark.kernels import extract as ex
-from driftmind_spark.kernels.extract import extract_any, extract_text
 from driftmind_spark.kernels.fileformats import (
     parse_docx,
     parse_pdf,
@@ -127,46 +124,3 @@ def test_spark_extract_stage_handles_mixed_formats(spark, mixed_corpus):
     )
     assert joined.count() == 250
     assert joined.filter(F.col("got") != F.col("expected")).count() == 0
-
-
-# ---- extraction over hostile crawl bytes ------------------------------------
-
-@settings(max_examples=300, deadline=None)
-@given(
-    data=st.binary(min_size=0, max_size=400),
-    ext=st.sampled_from(["", ".html", ".txt", ".md", ".pdf", ".docx", ".bin"]),
-)
-def test_extract_any_never_crashes_on_random_bytes(data, ext):
-    """extract_any is the stage-0 kernel over 100 TB of crawl bytes: it
-    must return a string for ANY payload, never raise."""
-    out = extract_any(f"https://h.example/x{ext}", data)
-    assert isinstance(out, str)
-
-
-_PDF = render_pdf(["hello pdf world"], {"Title": "t"})
-_DOCX = render_docx(["hello docx world"], [])
-_HTML = (b"<html><head><title>t</title></head><body><nav>n</nav>"
-         b"<main><p>Real content sentence.</p></main>"
-         b"<footer>f</footer></body></html>")
-
-
-@settings(max_examples=300, deadline=None)
-@given(
-    kind=st.sampled_from(["pdf", "docx", "html"]),
-    pos=st.integers(min_value=0, max_value=10 ** 6),
-    val=st.integers(min_value=0, max_value=255),
-    trunc=st.integers(min_value=1, max_value=10 ** 6),
-)
-def test_extract_mutated_valid_files_never_crash(kind, pos, val, trunc):
-    blob, url = {
-        "pdf": (_PDF, "https://h.example/a.pdf"),
-        "docx": (_DOCX, "https://h.example/a.docx"),
-        "html": (_HTML, "https://h.example/a.html"),
-    }[kind]
-    b = bytearray(blob)
-    b[pos % len(b)] = val
-    data = bytes(b)[: max(1, trunc % (len(b) + 1))]
-    out = extract_any(url, data)
-    assert isinstance(out, str)
-    ok, text, err = extract_text(url, data)
-    assert isinstance(text, str) and isinstance(err, str)

@@ -259,18 +259,6 @@ def test_jpeg_sof2_flag_enforces_progressive_constraints():
         decode_jpeg_pixels(bytes(data))
 
 
-def test_jpeg_media_pipeline_dimensions_agree():
-    """The SOF scan in media_metadata and the full decoder must agree on
-    dimensions for the same bytes."""
-    from driftmind_spark.operators.multimodal import _jpeg_dimensions
-
-    rng = np.random.RandomState(53)
-    img = rng.randint(0, 256, size=(21, 34, 3)).astype(np.uint8)
-    data = _encode_jpeg(img)
-    assert _jpeg_dimensions(data) == (34, 21)
-    assert decode_jpeg_pixels(data).shape == (21, 34, 3)
-
-
 # ---- round 4b: PROGRESSIVE encoder (independent, spec figure G.7) ---------
 
 def _quantize_comps(rgb, sampling=(1, 1)):
