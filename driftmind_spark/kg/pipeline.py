@@ -9,11 +9,13 @@
                     └─> nodes (canonical map)     [stage: nodes,   global]
               └─> edges = triples ⨝ canonical map [stage: edges,   bucketed]
 
-Each bucketed stage writes ``partitionBy("bucket")`` with dynamic
-partition overwrite and commits per-bucket lineage (kg/lineage.py);
-re-running the same ``run_id`` skips committed buckets — kill the job
-between any two stages and the re-run completes with identical tables
-(tests/test_resumability.py).
+Each stage is one Spark write plus driver-side bookkeeping: bucketed
+stages write ``partitionBy("bucket")`` with dynamic partition overwrite,
+the write observes its own row counts, and the driver then commits the
+stage's lineage (kg/lineage.py).  Re-running the same ``run_id`` skips
+committed buckets and stages — kill the job between any two stages and
+the re-run completes with identical tables (the kill-and-resume tests in
+tests/test_kg.py).
 
 Skew (north_rule): Zipf head entities concentrate edges on few
 ``subj_canonical_id``s.  The edges table is therefore written partitioned
@@ -28,8 +30,9 @@ from __future__ import annotations
 
 import os
 import time
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.chunking import build_chunks, extract_text_table
@@ -42,11 +45,12 @@ class StageKill(RuntimeError):
     """Raised by the fail-injection hook (resumability tests)."""
 
 
-def _write_bucketed(df: DataFrame, path: str, pre_clustered: bool = False) -> None:
+def _write_bucketed(df: DataFrame, path: str, pre_clustered: bool = False,
+                    observe: Sequence[Column] = ()) -> dict:
     """Bucket-partitioned stage write through the shared TableIO layer
     (sources/tables.py): dynamic partition overwrite so resumed runs
     replace only their buckets, empty results keep a readable schema,
-    and the same call targets Iceberg when a catalog is configured.
+    and the write returns its observed ``rows`` plus ``observe``.
 
     ``pre_clustered``: stages that map 1:1 over the bucket-partitioned
     extracted table (chunks, triples) keep their input's physical bucket
@@ -57,25 +61,32 @@ def _write_bucketed(df: DataFrame, path: str, pre_clustered: bool = False) -> No
     output file per (task, bucket)."""
     from ..sources.tables import TableIO
 
-    TableIO(df.sparkSession).write(
+    return TableIO(df.sparkSession).write(
         df, path, partition_by=("bucket",), mode="overwrite_partitions",
-        pre_clustered=pre_clustered,
+        pre_clustered=pre_clustered, observe=observe,
     )
 
 
-def _not_done_pages(spark, pages, out_dir, run_id, stage, n_buckets):
-    done = ln.completed_buckets(spark, out_dir, run_id, stage)
-    with_bucket = pages.withColumn("bucket", ln.bucket_col("url", n_buckets))
-    return with_bucket.join(F.broadcast(done), "bucket", "left_anti")
-
-
-def _todo_buckets(todo: DataFrame) -> list[int]:
-    """The bucket ids this run will attempt — bounded by n_buckets (a
-    config constant, not data), so collecting it is driver-safe.  Used
-    for three things: the did-anything-survive check, static partition
-    pruning of the read-back (only touched partitions are re-read for
-    lineage counting), and the attempted-bucket lineage commit."""
-    return sorted(r[0] for r in todo.select("bucket").distinct().collect())
+def _run_bucketed(lineage: ln.Lineage, stage: str, n_buckets: int, pages,
+                  build, path: str, pre_clustered: bool = False) -> None:
+    """One bucketed stage: ``build`` maps the not-yet-committed buckets'
+    pages (with a ``bucket`` column) to the stage output, one write
+    stores it, and the buckets commit with the counts the write
+    observed.  The todo set is ``range(n_buckets)`` minus the committed
+    buckets, so deciding it costs no Spark job."""
+    buckets = sorted(set(range(n_buckets)) - lineage.completed_buckets(stage))
+    if not buckets:
+        return
+    todo = pages.withColumn("bucket", ln.bucket_col("url", n_buckets))
+    if len(buckets) < n_buckets:
+        todo = todo.filter(F.col("bucket").isin(buckets))
+    out = build(todo)
+    observed = _write_bucketed(
+        out, path, pre_clustered=pre_clustered,
+        observe=ln.bucket_metrics(
+            buckets, "warc_ts" if "warc_ts" in out.columns else None),
+    )
+    lineage.commit_buckets(stage, buckets, observed)
 
 
 def run(
@@ -156,23 +167,19 @@ def run(
     # bulk of the bytes at 100 TB — is read and boilerplate-stripped once.
     extracted_path = os.path.join(out_dir, "extracted")
     _desc("extract")
-    todo = _not_done_pages(spark, pages, out_dir, run_id, "extract", n_buckets)
-    buckets = _todo_buckets(todo)
-    if buckets:
-        extracted = (
-            (todo.select("url", "warc_ts", "lang", F.col("text"), "bucket")
-             if use_text_column else
-             extract_text_table(todo).withColumn(
-                 "bucket", ln.bucket_col("url", n_buckets)))
-        )
-        _write_bucketed(extracted, extracted_path)
-        written = spark.read.parquet(extracted_path).filter(
-            F.col("bucket").isin(buckets)
-        )
-        ln.commit_stage(spark, out_dir, run_id, "extract", written,
-                        attempted_buckets=buckets)
+    lineage = ln.Lineage(spark, out_dir, run_id)
+    _run_bucketed(
+        lineage, "extract", n_buckets, pages,
+        lambda todo: (
+            todo.select("url", "warc_ts", "lang", F.col("text"), "bucket")
+            if use_text_column else
+            extract_text_table(todo).withColumn(
+                "bucket", ln.bucket_col("url", n_buckets))
+        ),
+        extracted_path,
+    )
     extracted = spark.read.parquet(extracted_path)
-    metrics["extracted"] = ln.committed_row_count(spark, out_dir, run_id, "extract")
+    metrics["extracted"] = lineage.committed_row_count("extract")
     _mark("extract")
     if fail_after_stage == "extract":
         raise StageKill("injected failure after stage: extract")
@@ -187,7 +194,7 @@ def run(
         _desc("quality")
         quality_path = os.path.join(out_dir, "extracted_quality")
         qaudit_path = os.path.join(out_dir, "quality_audit")
-        if not ln.stage_marker_done(spark, out_dir, run_id, "quality"):
+        if not lineage.stage_marker_done("quality"):
             from ..operators.quality import quality_filter
 
             # The audit and kept writes are two actions over the same
@@ -206,26 +213,17 @@ def run(
                 "stop_ratio", "chars_per_token", "lang_guess",
                 "reject_reasons",
             )
-            _write_bucketed(audit, qaudit_path, pre_clustered=True)
+            n_dropped = _write_bucketed(audit, qaudit_path,
+                                        pre_clustered=True)["rows"]
             kept = judged.filter(F.col("keep")).select(*extracted.columns)
-            _write_bucketed(kept, quality_path, pre_clustered=True)
-            n_kept, n_dropped = (
-                spark.read.parquet(quality_path).count(),
-                spark.read.parquet(qaudit_path).count(),
-            )
-            # dropped first: the 'quality' row is the stage-done marker and
-            # must be the LAST commit (same ordering rule as nodes/dedup)
-            ln.commit_global_stage(
-                spark, out_dir, run_id, "quality_dropped", n_dropped
-            )
-            ln.commit_global_stage(spark, out_dir, run_id, "quality", n_kept)
+            n_kept = _write_bucketed(kept, quality_path,
+                                     pre_clustered=True)["rows"]
+            lineage.commit_global("quality", n_kept,
+                                  {"quality_dropped": n_dropped})
         extracted = spark.read.parquet(quality_path)
-        metrics["quality_kept"] = ln.committed_row_count(
-            spark, out_dir, run_id, "quality"
-        )
-        metrics["quality_dropped"] = ln.committed_row_count(
-            spark, out_dir, run_id, "quality_dropped"
-        )
+        metrics["quality_kept"] = lineage.committed_row_count("quality")
+        metrics["quality_dropped"] = lineage.committed_row_count(
+            "quality_dropped")
         _mark("quality")
         if fail_after_stage == "quality":
             raise StageKill("injected failure after stage: quality")
@@ -245,16 +243,14 @@ def run(
         _desc("dedup")
         dedup_path = os.path.join(out_dir, "extracted_dedup")
         audit_path = os.path.join(out_dir, "dedup_audit")
-        if ln.stage_marker_done(spark, out_dir, run_id, "dedup"):
+        if lineage.stage_marker_done("dedup"):
             # Mixed-signature-version resume guard (round-6 advice): the
             # committed tables' near-dup lineage came from the signature
             # construction recorded at commit time; comparing or
             # extending them under a bumped construction silently loses
             # recall, so fail loudly instead.  (Version history:
             # operators/dedup.py::MINHASH_SIG_VERSION.)
-            committed_v = ln.committed_row_count(
-                spark, out_dir, run_id, "dedup_sig_version"
-            )
+            committed_v = lineage.committed_row_count("dedup_sig_version")
             if committed_v != MINHASH_SIG_VERSION:
                 raise RuntimeError(
                     f"dedup tables under {out_dir} were committed with "
@@ -267,14 +263,14 @@ def run(
             from ..operators.dedup import corpus_dedup
 
             docs = extracted.select(F.col("url").alias("doc_id"), "text")
-            resolution = corpus_dedup(
-                docs, **(dedup_opts or {})
-            ).cache()  # audit write probes isEmpty then writes: one lineage
+            resolution = corpus_dedup(docs, **(dedup_opts or {}))
             clusters = resolution.filter(F.col("cluster_size") > 1).withColumn(
                 "bucket", ln.bucket_col("doc_id", n_buckets)
             )
-            _write_bucketed(clusters, audit_path)
-            resolution.unpersist()
+            n_dropped = _write_bucketed(
+                clusters, audit_path,
+                observe=[F.count_if(~F.col("is_keeper")).alias("dropped")],
+            )["dropped"]
             # non-keepers come from the durable audit table, not the live
             # lineage — the pairs/CC work is never recomputed past here
             non_keepers = (
@@ -283,36 +279,26 @@ def run(
                 .select(F.col("doc_id").alias("url"))
             )
             deduped = extracted.join(non_keepers, "url", "left_anti")
-            _write_bucketed(deduped, dedup_path)
-            n_kept, n_dropped = (
-                spark.read.parquet(dedup_path).count(),
-                spark.read.parquet(audit_path).filter(~F.col("is_keeper")).count(),
-            )
-            # dropped + sig-version first: the 'dedup' row is the
-            # stage-done marker and must be the LAST commit (same
-            # ordering rule as nodes)
-            ln.commit_global_stage(
-                spark, out_dir, run_id, "dedup_sig_version",
-                MINHASH_SIG_VERSION,
-            )
-            ln.commit_global_stage(spark, out_dir, run_id, "dedup_dropped", n_dropped)
-            ln.commit_global_stage(spark, out_dir, run_id, "dedup", n_kept)
+            n_kept = _write_bucketed(deduped, dedup_path)["rows"]
+            lineage.commit_global("dedup", n_kept, {
+                "dedup_sig_version": MINHASH_SIG_VERSION,
+                "dedup_dropped": n_dropped,
+            })
         extracted = spark.read.parquet(dedup_path)
-        metrics["dedup_kept"] = ln.committed_row_count(spark, out_dir, run_id, "dedup")
-        metrics["dedup_dropped"] = ln.committed_row_count(
-            spark, out_dir, run_id, "dedup_dropped"
-        )
+        metrics["dedup_kept"] = lineage.committed_row_count("dedup")
+        metrics["dedup_dropped"] = lineage.committed_row_count("dedup_dropped")
         _mark("dedup")
         if fail_after_stage == "dedup":
             raise StageKill("injected failure after stage: dedup")
 
     # ---- stage 1: chunks (bucketed, resumable) -----------------------------
     _desc("chunks")
-    todo = _not_done_pages(spark, extracted, out_dir, run_id, "chunks", n_buckets)
     chunks_path = os.path.join(out_dir, "chunks")
-    buckets = _todo_buckets(todo)
-    if buckets:
-        chunks = build_chunks(
+    # input is the bucket-partitioned extracted table mapped 1:1 -> rows
+    # arrive clustered; skip the write-side shuffle
+    _run_bucketed(
+        lineage, "chunks", n_buckets, extracted,
+        lambda todo: build_chunks(
             todo, chunk_size, overlap, embedding_dim,
             use_text_column=True,
         ).drop(
@@ -322,16 +308,10 @@ def run(
             # table ~30% (measured 1.4 GB -> 1.0 GB at 1M pages, wall
             # time unchanged; at 100 TB that is real storage).
             "norm_text"
-        ).withColumn("bucket", ln.bucket_col("url", n_buckets))
-        # input is the bucket-partitioned extracted table mapped 1:1 ->
-        # rows arrive clustered; skip the write-side shuffle
-        _write_bucketed(chunks, chunks_path, pre_clustered=True)
-        written = spark.read.parquet(chunks_path).filter(
-            F.col("bucket").isin(buckets)
-        )
-        ln.commit_stage(spark, out_dir, run_id, "chunks", written,
-                        attempted_buckets=buckets)
-    metrics["chunks"] = ln.committed_row_count(spark, out_dir, run_id, "chunks")
+        ).withColumn("bucket", ln.bucket_col("url", n_buckets)),
+        chunks_path, pre_clustered=True,
+    )
+    metrics["chunks"] = lineage.committed_row_count("chunks")
     _mark("chunks")
     if fail_after_stage == "chunks":
         raise StageKill("injected failure after stage: chunks")
@@ -345,7 +325,7 @@ def run(
         _desc("chunk_dedup")
         cdedup_path = os.path.join(out_dir, "chunks_dedup")
         cdaudit_path = os.path.join(out_dir, "chunk_dedup_audit")
-        if not ln.stage_marker_done(spark, out_dir, run_id, "chunk_dedup"):
+        if not lineage.stage_marker_done("chunk_dedup"):
             from ..operators.passages import chunk_dedup as _chunk_dedup
 
             chunks_all = spark.read.parquet(chunks_path)
@@ -361,48 +341,32 @@ def run(
                 "url", "chunk_index", "bucket", "fingerprint",
                 "n_occurrences", "keeper_doc", "keeper_idx",
             )
-            _write_bucketed(audit, cdaudit_path)
+            n_dropped = _write_bucketed(audit, cdaudit_path)["rows"]
             # the keeper join shuffled rows by fingerprint, so the kept
             # write re-clusters by bucket (no pre_clustered shortcut here)
             kept = res.filter(F.col("is_kept")).select(*chunks_all.columns)
-            _write_bucketed(kept, cdedup_path)
-            n_kept, n_dropped = (
-                spark.read.parquet(cdedup_path).count(),
-                spark.read.parquet(cdaudit_path).count(),
-            )
-            ln.commit_global_stage(
-                spark, out_dir, run_id, "chunk_dedup_dropped", n_dropped
-            )
-            ln.commit_global_stage(
-                spark, out_dir, run_id, "chunk_dedup", n_kept
-            )
-        metrics["chunk_dedup_kept"] = ln.committed_row_count(
-            spark, out_dir, run_id, "chunk_dedup"
-        )
-        metrics["chunk_dedup_dropped"] = ln.committed_row_count(
-            spark, out_dir, run_id, "chunk_dedup_dropped"
-        )
+            n_kept = _write_bucketed(kept, cdedup_path)["rows"]
+            lineage.commit_global("chunk_dedup", n_kept,
+                                  {"chunk_dedup_dropped": n_dropped})
+        metrics["chunk_dedup_kept"] = lineage.committed_row_count(
+            "chunk_dedup")
+        metrics["chunk_dedup_dropped"] = lineage.committed_row_count(
+            "chunk_dedup_dropped")
         _mark("chunk_dedup")
         if fail_after_stage == "chunk_dedup":
             raise StageKill("injected failure after stage: chunk_dedup")
 
     # ---- stage 2: triples (bucketed, resumable) -----------------------------
     _desc("triples")
-    todo = _not_done_pages(spark, extracted, out_dir, run_id, "triples", n_buckets)
     triples_path = os.path.join(out_dir, "triples")
-    buckets = _todo_buckets(todo)
-    if buckets:
-        triples = extract_triples_df(todo, use_text_column=True).withColumn(
-            "bucket", ln.bucket_col("url", n_buckets)
-        )
-        _write_bucketed(triples, triples_path, pre_clustered=True)
-        written = spark.read.parquet(triples_path).filter(
-            F.col("bucket").isin(buckets)
-        )
-        ln.commit_stage(spark, out_dir, run_id, "triples", written,
-                        attempted_buckets=buckets)
+    _run_bucketed(
+        lineage, "triples", n_buckets, extracted,
+        lambda todo: extract_triples_df(todo, use_text_column=True).withColumn(
+            "bucket", ln.bucket_col("url", n_buckets)),
+        triples_path, pre_clustered=True,
+    )
     triples = spark.read.parquet(triples_path)
-    metrics["triples"] = ln.committed_row_count(spark, out_dir, run_id, "triples")
+    metrics["triples"] = lineage.committed_row_count("triples")
     _mark("triples")
     if fail_after_stage == "triples":
         raise StageKill("injected failure after stage: triples")
@@ -410,37 +374,27 @@ def run(
     # ---- stage 3: linking + canonicalization (global) -----------------------
     _desc("nodes")
     nodes_path = os.path.join(out_dir, "nodes")
-    if not ln.stage_marker_done(spark, out_dir, run_id, "nodes"):
+    if not lineage.stage_marker_done("nodes"):
         # dataflow lives in kg/graph.py — shared with the streaming
         # rebuild (streaming/ingest.py), so the two paths cannot drift
         nodes, caches = build_nodes(
             triples, aliases, embedding_dim=embedding_dim,
             n_buckets=n_buckets,
         )
-        _write_bucketed(nodes, nodes_path)
-        # one read-back pass computes BOTH lineage metrics (row count and
-        # distinct components); committing the component count as its own
-        # global stage row means resumed runs report it from lineage
-        # metadata instead of re-scanning the nodes table
-        n_nodes, n_components = (
-            spark.read.parquet(nodes_path)
-            .agg(F.count("*"), F.count_distinct("canonical_id"))
-            .collect()[0]
-        )
-        # components first: the 'nodes' row is the stage-done marker, so
-        # it must be the LAST commit (a crash between the two appends must
-        # not leave a done-marked stage with missing metadata)
-        ln.commit_global_stage(
-            spark, out_dir, run_id, "nodes_components", n_components
-        )
-        ln.commit_global_stage(spark, out_dir, run_id, "nodes", n_nodes)
+        # the canonical id is its component's minimum member id
+        # (kg/cc.py), so each component has exactly one row whose
+        # mention is its own canonical: counting those counts components
+        observed = _write_bucketed(nodes, nodes_path, observe=[
+            F.count_if(F.col("mention_id") == F.col("canonical_id"))
+            .alias("components"),
+        ])
+        lineage.commit_global("nodes", observed["rows"],
+                              {"nodes_components": observed["components"]})
         for c in caches:
             c.unpersist()
     nodes = spark.read.parquet(nodes_path)
-    metrics["nodes"] = ln.committed_row_count(spark, out_dir, run_id, "nodes")
-    metrics["components"] = ln.committed_row_count(
-        spark, out_dir, run_id, "nodes_components"
-    )
+    metrics["nodes"] = lineage.committed_row_count("nodes")
+    metrics["components"] = lineage.committed_row_count("nodes_components")
     _mark("nodes")
     if fail_after_stage == "nodes":
         raise StageKill("injected failure after stage: nodes")
@@ -448,16 +402,12 @@ def run(
     # ---- stage 4: edges = triples resolved to canonical ids (bucketed) ------
     _desc("edges")
     edges_path = os.path.join(out_dir, "edges")
-    if not ln.stage_marker_done(spark, out_dir, run_id, "edges"):
+    if not lineage.stage_marker_done("edges"):
         # broadcast canonical-map join + salted bucket key — shared core
         # in kg/graph.py (see there for the skew-mitigation rationale)
         edges = build_edges(triples, nodes, salt=salt, n_buckets=n_buckets)
-        _write_bucketed(edges, edges_path)
-        ln.commit_global_stage(
-            spark, out_dir, run_id, "edges",
-            spark.read.parquet(edges_path).count(),
-        )
-    metrics["edges"] = ln.committed_row_count(spark, out_dir, run_id, "edges")
+        lineage.commit_global("edges", _write_bucketed(edges, edges_path)["rows"])
+    metrics["edges"] = lineage.committed_row_count("edges")
     _mark("edges")
     spark.sparkContext.setJobDescription(None)
     return metrics

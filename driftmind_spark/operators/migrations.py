@@ -109,16 +109,16 @@ def _run_migration(
     transform,
 ) -> dict:
     """Shared job shell: skip when the lineage marker exists (idempotent
-    re-run), else read -> transform -> write -> commit marker."""
-    if ln.stage_marker_done(spark, out_path, run_id, stage):
+    re-run), else read -> transform -> write -> commit marker, with the
+    row count the write observed."""
+    lineage = ln.Lineage(spark, out_path, run_id)
+    if lineage.stage_marker_done(stage):
         return {"stage": stage, "skipped": True,
-                "rows": ln.committed_row_count(spark, out_path, run_id, stage)}
+                "rows": lineage.committed_row_count(stage)}
     io = TableIO(spark)
     migrated = transform(io.read(table_path))
-    target = f"{out_path}/{stage}"
-    io.write(migrated, target)
-    n = io.read(target).count()
-    ln.commit_global_stage(spark, out_path, run_id, stage, n)
+    n = io.write(migrated, f"{out_path}/{stage}")["rows"]
+    lineage.commit_global(stage, n)
     return {"stage": stage, "skipped": False, "rows": n}
 
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .textstats import lang_cols, quality_cols
+from .textstats import lang_cols, quality_cols, token_stats
 
 # Thresholds tuned for boilerplate-stripped web text (the synth corpus
 # and C4-ish real pages): kept deliberately permissive — the stage
@@ -97,8 +97,8 @@ def quality_filter(
     # on a NULL feature is NULL, the F.when(cond, reason) falls through
     # to NULL, and a null-text doc sails through the gate as "clean"
     text = F.coalesce(F.col(text_col), F.lit(""))
-    feats = quality_cols(text)
-    lang = lang_cols(text)
+    feats = quality_cols(text, "_stats")
+    lang = lang_cols("_stats")
 
     checks: list[tuple[str, F.Column]] = [
         ("too_short", feats["n_chars"] < F.lit(p["min_chars"])),
@@ -125,12 +125,18 @@ def quality_filter(
         ]),
         lambda x: x.isNotNull(),
     )
-    return docs.select(
+    # each page is tokenized once, into the `_stats` column every feature
+    # reads (textstats.token_stats).  It comes from an explode of a
+    # one-element array because a filter on `keep` is never pushed below
+    # a generator; pushed through a plain projection it would inline the
+    # tokenization into its condition once per feature that reads it
+    stats = F.explode(F.array(token_stats(text))).alias("_stats")
+    return docs.select("*", stats).select(
         "*",
         *[c.alias(n) for n, c in feats.items()],
         lang["lang_guess"].alias("lang_guess"),
         reasons.alias("reject_reasons"),
-    ).withColumn("keep", F.size("reject_reasons") == 0)
+    ).drop("_stats").withColumn("keep", F.size("reject_reasons") == 0)
 
 
 def quality_reason_counts(filtered: DataFrame) -> DataFrame:

@@ -34,6 +34,9 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 ALL_MARKERS: tuple[str, ...] = tuple(
     w for ms in LANG_MARKERS.values() for w in ms
 )
+if len(set(ALL_MARKERS)) != len(ALL_MARKERS):
+    # quality_cols counts stopwords as the sum of the per-language hits
+    raise ValueError("LANG_MARKERS lists must be disjoint")
 
 _WORD_SPLIT = r"\s+"
 
@@ -47,18 +50,37 @@ def _text(text_col) -> F.Column:
     return F.col(text_col) if isinstance(text_col, str) else text_col
 
 
-def lang_cols(text_col="text") -> dict[str, F.Column]:
-    """The language-ID expressions as named columns — shared between the
-    :func:`lang_id` frame (oracle-checked) and the quality pipeline
-    stage (operators/quality.py), so both gate on the SAME guess.
-    Accepts a column name or a Column expression.
+def token_stats(text_col="text") -> F.Column:
+    """One tokenization of the text -> ``struct(n_tokens, <lang>_hits...)``
+    — the token-level inputs of :func:`lang_cols` and
+    :func:`quality_cols`.  Project it as a column first and pass that
+    column on: the token array is bound once through a one-element-array
+    ``transform`` (a let-binding), because Spark shares no common
+    subexpression across higher-order functions, and an inlined
+    ``split(lower(text))`` in every feature re-tokenizes the page once
+    per use."""
+    toks = F.filter(
+        F.split(F.lower(_text(text_col)), _WORD_SPLIT), lambda t: t != ""
+    )
+    return F.transform(F.array(toks), lambda t: F.struct(
+        F.size(t).alias("n_tokens"),
+        *[_marker_hits(t, ms).alias(f"{lang}_hits")
+          for lang, ms in LANG_MARKERS.items()],
+    ))[0]
+
+
+def lang_cols(stats) -> dict[str, F.Column]:
+    """The language-ID expressions as named columns, over a projected
+    :func:`token_stats` column — shared between the :func:`lang_id`
+    frame (oracle-checked) and the quality pipeline stage
+    (operators/quality.py), so both gate on the SAME guess.
 
     Guess rule (round-7, generalizes the old pairwise de/en compare):
     the language with the UNIQUE strict maximum of marker hits; any tie
     — including all-zero — is ``unknown``.  For two languages this is
     exactly the old ``de > en`` / ``en > de`` rule."""
-    toks = F.split(F.lower(_text(text_col)), _WORD_SPLIT)
-    hits = {lang: _marker_hits(toks, ms) for lang, ms in LANG_MARKERS.items()}
+    stats = _text(stats)
+    hits = {lang: stats[f"{lang}_hits"] for lang in LANG_MARKERS}
     mx = F.greatest(*hits.values())
     n_at_max = sum(
         (h == mx).cast("int") for h in hits.values()
@@ -77,25 +99,26 @@ def lang_cols(text_col="text") -> dict[str, F.Column]:
 def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """N-gram-free stopword-marker language ID
     (de/en/fr/es/pt/unknown)."""
-    cols = lang_cols(text_col)
-    return docs.select(
+    cols = lang_cols("_stats")
+    return docs.select("doc_id", token_stats(text_col).alias("_stats")).select(
         "doc_id", *[c.alias(n) for n, c in cols.items()]
     )
 
 
-def quality_cols(text_col="text") -> dict[str, F.Column]:
-    """The quality-feature expressions as named columns — shared between
-    the :func:`quality_scores` frame (oracle-checked) and the quality
+def quality_cols(text_col, stats) -> dict[str, F.Column]:
+    """The quality-feature expressions as named columns, over the text
+    and its projected :func:`token_stats` column — shared between the
+    :func:`quality_scores` frame (oracle-checked) and the quality
     pipeline stage, so the stage's thresholds apply to the SAME
-    features the observability query reports.  Accepts a column name or
-    a Column expression."""
-    text = _text(text_col)
+    features the observability query reports.  Accepts column names or
+    Column expressions."""
+    text, stats = _text(text_col), _text(stats)
     n_chars = F.length(text)
-    toks = F.filter(F.split(F.lower(text), _WORD_SPLIT), lambda t: t != "")
-    n_tokens = F.size(toks)
+    n_tokens = stats["n_tokens"]
     n_punct = n_chars - F.length(F.regexp_replace(text, r"[.!?,;:]", ""))
-    stop_lit = F.array(*[F.lit(m) for m in ALL_MARKERS])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_lit, t)))
+    # the per-language marker lists are disjoint, so the stopword count
+    # over ALL_MARKERS is the sum of the per-language hits
+    n_stop = sum(stats[f"{lang}_hits"] for lang in LANG_MARKERS)
     return {
         "n_chars": n_chars,
         "n_tokens": n_tokens,
@@ -110,10 +133,10 @@ def quality_cols(text_col="text") -> dict[str, F.Column]:
 def quality_scores(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / punctuation / stopword / uppercase ratios — the standard
     web-text quality features (C4/Gopher-style heuristics)."""
-    cols = quality_cols(text_col)
+    cols = quality_cols(text_col, "_stats")
     return docs.select(
-        "doc_id", *[c.alias(n) for n, c in cols.items()]
-    )
+        "doc_id", text_col, token_stats(text_col).alias("_stats")
+    ).select("doc_id", *[c.alias(n) for n, c in cols.items()])
 
 
 def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:

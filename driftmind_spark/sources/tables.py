@@ -16,9 +16,11 @@ COLUMNS``.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -66,20 +68,36 @@ class TableIO:
         partition_by: tuple[str, ...] = (),
         mode: str = "overwrite",
         pre_clustered: bool = False,
-    ) -> None:
-        """``pre_clustered=True``: the caller guarantees rows are already
+        observe: Sequence[Column] = (),
+    ) -> dict:
+        """Write ``df`` and return what the write observed:
+        ``rows`` (the row count) plus one value per named aggregate in
+        ``observe``, all from a ``DataFrame.observe`` on the write itself,
+        so nothing is read back.
+
+        ``mode='overwrite_partitions'`` replaces only the partitions the
+        rows land in (dynamic partition overwrite, set on the write, not
+        taken from the session).  A zero-row result is settled after the
+        write from the observed count: a new target, or a full
+        ``overwrite``, gets an empty file carrying the schema (a
+        partitioned write of zero rows writes no file at all); an
+        existing target is left as it was, because replacing zero
+        partitions changes nothing.
+
+        ``pre_clustered=True``: the caller guarantees rows are already
         physically grouped by the partition key (e.g. a narrow map over a
         table partitioned by the same key), so the defensive
         ``repartition`` shuffle is skipped — each task then holds rows of
         only the bucket(s) its input split came from and still writes one
         file per (task, bucket).  Wrongly claiming it does not corrupt
-        data, it only fans out files (tasks × partitions)."""
+        data, it only fans out files (tasks × partitions).
+
+        The Iceberg backend returns no metrics (its commit snapshot
+        records them)."""
         backend = self._resolved()
         if backend == "iceberg":
             writer = df.writeTo(target)
             if partition_by:
-                from pyspark.sql import functions as F
-
                 writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
             if mode == "overwrite":
                 writer.createOrReplace()
@@ -87,23 +105,9 @@ class TableIO:
                 writer.overwritePartitions()
             else:
                 writer.append()
-            return
-        if partition_by and df.isEmpty():
-            # Zero-row partitioned writes drop the parquet schema footer
-            # entirely, and a mode('overwrite') fallback would truncate
-            # the WHOLE table, not just the touched partitions (a resumed
-            # run whose todo buckets yield zero rows must never wipe the
-            # buckets committed before it).  So: replacing zero partitions
-            # of an existing table is a no-op; only when nothing exists
-            # yet do we write an unpartitioned empty footer so readers
-            # still see the schema.
-            if mode in ("overwrite_partitions", "append") and _path_exists(
-                self.spark, target
-            ):
-                return
-            df.write.mode("overwrite").parquet(target)
-            return
-        if partition_by:
+            return {}
+        existed = bool(partition_by) and _path_exists(self.spark, target)
+        if partition_by and not pre_clustered:
             # cluster rows by the partition key first: otherwise every
             # task fans out across every partition directory and the job
             # commits tasks x partitions tiny files (measured 230s -> 36s
@@ -114,16 +118,27 @@ class TableIO:
             # directories, so each task already holds one bucket and the
             # repartition would shuffle the whole stage output for
             # nothing).
-            if not pre_clustered:
-                df = df.repartition(*[df[c] for c in partition_by])
-            w = df.write.mode(
-                "overwrite" if mode == "overwrite_partitions" else mode
-            ).partitionBy(*partition_by)
-        else:
-            w = df.write.mode(
-                "overwrite" if mode == "overwrite_partitions" else mode
-            )
+            df = df.repartition(*[df[c] for c in partition_by])
+        # observed after the repartition, i.e. in the write's result
+        # stage, where each task's metric update is applied exactly once
+        obs = Observation()
+        observed = df.observe(obs, F.count(F.lit(1)).alias("rows"), *observe)
+        w = observed.write.mode(
+            "overwrite" if mode == "overwrite_partitions" else mode
+        )
+        if mode == "overwrite_partitions":
+            w = w.option("partitionOverwriteMode", "dynamic")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
         w.parquet(target)
+        metrics = obs.get
+        if partition_by and metrics["rows"] == 0 and (
+            mode == "overwrite" or not existed
+        ):
+            self.spark.createDataFrame([], df.schema).write.mode(
+                "overwrite"
+            ).parquet(target)
+        return metrics
 
     def read(self, target: str, merge_schema: bool = False) -> DataFrame:
         if self._resolved() == "iceberg":

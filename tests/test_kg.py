@@ -185,6 +185,16 @@ def test_pipeline_metrics(pipeline_out):
     assert m["components"] <= m["nodes"]
 
 
+def test_observed_component_count(spark, pipeline_out):
+    """The component count the nodes write observes (rows whose mention
+    is its own canonical id) equals the distinct canonical ids."""
+    out, m = pipeline_out
+    nodes = spark.read.parquet(f"{out}/nodes")
+    assert m["components"] == nodes.select(
+        F.count_distinct("canonical_id")).first()[0]
+    assert m["nodes"] == nodes.count()
+
+
 def test_pipeline_pr_gate_spark(spark, pages_dir, pipeline_out):
     """North-rule gate: Spark-emitted triples vs planted truth, P/R >= 0.95."""
     out, _ = pipeline_out
@@ -713,3 +723,34 @@ def test_quality_filter_partial_collision_fails_loudly(spark):
     )
     with pytest.raises(ValueError, match="collide"):
         quality_filter(docs, langs=None)
+
+
+# ---- Spark job budget of one build ------------------------------------------
+
+# A fresh run(quality, dedup, chunk_dedup) over 200 pages with planted
+# junk and clones ran 211 Spark jobs when every stage read its output
+# back, probed isEmpty before each write and kept lineage as Spark
+# appends; with one observed write per table and driver-side lineage it
+# runs 76.
+MAX_BUILD_JOBS = 100
+
+
+def test_build_job_budget(spark, tmp_path_factory):
+    import uuid
+
+    from driftmind_spark.synth import write_corpus
+
+    corpus = str(tmp_path_factory.mktemp("budget_corpus"))
+    write_corpus(corpus, n=200, junk_rate=0.1, dup_rate=0.1)
+    out = str(tmp_path_factory.mktemp("budget_out"))
+    sc = spark.sparkContext
+    group = f"kg-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        m = run(spark, corpus, out, embedding_dim=32, n_buckets=8,
+                quality=True, dedup=True, chunk_dedup=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert m["quality_dropped"] > 0 and m["dedup_dropped"] > 0
+    assert jobs <= MAX_BUILD_JOBS, f"{jobs} Spark jobs for one build"

@@ -168,6 +168,24 @@ def test_quality_filter_plan_no_shuffle_no_python(spark):
     assert "FileScan" in plan
 
 
+def test_quality_filter_tokenizes_each_page_once(spark):
+    """The kept and rejected frames of the gate split each page's text
+    once: the `keep` filter pushed toward the scan must not re-inline the
+    tokenization into its condition (higher-order functions get no
+    common-subexpression elimination, so every copy is a re-split)."""
+    from driftmind_spark.operators.quality import quality_filter
+    from pyspark.sql import functions as F
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        F.col("doc_id").cast("string").alias("url"), "text"
+    )
+    judged = quality_filter(docs)
+    for frame in (judged.filter(F.col("keep")).select("url", "text"),
+                  judged.filter(~F.col("keep"))):
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("split(") == 1, plan.count("split(")
+
+
 def test_passage_dedup_plan_partial_agg_no_python(spark):
     """Keeper election aggregates partially map-side (a passage repeated
     10^9 times reaches its reducer as one row per map task), stays

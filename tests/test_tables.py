@@ -79,16 +79,108 @@ def test_zero_output_bucket_committed_once(spark, tmp_path):
     written = spark.createDataFrame(
         [(0, "u1"), (0, "u2"), (2, "u3")], "bucket int, url string"
     )
-    ln.commit_stage(spark, out_dir, "r", "chunks", written,
-                    attempted_buckets=[0, 1, 2])
-    done = {r[0] for r in ln.completed_buckets(spark, out_dir, "r", "chunks").collect()}
+    # the counts a stage write observes over the buckets it attempted
+    observed = written.agg(
+        *ln.bucket_metrics([0, 1, 2], None)).first().asDict()
+    ln.Lineage(spark, out_dir, "r").commit_buckets("chunks", [0, 1, 2],
+                                                   observed)
+    lineage = ln.Lineage(spark, out_dir, "r")  # re-read from the files
+    done = lineage.completed_buckets("chunks")
     assert done == {0, 1, 2}  # bucket 1 committed with zero rows
     rows = {
         r["bucket"]: r["row_count"]
         for r in ln.read_lineage(spark, out_dir).collect()
     }
     assert rows == {0: 2, 1: 0, 2: 1}
-    assert ln.committed_row_count(spark, out_dir, "r", "chunks") == 3
+    assert lineage.committed_row_count("chunks") == 3
+
+
+def test_overwrite_partitions_keeps_buckets_under_static_session(
+        spark, io, tmp_path):
+    """overwrite_partitions must replace only the touched buckets even
+    when the session's partitionOverwriteMode is Spark's default
+    'static' (a caller's own session), for a non-empty and for an empty
+    write alike."""
+    target = str(tmp_path / "t6")
+    df = spark.range(40).withColumn("bucket", (F.col("id") % 4).cast("int"))
+    io.write(df, target, partition_by=("bucket",))
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        patch = spark.range(1000, 1005).withColumn("bucket", F.lit(0))
+        got = io.write(patch, target, partition_by=("bucket",),
+                       mode="overwrite_partitions")
+        assert got["rows"] == 5
+        back = io.read(target)
+        assert back.filter("bucket = 0").count() == 5
+        assert back.filter("bucket != 0").count() == 30
+        got = io.write(df.filter("id < 0"), target, partition_by=("bucket",),
+                       mode="overwrite_partitions")
+        assert got["rows"] == 0
+        assert io.read(target).count() == 35
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_write_observes_rows_and_extra_aggregates(spark, io, tmp_path):
+    """The write returns its row count and the caller's aggregates from
+    the write job itself, for partitioned and unpartitioned targets."""
+    df = spark.range(50).withColumn("bucket", (F.col("id") % 5).cast("int"))
+    got = io.write(df, str(tmp_path / "p"), partition_by=("bucket",),
+                   observe=[F.count_if(F.col("id") % 2 == 1).alias("odd"),
+                            F.max("id").alias("top")])
+    assert got == {"rows": 50, "odd": 25, "top": 49}
+    assert io.write(df.filter("id < 7"), str(tmp_path / "u"))["rows"] == 7
+    assert io.read(str(tmp_path / "u")).count() == 7
+
+
+def test_driver_lineage_reads_same_in_spark_and_pyarrow(spark, tmp_path):
+    """Driver-written commits sit next to a Spark-written (INT96
+    timestamp) lineage file and read as one table in Spark and in
+    pyarrow, with the same values."""
+    import datetime
+
+    import pyarrow.parquet as pq
+
+    from driftmind_spark.kg import lineage as ln
+
+    out_dir = str(tmp_path / "mixed")
+    ts = datetime.datetime(2024, 3, 1, 12, 30, 5, 123456)
+    spark.createDataFrame(
+        [("r", "extract", 0, 4, ts, "done")], ln.LINEAGE_SCHEMA
+    ).write.mode("append").parquet(ln.lineage_path(out_dir))
+    micros = int((ts - datetime.datetime(1970, 1, 1)).total_seconds()
+                 * 1_000_000)
+    lineage = ln.Lineage(spark, out_dir, "r")
+    lineage.commit_buckets("extract", [1, 2],
+                           {"rows_1": 3, "ts_1": micros,
+                            "rows_2": 0, "ts_2": None})
+    lineage.commit_global("nodes", 9, {"nodes_components": 5})
+    expected = {
+        ("extract", 0, 4, ts), ("extract", 1, 3, ts), ("extract", 2, 0, None),
+        ("nodes_components", -1, 5, None), ("nodes", -1, 9, None),
+    }
+    got_spark = {
+        (r["stage"], r["bucket"], r["row_count"], r["max_warc_ts"])
+        for r in ln.read_lineage(spark, out_dir).collect()
+    }
+    assert got_spark == expected
+    table = pq.read_table(ln.lineage_path(out_dir)).to_pylist()
+    got_arrow = {
+        (r["stage"], r["bucket"], r["row_count"],
+         None if r["max_warc_ts"] is None
+         else r["max_warc_ts"].to_pydatetime())
+        for r in table
+    }
+    assert got_arrow == expected
+    assert {r["run_id"] for r in table} == {"r"}
+    assert {r["status"] for r in table} == {"done"}
+    reread = ln.Lineage(spark, out_dir, "r")
+    assert reread.completed_buckets("extract") == {0, 1, 2}
+    assert reread.committed_row_count("extract") == 7
+    assert reread.stage_marker_done("nodes")
+    assert not reread.stage_marker_done("edges")
 
 
 def test_additive_schema_evolution(spark, io, tmp_path):
