@@ -98,15 +98,11 @@ def run(
     embedding_dim: int = 64,
     chunk_size: int = 300,
     overlap: int = 20,
-    use_text_column: bool = False,
     fail_after_stage: str | None = None,
     salt: int = 8,
     quality: bool = False,
-    quality_opts: dict | None = None,
     dedup: bool = False,
-    dedup_opts: dict | None = None,
     chunk_dedup: bool = False,
-    chunk_dedup_opts: dict | None = None,
 ) -> dict:
     """Execute (or resume) the full pipeline; returns stage metrics.
 
@@ -117,13 +113,14 @@ def run(
     Kept docs land in ``extracted_quality`` (bucketed; the filter is
     row-narrow so the write keeps the aligned shuffle-free path);
     rejected docs with their features and ``reject_reasons`` become the
-    ``quality_audit`` table.  ``quality_opts`` passes through to
-    ``quality_filter`` (min_chars/min_tokens/langs/...).
+    ``quality_audit`` table.  The gate runs ``quality_filter``'s default
+    thresholds.
 
     ``chunk_dedup=True`` adds passage-level dedup AFTER the chunks
-    stage (operators/passages.py — the Lee-et-al intra-document layer):
-    chunk rows whose normalized content repeats corpus-wide keep only
-    their first occurrence.  Kept rows land in ``chunks_dedup``;
+    stage (operators/passages.py::chunk_dedup — the Lee-et-al
+    intra-document layer, default thresholds): chunk rows whose
+    normalized content repeats corpus-wide keep only their first
+    occurrence.  Kept rows land in ``chunks_dedup``;
     dropped rows (narrow: ids + fingerprint + keeper) become
     ``chunk_dedup_audit``.  Chunk boundaries stay byte-exact — dedup
     only FILTERS rows, so the parity contract is untouched.
@@ -138,8 +135,19 @@ def run(
     ``extracted``, so chunks/triples keep their aligned 1:1 writes); the
     full cluster assignment for every clustered doc is kept as the
     ``dedup_audit`` table (the non-keeper frame IS the audit trail).
-    ``dedup_opts`` passes through to ``corpus_dedup``
-    (num_perm/bands/shingle_k/max_bucket_size/min_agreement)."""
+    ``corpus_dedup`` runs with its default signature and band
+    parameters.
+
+    Every Spark job the build runs, from the first read of the corpus
+    on, carries a ``dm:<run_id>:<stage>`` job description."""
+    def _desc(stage: str) -> None:
+        # Tag every job of this pipeline stage in the Spark UI / REST API
+        # (description survives into /api/v1/.../stages), so task-level
+        # skew metrics attribute to pipeline stages by name.
+        spark.sparkContext.setJobDescription(f"dm:{run_id}:{stage}")
+
+    # the corpus reads' schema-inference jobs belong to the extract stage
+    _desc("extract")
     pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
     aliases_path = os.path.join(corpus_dir, "aliases.parquet")
     aliases = None
@@ -154,28 +162,17 @@ def run(
         metrics[f"sec_{stage}"] = round(time.perf_counter() - _t0, 1)
         _t0 = time.perf_counter()
 
-    def _desc(stage: str) -> None:
-        # Tag every job of this pipeline stage in the Spark UI / REST API
-        # (description survives into /api/v1/.../stages), so task-level
-        # skew metrics attribute to pipeline stages by name.
-        spark.sparkContext.setJobDescription(f"dm:{run_id}:{stage}")
-
     # ---- stage 0: extract once (bucketed, resumable) ------------------------
     # The extracted-text table is the Spark analog of the reference's
     # extracted-text twin blob (BlobStorageService.cs:174-234); chunking
     # and triple extraction both consume it, so the html column — the
     # bulk of the bytes at 100 TB — is read and boilerplate-stripped once.
     extracted_path = os.path.join(out_dir, "extracted")
-    _desc("extract")
     lineage = ln.Lineage(spark, out_dir, run_id)
     _run_bucketed(
         lineage, "extract", n_buckets, pages,
-        lambda todo: (
-            todo.select("url", "warc_ts", "lang", F.col("text"), "bucket")
-            if use_text_column else
-            extract_text_table(todo).withColumn(
-                "bucket", ln.bucket_col("url", n_buckets))
-        ),
+        lambda todo: extract_text_table(todo).withColumn(
+            "bucket", ln.bucket_col("url", n_buckets)),
         extracted_path,
     )
     extracted = spark.read.parquet(extracted_path)
@@ -207,7 +204,7 @@ def run(
             # text-bearing cache is impossible by construction, while a
             # second columnar scan + whole-stage-codegen features is
             # cheap and embarrassingly parallel.
-            judged = quality_filter(extracted, **(quality_opts or {}))
+            judged = quality_filter(extracted)
             audit = judged.filter(~F.col("keep")).select(
                 "url", "bucket", "n_chars", "n_tokens", "punct_ratio",
                 "stop_ratio", "chars_per_token", "lang_guess",
@@ -263,7 +260,7 @@ def run(
             from ..operators.dedup import corpus_dedup
 
             docs = extracted.select(F.col("url").alias("doc_id"), "text")
-            resolution = corpus_dedup(docs, **(dedup_opts or {}))
+            resolution = corpus_dedup(docs)
             clusters = resolution.filter(F.col("cluster_size") > 1).withColumn(
                 "bucket", ln.bucket_col("doc_id", n_buckets)
             )
@@ -333,7 +330,7 @@ def run(
             # chunks parquet — deliberate, same rationale as the quality
             # stage: `res` carries chunk content + embeddings, and
             # caching that at corpus scale costs more than the re-scan
-            res = _chunk_dedup(chunks_all, **(chunk_dedup_opts or {}))
+            res = _chunk_dedup(chunks_all)
             # audit is NARROW (ids + fingerprint + keeper): the dropped
             # text is recoverable via the keeper row, so at 100 TB the
             # audit table costs ids, not content

@@ -1,13 +1,14 @@
-"""Passage/chunk-level deduplication — the intra-document layer of the
+"""Chunk-level deduplication — the intra-document layer of the
 training-data dedup stack (Lee et al., "Deduplicating Training Data
 Makes Language Models Better", ACL 2022; C4's repeated-span rule).
 
 ``corpus_dedup`` (operators/dedup.py) removes whole near-duplicate
-*documents*; this module removes *repeated passages inside
+*documents*; :func:`chunk_dedup` removes *repeated chunks inside
 otherwise-distinct documents* — boilerplate paragraphs, license blocks,
 navigation text that survives document-level dedup because the
-surrounding text differs.  No reference counterpart (DriftMind's closest
-analog is the embed-cache ``dropDuplicates(norm_text)``,
+surrounding text differs.  It is the pipeline's ``chunk_dedup`` stage
+(kg/pipeline.py).  No reference counterpart (DriftMind's closest analog
+is the embed-cache ``dropDuplicates(norm_text)``,
 Services/EmbeddingService.cs:33-58, which dedups embedding COMPUTE but
 never removes the repeated text from the corpus).
 
@@ -16,13 +17,12 @@ repeated *substrings* via a corpus-wide suffix array — inherently
 sequential/memory-resident and not expressible as a distributed
 dataflow.  The shape production Spark pipelines use instead (and what
 C4 shipped: exact dedup of three-sentence spans) is fingerprinting at a
-fixed granularity — paragraphs here, chunk rows in
-:func:`chunk_dedup` — which catches the boilerplate/license/nav mass
-with one hash-shuffle.
+fixed granularity — chunk rows here — which catches the
+boilerplate/license/nav mass with one hash-shuffle.
 
 Scale shape (100 TB): one shuffle groups fingerprints (count + min are
-partial-aggregated map-side, so a passage repeated 10^9 times arrives
-at its reducer as one row per map task, not 10^9 rows); the keeper
+partial-aggregated map-side, so a chunk repeated 10^9 times arrives at
+its reducer as one row per map task, not 10^9 rows); the keeper
 dictionary is filtered to REPEATED fingerprints only before joining
 back, and the join is an equi-join AQE can split on skew.  No text
 moves in the dictionary — only (fingerprint, keeper id, count).
@@ -33,320 +33,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = [
-    "passage_table",
-    "passage_dedup",
-    "apply_passage_dedup",
-    "passage_near_dedup",
-    "apply_passage_near_dedup",
-    "chunk_dedup",
-    "window_fingerprints",
-    "window_dedup",
-    "apply_window_dedup",
-]
-
-_PARA_SPLIT = r"\n{2,}"
-
 # Whitespace-normalized lowercase — the SHARED normalization (one
 # definition for the whole dedup family: exact_dedup, fingerprints,
-# passage/chunk fingerprints), imported rather than redefined so the
-# families can never drift apart.
-from .dedup import NORM as _norm  # noqa: E402
+# chunk fingerprints), imported rather than redefined so the families
+# can never drift apart.
+from .dedup import NORM as _norm
 
-
-def passage_table(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Explode documents into ordered passages (paragraph granularity:
-    blank-line split, matching the synthesizer's and the chunker's
-    paragraph model): ``(doc_id, passage_idx, passage, fingerprint)``
-    with ``fingerprint = md5(whitespace-normalized lowercase text)``.
-
-    All JVM-side (split/posexplode/md5 — whole-stage codegen); an empty
-    (or NULL — ``split(NULL)`` would posexplode to ZERO rows and the doc
-    would silently vanish from the audit frame) document yields exactly
-    one empty passage so no doc vanishes."""
-    paras = F.split(F.coalesce(F.col(text_col), F.lit("")), _PARA_SPLIT)
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(paras).alias("passage_idx", "passage"),
-    ).withColumn("fingerprint", F.md5(_norm(F.col("passage"))))
-
-
-def passage_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_chars: int = 50,
-    min_repeats: int = 2,
-) -> DataFrame:
-    """Resolve repeated passages across the corpus to a first-occurrence
-    keeper: ``(doc_id, passage_idx, passage, fingerprint, n_occurrences,
-    n_docs, keeper_doc_id, keeper_passage_idx, is_kept)``.
-
-    A passage is *eligible* when its normalized length is >=
-    ``min_chars`` (short passages — headings, "Introduction", single
-    common sentences — are legitimate repeated text, the Lee-et-al
-    50-token floor rescaled to chars); an eligible passage repeated >=
-    ``min_repeats`` times keeps only its first occurrence, where "first"
-    is the minimum ``(doc_id, passage_idx)`` pair — a total order, so
-    re-runs at any parallelism elect identical keepers (the same rule as
-    ``dedup_resolution``'s min-id keeper).  Ineligible or unrepeated
-    passages are always kept (``n_occurrences`` is reported for them
-    when known; keeper columns stay NULL).
-
-    ``filter(is_kept)`` is the deduplicated passage corpus; the full
-    frame is the audit trail (exactly the ``corpus_dedup`` contract one
-    level down)."""
-    p = passage_table(docs, id_col, text_col)
-    eligible = F.length(_norm(F.col("passage"))) >= min_chars
-    occ = (
-        p.filter(eligible)
-        .groupBy("fingerprint")
-        .agg(
-            F.min(F.struct("doc_id", "passage_idx")).alias("keeper"),
-            F.count("*").alias("n_occurrences"),
-            F.count_distinct("doc_id").alias("n_docs"),
-        )
-        # only REPEATED fingerprints enter the join dictionary — the
-        # unrepeated majority never shuffles a second time
-        .filter(F.col("n_occurrences") >= min_repeats)
-    )
-    j = p.join(occ, "fingerprint", "left")
-    first = (F.col("doc_id") == F.col("keeper.doc_id")) & (
-        F.col("passage_idx") == F.col("keeper.passage_idx")
-    )
-    return j.select(
-        "doc_id",
-        "passage_idx",
-        "passage",
-        "fingerprint",
-        "n_occurrences",
-        "n_docs",
-        F.col("keeper.doc_id").alias("keeper_doc_id"),
-        F.col("keeper.passage_idx").alias("keeper_passage_idx"),
-        (F.col("n_occurrences").isNull() | first).alias("is_kept"),
-    )
-
-
-def apply_passage_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_chars: int = 50,
-    min_repeats: int = 2,
-) -> DataFrame:
-    """Rebuild documents with repeated passages removed: ``(doc_id,
-    text)`` where ``text`` is the kept passages re-joined with the
-    paragraph separator.  Every input doc appears in the output — a doc
-    whose passages were ALL dropped comes back with empty text (callers
-    gate on length downstream; silently losing the row would corrupt
-    joins keyed on ``doc_id``).
-
-    The per-doc ``collect_list`` is bounded by document size (passages
-    of one doc), not corpus size — driver-safe and executor-safe."""
-    res = passage_dedup(docs, id_col, text_col, min_chars, min_repeats)
-    rebuilt = (
-        res.filter("is_kept")
-        .groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("passage_idx", "passage"))
-                    ),
-                    lambda s: s.passage,
-                ),
-                "\n\n",
-            ).alias("text")
-        )
-    )
-    ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return ids.join(rebuilt, "doc_id", "left").select(
-        "doc_id", F.coalesce("text", F.lit("")).alias("text")
-    )
-
-
-def _passage_pid(doc_col="doc_id", idx_col="passage_idx") -> F.Column:
-    """Sortable scalar passage id: ``doc_id + '#' + zero-padded idx`` —
-    the single-column id the doc-level dedup machinery
-    (minhash_lsh_verified_pairs / dedup_resolution) keys on.  min() over
-    it is a deterministic total order, so keeper election is stable at
-    any parallelism; for doc ids without characters below '#' (0x23 —
-    true for urls) it coincides with the (doc_id, passage_idx) tuple
-    order ``passage_dedup`` uses."""
-    return F.concat(
-        F.col(doc_col), F.lit("#"),
-        F.lpad(F.col(idx_col).cast("string"), 9, "0"),
-    )
-
-
-def passage_near_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_chars: int = 50,
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 5,
-    max_bucket_size: int | None = 256,
-    min_agreement: float = 0.8,
-    small_graph_threshold: int = 200_000,
-) -> DataFrame:
-    """FUZZY passage-level dedup — :func:`passage_dedup`'s exact
-    fingerprint plus MinHash near-dup verification on top, so REWORDED
-    boilerplate (a license paragraph with one word changed, a nav block
-    with the year bumped) collapses too.  Same output contract:
-    ``(doc_id, passage_idx, passage, fingerprint, n_occurrences, n_docs,
-    keeper_doc_id, keeper_passage_idx, is_kept)``; keeper = minimum
-    passage id of the merged (exact ∪ near) cluster, first occurrence
-    wins, ``filter(is_kept)`` is the deduplicated passage corpus.
-
-    Composition is ``corpus_dedup`` one granularity down (the round-5
-    over-merge lesson applies unchanged): EXACT md5 groups first, so
-    MinHash runs over unique normalized passages only; candidate pairs
-    from capped LSH banding are VERIFIED by signature agreement before
-    transitive closure (operators/dedup.py::minhash_lsh_verified_pairs);
-    ``dedup_resolution`` closes verified pairs at the representative
-    level; every passage maps through its exact group's rep to the final
-    keeper.
-
-    Parameter deltas vs the doc-level defaults, sized for ~60-word
-    passages: ``bands=16`` (4-row bands — one reworded word in a 60-word
-    passage costs ``shingle_k`` word-grams, J ≈ 0.84, and 8-row bands
-    would miss ~10% of those candidates) and ``min_agreement=0.8``
-    (accepts J ≳ 0.8 clusters; boilerplate *siblings* — different
-    passages sharing common sentences — sit near J ≈ 0.5, far below).
-    The shorter bands produce more raw candidates, which is safe
-    BECAUSE every candidate is agreement-verified before closure, and
-    bounded because hot buckets stay capped (``max_bucket_size``).
-
-    Scale shape: passage text shuffles once (the md5 group's map-side
-    partial agg); signatures/banding/verification touch unique passages
-    only; the keeper mapping joins narrow (pid, fingerprint) rows; the
-    pair graph is dictionary-sized (verified near-dups), so CC stays on
-    the driver union-find path below ``small_graph_threshold``.
-    Ineligible passages (< ``min_chars`` normalized — headings, short
-    common sentences) are always kept, as in :func:`passage_dedup`."""
-    from .dedup import dedup_resolution, minhash_lsh_verified_pairs
-
-    p = passage_table(docs, id_col, text_col)
-    eligible_cond = F.length(_norm(F.col("passage"))) >= min_chars
-    eligible = p.filter(eligible_cond).withColumn("pid", _passage_pid())
-
-    groups = eligible.groupBy("fingerprint").agg(
-        F.min(
-            F.struct(
-                F.col("pid"),
-                F.col("doc_id").alias("rep_doc_id"),
-                F.col("passage_idx").alias("rep_passage_idx"),
-            )
-        ).alias("rep"),
-        # min_by partial-aggregates map-side: the shuffle carries one
-        # candidate text per distinct fingerprint, not every copy
-        F.min_by("passage", "pid").alias("passage"),
-    )
-    reps = groups.select(F.col("rep.pid").alias("doc_id"), "passage")
-    pairs = minhash_lsh_verified_pairs(
-        reps, text_col="passage", num_perm=num_perm, bands=bands,
-        shingle_k=shingle_k, max_bucket_size=max_bucket_size,
-        min_agreement=min_agreement, portable=False,
-    )
-    rep_res = dedup_resolution(
-        reps.select("doc_id"), pairs,
-        small_graph_threshold=small_graph_threshold,
-    )
-
-    assigned = (
-        eligible.select("doc_id", "passage_idx", "passage", "fingerprint",
-                        "pid")
-        .join(
-            groups.select("fingerprint", F.col("rep.pid").alias("rep_pid")),
-            "fingerprint",
-        )
-        .join(
-            rep_res.select(
-                F.col("doc_id").alias("rep_pid"), "keeper_id"
-            ),
-            "rep_pid",
-        )
-    )
-    sizes = assigned.groupBy("keeper_id").agg(
-        F.count("*").alias("n_occurrences"),
-        F.count_distinct("doc_id").alias("n_docs"),
-    )
-    # keeper decode: the keeper pid is always some exact group's rep, so
-    # the (pid -> doc, idx) dictionary comes from `groups` — no string
-    # parsing of composite ids
-    decode = groups.select(
-        F.col("rep.pid").alias("keeper_id"),
-        F.col("rep.rep_doc_id").alias("keeper_doc_id"),
-        F.col("rep.rep_passage_idx").alias("keeper_passage_idx"),
-    )
-    clustered = F.col("n_occurrences") >= 2
-    out_eligible = (
-        assigned.join(sizes, "keeper_id")
-        .join(decode, "keeper_id")
-        .select(
-            "doc_id",
-            "passage_idx",
-            "passage",
-            "fingerprint",
-            F.when(clustered, F.col("n_occurrences")).alias("n_occurrences"),
-            F.when(clustered, F.col("n_docs")).alias("n_docs"),
-            F.when(clustered, F.col("keeper_doc_id")).alias("keeper_doc_id"),
-            F.when(clustered, F.col("keeper_passage_idx")).alias(
-                "keeper_passage_idx"
-            ),
-            (~clustered | (F.col("pid") == F.col("keeper_id"))).alias(
-                "is_kept"
-            ),
-        )
-    )
-    out_ineligible = p.filter(~eligible_cond).select(
-        "doc_id",
-        "passage_idx",
-        "passage",
-        "fingerprint",
-        F.lit(None).cast("long").alias("n_occurrences"),
-        F.lit(None).cast("long").alias("n_docs"),
-        F.lit(None).cast("string").alias("keeper_doc_id"),
-        F.lit(None).cast("int").alias("keeper_passage_idx"),
-        F.lit(True).alias("is_kept"),
-    )
-    return out_eligible.unionByName(out_ineligible)
-
-
-def apply_passage_near_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_chars: int = 50,
-    **near_opts,
-) -> DataFrame:
-    """Rebuild documents with near-repeated passages removed — the
-    :func:`apply_passage_dedup` contract over :func:`passage_near_dedup`
-    (every input doc appears; an all-dropped doc comes back empty)."""
-    res = passage_near_dedup(docs, id_col, text_col, min_chars, **near_opts)
-    rebuilt = (
-        res.filter("is_kept")
-        .groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("passage_idx", "passage"))
-                    ),
-                    lambda s: s.passage,
-                ),
-                "\n\n",
-            ).alias("text")
-        )
-    )
-    ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return ids.join(rebuilt, "doc_id", "left").select(
-        "doc_id", F.coalesce("text", F.lit("")).alias("text")
-    )
+__all__ = ["chunk_dedup"]
 
 
 def chunk_dedup(
@@ -357,10 +50,12 @@ def chunk_dedup(
     min_chars: int = 50,
     min_repeats: int = 2,
 ) -> DataFrame:
-    """The same first-occurrence keeper election over an already-chunked
-    table (the pipeline's chunks stage output): input columns pass
-    through, plus ``(fingerprint, n_occurrences, keeper_doc, keeper_idx,
-    is_kept)``.  ``filter(is_kept)`` is the deduplicated chunks table —
+    """First-occurrence keeper election over an already-chunked table
+    (the pipeline's chunks stage output): a chunk whose normalized
+    content (at least ``min_chars`` long) occurs ``min_repeats`` or more
+    times corpus-wide is kept only at its minimum ``(doc, idx)``
+    occurrence.  Input columns pass through, plus ``(fingerprint,
+    n_occurrences, keeper_doc, keeper_idx, is_kept)``.  ``filter(is_kept)`` is the deduplicated chunks table —
     what the pipeline's optional chunk-dedup stage writes.
 
     Operating on chunk rows (rather than re-splitting text) keeps the
@@ -401,161 +96,4 @@ def chunk_dedup(
         F.col("keeper.doc").alias("keeper_doc"),
         F.col("keeper.idx").alias("keeper_idx"),
         (F.col("n_occurrences").isNull() | first).alias("is_kept"),
-    )
-
-
-def window_fingerprints(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window_tokens: int = 50,
-    stride: int | None = None,
-    keep_text: bool = False,
-) -> DataFrame:
-    """Fixed-k token-window fingerprints — the Lee-et-al granularity for
-    repeated-substring detection when paragraph boundaries are absent or
-    unreliable (flattened PDFs, OCR, minified text): ``(doc_id, win_idx,
-    start_token, n_window_tokens, fingerprint)``.
-
-    Tokens are whitespace tokens of the lowercased text; windows start
-    every ``stride`` tokens (default = ``window_tokens`` → disjoint
-    spans, the C4 shape; a smaller stride catches repeats that straddle
-    a span boundary at proportionally more rows).  A doc shorter than
-    one window yields a single window of all its tokens, so every
-    non-empty doc fingerprints.
-
-    HOF-lambda hazard note: the token array is materialized as a column
-    BEFORE the start positions explode — slicing inside a
-    ``transform`` lambda would re-evaluate the split per element.
-    """
-    stride = stride or window_tokens
-    # NULL folds to '' (family-wide rule): a null-text doc yields zero
-    # windows rather than a null-propagation surprise downstream
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"),
-        lambda t: t != "",
-    )
-    with_toks = docs.select(
-        F.col(id_col).alias("doc_id"), toks.alias("toks")
-    )
-    n = F.size(F.col("toks"))
-    # starts run to the LAST token (not n - window): the tail span is
-    # emitted truncated so the windows cover every token — without it a
-    # disjoint rebuild would silently drop up to window-1 trailing tokens
-    starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(stride))
-    base = with_toks.select(
-        "doc_id",
-        "toks",
-        F.size(F.col("toks")).alias("n_doc_tokens"),
-        F.posexplode(starts).alias("win_idx", "start_token"),
-    )
-    win = F.slice(F.col("toks"), F.col("start_token") + 1, window_tokens)
-    cols = [
-        F.col("doc_id"),
-        F.col("win_idx"),
-        F.col("start_token"),
-        F.col("n_doc_tokens"),
-        F.size(win).alias("n_window_tokens"),
-        F.md5(F.concat_ws(" ", win)).alias("fingerprint"),
-    ]
-    if keep_text:
-        # only the rebuild path pays to move window text through the
-        # fingerprint join; detection-only callers keep rows narrow
-        cols.append(F.concat_ws(" ", win).alias("window_text"))
-    return base.select(*cols).filter(F.col("n_window_tokens") > 0)
-
-
-def window_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window_tokens: int = 50,
-    stride: int | None = None,
-    min_repeats: int = 2,
-    keep_text: bool = False,
-) -> DataFrame:
-    """First-occurrence keeper election over token-window fingerprints —
-    the same resolution contract as :func:`passage_dedup` one
-    granularity down: ``(doc_id, win_idx, start_token, fingerprint,
-    n_occurrences, n_docs, keeper_doc_id, keeper_win_idx, is_kept)``.
-
-    With the default disjoint stride, ``filter(is_kept)`` partitions
-    every doc's tokens into kept spans (rebuild with
-    :func:`apply_window_dedup`); with an overlapping stride the frame is
-    a detection/audit surface (windows share tokens, so dropping rows
-    is not a partition)."""
-    w = window_fingerprints(docs, id_col, text_col, window_tokens, stride,
-                            keep_text=keep_text)
-    # eligibility: FULL windows, plus the single whole-doc window of a
-    # short doc (an exact short-doc duplicate).  A truncated multi-window
-    # TAIL is never deduped — a few trailing tokens repeat accidentally
-    # far too often to treat as boilerplate evidence (the Lee-et-al
-    # minimum-span rule).
-    eligible = (F.col("n_window_tokens") == window_tokens) | (
-        F.col("n_doc_tokens") <= window_tokens
-    )
-    occ = (
-        w.filter(eligible)
-        .groupBy("fingerprint")
-        .agg(
-            F.min(F.struct("doc_id", "win_idx")).alias("keeper"),
-            F.count("*").alias("n_occurrences"),
-            F.count_distinct("doc_id").alias("n_docs"),
-        )
-        .filter(F.col("n_occurrences") >= min_repeats)
-    )
-    j = w.join(occ, "fingerprint", "left")
-    first = (F.col("doc_id") == F.col("keeper.doc_id")) & (
-        F.col("win_idx") == F.col("keeper.win_idx")
-    )
-    out = [
-        "doc_id",
-        "win_idx",
-        "start_token",
-        "fingerprint",
-        "n_occurrences",
-        "n_docs",
-        F.col("keeper.doc_id").alias("keeper_doc_id"),
-        F.col("keeper.win_idx").alias("keeper_win_idx"),
-        (F.col("n_occurrences").isNull() | first).alias("is_kept"),
-    ]
-    if keep_text:
-        out.insert(3, "window_text")
-    return j.select(*out)
-
-
-def apply_window_dedup(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window_tokens: int = 50,
-    min_repeats: int = 2,
-) -> DataFrame:
-    """Rebuild documents with repeated DISJOINT token spans removed:
-    ``(doc_id, text)`` where text is the kept windows' tokens re-joined
-    with single spaces (whitespace-normalized by construction — token
-    windows cannot preserve the original whitespace).  Disjoint stride
-    only: overlapping windows share tokens, so dropping rows would not
-    partition the doc.  Every input doc appears; a doc whose every span
-    was dropped comes back empty."""
-    res = window_dedup(docs, id_col, text_col, window_tokens, stride=None,
-                       min_repeats=min_repeats, keep_text=True)
-    rebuilt = (
-        res.filter("is_kept")
-        .groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("win_idx", "window_text"))
-                    ),
-                    lambda s: s.window_text,
-                ),
-                " ",
-            ).alias("text")
-        )
-    )
-    ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    return ids.join(rebuilt, "doc_id", "left").select(
-        "doc_id", F.coalesce("text", F.lit("")).alias("text")
     )

@@ -2,36 +2,33 @@
 -> triples -> (periodic) nodes/edges in ONE streaming pipeline — the
 streaming mirror of the batch pipeline's full stage order
 (kg/pipeline.py: quality, dedup, chunks, triples, nodes, edges).
+:func:`stream_ingest` is the package's one streaming entry point.
 
-Why not chain ``stream_near_dups`` directly in front of ``stream_chunks``
-in a single query: Structured Streaming does not support another
-operator AFTER ``applyInPandasWithState`` (arbitrary stateful ops must
-be terminal), and the gate's verdicts are per-band while "kept" is a
-per-url ALL-bands decision — a second stateful aggregation.  The
-supported composition shape is ``foreachBatch``: per micro-batch we run
-the SAME ``_fold_bucket`` state machine the stateful operator runs, with
-the representative state persisted as a BATCH-ID-VERSIONED parquet table
-instead of the state store.
+Why ``foreachBatch`` and not a chain of streaming operators: Structured
+Streaming does not support another operator AFTER
+``applyInPandasWithState`` (arbitrary stateful ops must be terminal),
+and the gate's verdicts are per-band while "kept" is a per-url
+ALL-bands decision — a second stateful aggregation.  Per micro-batch we
+run the per-bucket ``_fold_bucket`` state machine (streaming/stateful.py)
+as a cogroup, with the representative state persisted as a
+BATCH-ID-VERSIONED parquet table instead of the state store.
 
-Exactly-once across retries (the property the state store gives the
-single-operator gate) is preserved by versioning: batch N reads the
-newest state version < N and (re)writes version N.  foreachBatch
+Exactly-once across retries is preserved by versioning: batch N reads
+the newest state version < N and (re)writes version N.  foreachBatch
 batch_ids are stable across retries, and the fold is deterministic given
 (base state, batch rows), so a retried batch rewrites byte-identical
-state and output partitions — the same dynamic-partition-overwrite
-recipe as ``stream_chunks``.  Old versions are pruned to the last two
-(N's retry only ever needs N-1).
+state and output partitions through the dynamic-partition-overwrite
+sink (stream.py::_write_batch_idempotent).  Old versions are pruned to
+the last two (N's retry only ever needs N-1).
 
 Scale shape: state is (band_idx, band_hash, url, sig[num_perm],
 rep_order) — bounded by ``max_reps`` per bucket and TTL-evicted by event
-time, exactly like the state-store variant; the per-batch work is one
-cogroup shuffle on (band_idx, band_hash) plus the chunks/triples kernels
-over kept rows only.  The periodic nodes/edges rebuild is the documented
-"batch linking stages run periodically over the growing triples table"
-pattern (stream.py::stream_triples) executed in-line: O(total distinct
-surfaces) per rebuild, so cadence (``kg_every``) trades snapshot
-freshness against rebuild cost — at crawl scale run it every N batches,
-not every batch.
+time; the per-batch work is one cogroup shuffle on (band_idx, band_hash)
+plus the chunks/triples kernels over kept rows only.  The periodic
+nodes/edges rebuild runs the batch linking stages over the growing
+triples table in-line: O(total distinct surfaces) per rebuild, so
+cadence (``kg_every``) trades snapshot freshness against rebuild cost —
+at crawl scale run it every N batches, not every batch.
 """
 
 from __future__ import annotations
@@ -45,18 +42,11 @@ from pyspark.storagelevel import StorageLevel
 from .stateful import _fold_bucket, sig_banded
 from .stream import _write_batch_idempotent
 
-# Versions of the two signature constructions persisted in the rep
-# state: ``wordgram`` stamps operators/dedup.py's Spark-SQL
-# construction version, ``kernel`` the numpy kernel's — each carries
-# its own constant.  Signatures from different versions OR different
-# constructions are mutually incomparable — agreement between a v1 rep
-# and a v2 arrival is noise, so a resume across a bump must fail loudly
-# instead of silently losing recall.
+# The numpy kernel's construction version, persisted in the rep state.
+# Signatures from different versions are mutually incomparable —
+# agreement between a v1 rep and a v2 arrival is noise, so a resume
+# across a bump must fail loudly instead of silently losing recall.
 from ..kernels.hashing import MINHASH_KERNEL_VERSION
-from ..operators.dedup import MINHASH_SIG_VERSION
-
-_SIG_VERSIONS = {"kernel": MINHASH_KERNEL_VERSION,
-                 "wordgram": MINHASH_SIG_VERSION}
 
 STATE_SCHEMA = (
     "band_idx int, band_hash bigint, url string, warc_ts timestamp, "
@@ -85,16 +75,16 @@ def _gate_cogroup_fn(min_slots: int, max_reps: int):
         rep_ts = dict(zip(reps_pdf["url"], reps_pdf["warc_ts"]))
         rows = [(u, t, list(s)) for u, t, s in
                 zip(rows_pdf["url"], rows_pdf["warc_ts"], rows_pdf["sig"])]
-        # one global event order per batch (the stateful operator's rule)
+        # one global event order per batch (near_dup_flags_batch's rule)
         rows.sort(key=lambda r: (r[1], r[0]))
         row_ts: dict = {}
         for u, t, _ in rows:
             # first-wins: a rep's timestamp is the event that elected it
             row_ts.setdefault(u, t)
-        # bucket activity clock = the stateful gate's `latest`: refreshed
-        # by EVERY arriving row (including duplicates), so an actively
-        # matching bucket never TTL-expires — eviction keys on this, not
-        # on each rep's election time
+        # bucket activity clock: refreshed by EVERY arriving row
+        # (including duplicates), so an actively matching bucket never
+        # TTL-expires — eviction keys on this, not on each rep's
+        # election time
         latest = max(
             [t for t in reps_pdf["bucket_latest"] if pd.notna(t)]
             + [t for _, t, _ in rows],
@@ -643,9 +633,7 @@ def stream_ingest(
     ttl_seconds: int = 7 * 24 * 3600,
     chunk_size: int = 300,
     overlap: int = 20,
-    signatures: str = "kernel",
     quality: bool = False,
-    quality_opts: dict | None = None,
     triples: bool = False,
     kg_every: int | None = None,
     kg_incremental: bool = False,
@@ -668,24 +656,13 @@ def stream_ingest(
     collapse to one row before the gate; conflicting texts under one
     event identity are undefined, as everywhere in this package.
 
-    ``signatures`` picks the MinHash construction: ``"kernel"``
-    (default — the per-row numpy char-shingle UDF, the same
-    construction as the single-operator stateful gate) or
-    ``"wordgram"`` (the batch dedup stage's JVM-side word-gram path —
-    legal here because foreachBatch bodies may aggregate, but measured
-    SLOWER and lower-recall at THIS gate's default parameters:
-    word-gram Jaccard of a near-clone sits far below its char-shingle
-    Jaccard, so 8-row bands miss ~half the candidates, and on
-    template-heavy corpora shared word-gram minima produce hot band
-    buckets that serialize the cogrouped fold — see the measured A/B in
-    BENCH/BASELINE.md.  A wordgram gate needs co-tuned params, e.g.
-    ``bands=16, min_agreement=0.8`` — the passage_near_dedup rule one
-    granularity up).  The construction and its parameters are stamped
-    into the persisted state; a resume under a different construction
-    fails loudly.
+    Signatures are the per-row numpy char-shingle MinHash kernel
+    (kernels/hashing).  The construction, its version and its
+    parameters are stamped into the persisted state; a resume under a
+    different construction or parameters fails loudly.
 
     ``quality=True`` prepends the batch pipeline's quality gate
-    (operators/quality.py, same thresholds via ``quality_opts``):
+    (operators/quality.py, the same default thresholds):
     rejected pages land in ``{out_dir}/quality_audit`` (batch_id
     partitioned, idempotent) and never reach the dedup gate or
     chunking — the streaming ingest then mirrors the batch stage order
@@ -695,7 +672,7 @@ def stream_ingest(
     ``triples=True`` extends the kept set through OpenIE triple
     extraction (``{out_dir}/triples``, batch_id partitioned, idempotent,
     same bucket column as the batch triples table), and ``kg_every=k``
-    additionally rebuilds the nodes/edges tables every k-th batch from
+    (k >= 1, checked before the query starts) additionally rebuilds the nodes/edges tables every k-th batch from
     the FULL accumulated triples table — the batch pipeline's linking /
     CC / canonicalization stages (shared dataflow: kg/graph.py) run
     in-line via :func:`rebuild_kg_snapshot`, writing PAIRED versioned
@@ -722,10 +699,11 @@ def stream_ingest(
 
     if kg_every is not None and not triples:
         raise ValueError("kg_every requires triples=True")
+    if kg_every is not None and kg_every < 1:
+        raise ValueError(f"kg_every must be >= 1, got {kg_every}")
     min_slots = int(-(-min_agreement * num_perm // 1))
-    # Everything that makes two signatures comparable: the construction
-    # (wordgram vs kernel — different hash families entirely), its
-    # version constant, AND the construction parameters.  num_perm
+    # Everything that makes two signatures comparable: the construction,
+    # its version constant, AND the construction parameters.  num_perm
     # changes the signature length (zip-truncated agreement can never
     # reach min_slots), bands/shingle_k change band_hash keys and
     # signature content — parameter drift across a resume is exactly as
@@ -734,14 +712,8 @@ def stream_ingest(
     # self-review).  min_agreement is NOT stamped: it is a comparison
     # threshold, not part of the signature construction — retuning it
     # across a restart is legitimate.
-    if signatures not in _SIG_VERSIONS:
-        # same descriptive error sig_banded raises — but raised HERE at
-        # stream setup, not as a bare KeyError (round-7 advice)
-        raise ValueError(
-            f"signatures must be 'wordgram' or 'kernel', got {signatures!r}"
-        )
-    sig_version = _SIG_VERSIONS[signatures]
-    sig_params = (f"construction={signatures};num_perm={num_perm};"
+    sig_version = MINHASH_KERNEL_VERSION
+    sig_params = (f"construction=kernel;num_perm={num_perm};"
                   f"bands={bands};shingle_k={shingle_k}")
     # The persisted-state compatibility probe only needs to run on the
     # FIRST batch that loads state after a (re)start: every state
@@ -801,7 +773,7 @@ def stream_ingest(
             from ..operators.quality import quality_filter
 
             in_cols = raw.columns
-            cached = quality_filter(raw, **(quality_opts or {})).observe(
+            cached = quality_filter(raw).observe(
                 obs, F.max("warc_ts").alias("horizon")
             ).persist(StorageLevel.MEMORY_AND_DISK)
             # lazy definitions — written/consumed after the horizon agg
@@ -829,7 +801,7 @@ def stream_ingest(
             batch_df = gated
             banded = sig_banded(
                 batch_df.select("url", "warc_ts", "text"),
-                num_perm, bands, shingle_k, signatures=signatures,
+                num_perm, bands, shingle_k,
             )
             base_v = _latest_version(spark, state_dir, below=batch_id)
             if base_v is None:
@@ -884,11 +856,10 @@ def stream_ingest(
             )
             _write_batch_idempotent(flags, flags_dir, batch_id)
 
-            # event-time TTL on the persisted reps (state stays bounded even
+            # event-time TTL on the persisted reps (state stays bounded
             # without the state store's timeout machinery).  Eviction keys on
             # the BUCKET's activity clock — a bucket still catching dups
-            # keeps its reps alive, exactly like the stateful gate's
-            # setTimeoutTimestamp(latest + ttl)
+            # keeps its reps alive
             new_state = folded.filter(F.col("kind") == "rep").select(
                 "band_idx", "band_hash", "url", "warc_ts", "sig", "rep_order",
                 "bucket_latest",

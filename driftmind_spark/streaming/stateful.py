@@ -1,128 +1,41 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``
-(SURVEY.md §2.9 / task brief: the escape hatch for semantics the
-built-in streaming operators cannot express).
+"""The streaming near-duplicate gate's signature banding and per-bucket
+fold, shared by the composed ingest (streaming/ingest.py::stream_ingest)
+and its batch reference :func:`near_dup_flags_batch`.
 
-``stream_new_versions`` — the incremental re-crawl gate: a page row is
-emitted iff its ``warc_ts`` is STRICTLY newer than the newest version
-ever seen for that url, and carries a monotonically increasing
-``version`` number.  No built-in gets this:
-
-- ``dropDuplicates(WithinWatermark)`` dedups on equality — it cannot
-  compare ordering against persistent per-key state, and it cannot
-  number versions;
-- ``flatMapGroupsWithState`` is JVM-only; this is the Arrow-batched
-  Python equivalent with explicit per-group state (latest_ts, version).
-
-State is bounded two ways (crawl-scale requirement): the stream is
-watermarked, and each url's state carries an EVENT-TIME TIMEOUT at
-``watermark + ttl`` past its newest version — a url not re-crawled
-within the horizon has its state evicted (a later re-appearance starts
-again at version 1; the trade-off is documented and bounded, unlike
-unbounded url state).
-
-Batch analog for tests/backfills: :func:`new_versions_batch` computes
-the same (url, warc_ts, version) assignment over a static DataFrame.
+A page's MinHash signature is cut into ``bands`` slices; each slice
+hashes to a band bucket key.  Per bucket, :func:`_fold_bucket` runs an
+ordered state machine over arriving rows against the bucket's
+representative signatures: a row that agrees with a representative on
+enough slots is a near-dup, otherwise it becomes a representative while
+the bucket has room.  ``stream_ingest`` runs the fold per micro-batch
+with the representatives persisted between batches;
+``near_dup_flags_batch`` runs the SAME fold over a static frame in one
+pass, so the two must agree row for row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-OUT_SCHEMA = "url string, warc_ts timestamp, lang string, version int"
-STATE_SCHEMA = "latest long, version int"
-
-
-def _gate_fn(ttl_seconds: int):
-    """Per-url state function: emit strictly-newer rows with version
-    numbers; state = (latest_ts_epoch_us, version)."""
-
-    def fn(key, pdf_iter, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (url,) = key
-        latest_us, version = state.get if state.exists else (-1, 0)
-        out = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values("warc_ts")
-            for ts, lang in zip(pdf["warc_ts"], pdf["lang"]):
-                ts_us = int(pd.Timestamp(ts).value // 1000)
-                if ts_us > latest_us:
-                    latest_us = ts_us
-                    version += 1
-                    out.append((url, ts, lang, version))
-        state.update((latest_us, version))
-        if latest_us >= 0:
-            # event-time TTL: evict when the watermark passes newest+ttl
-            state.setTimeoutTimestamp(latest_us // 1000 + ttl_seconds * 1000)
-        if out:
-            yield pd.DataFrame(out, columns=["url", "warc_ts", "lang", "version"])
-
-    return fn
-
-
-def stream_new_versions(
-    pages_stream: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    watermark: str = "1 hour",
-    ttl_seconds: int = 7 * 24 * 3600,
-):
-    """pages stream -> only strictly-newer page versions, numbered."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gated = (
-        pages_stream.select("url", "warc_ts", "lang")
-        .withWatermark("warc_ts", watermark)
-        .groupBy("url")
-        .applyInPandasWithState(
-            _gate_fn(ttl_seconds),
-            outputStructType=OUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    return (
-        gated.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def new_versions_batch(pages: DataFrame) -> DataFrame:
-    """Batch analog (differential oracle for the stateful operator):
-    distinct (url, warc_ts) ordered by time -> version numbers."""
-    w = Window.partitionBy("url").orderBy("warc_ts")
-    return (
-        pages.select("url", "warc_ts", "lang")
-        .dropDuplicates(["url", "warc_ts"])
-        .withColumn("version", F.row_number().over(w).cast("int"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Streaming near-duplicate gate (round 5): incremental MinHash-LSH dedup.
-# ---------------------------------------------------------------------------
 
 DUP_OUT_SCHEMA = (
     "url string, warc_ts timestamp, band_idx int, dup_of string, "
     "agreement int, saturated boolean"
 )
-DUP_STATE_SCHEMA = "reps binary, latest long"
 
 
-def _band_sig(with_sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
-    """(url, warc_ts, sig) -> one row per band with the band's key hash:
-    band keys derived JVM-side from signature slices (shared by every
-    signature construction — the banding does not care how ``sig`` was
-    built, only that it is ``array<bigint>`` of length ``num_perm``)."""
+def sig_banded(pages: DataFrame, num_perm: int, bands: int,
+               shingle_k: int) -> DataFrame:
+    """(url, warc_ts, text) -> (url, warc_ts, sig, band_idx, band_hash)
+    rows, one per band: ONE numpy MinHash UDF per page (kernels/hashing
+    — per-row, so it needs no aggregation), band keys derived JVM-side
+    from signature slices."""
+    from ..functions.udfs import make_minhash_sig_udf
+
+    sig_udf = make_minhash_sig_udf(num_perm=num_perm, shingle_k=shingle_k)
+    with_sig = pages.select(
+        "url", "warc_ts", sig_udf("text").alias("sig")
+    )
     rows_per_band = num_perm // bands
     band_structs = [
         F.struct(
@@ -145,79 +58,6 @@ def _band_sig(with_sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
     ).select("url", "warc_ts", "sig", "bh.band_idx", "bh.band_hash")
 
 
-def _sig_banded(pages: DataFrame, num_perm: int, bands: int,
-                shingle_k: int) -> DataFrame:
-    """(url, warc_ts, sig, band_idx, band_hash) rows: ONE numpy MinHash
-    UDF per page (kernels/hashing — per-row, so it is streaming-legal:
-    no aggregation before the stateful operator), band keys derived
-    JVM-side from signature slices."""
-    from ..functions.udfs import make_minhash_sig_udf
-
-    sig_udf = make_minhash_sig_udf(num_perm=num_perm, shingle_k=shingle_k)
-    with_sig = pages.select(
-        "url", "warc_ts", sig_udf("text").alias("sig")
-    )
-    return _band_sig(with_sig, num_perm, bands)
-
-
-def _sig_banded_wordgram(pages: DataFrame, num_perm: int, bands: int,
-                         shingle_k: int) -> DataFrame:
-    """Same (url, warc_ts, sig, band_idx, band_hash) shape built by the
-    batch dedup stage's PRODUCTION word-gram construction
-    (operators/dedup.py, ``portable=False``: one xxhash64 per word,
-    rotate-xor gram fold, min-agg over permutations — the SIGNATURE
-    stage alone measured 85.8 s -> 7.1 s per 100k pages vs the
-    char-shingle kernel at num_perm=64; but see BENCH/BASELINE.md for
-    the full-gate A/B, where the gate's default 8-row bands and
-    template-heavy corpora make this construction net slower and
-    lower-recall without co-tuned band/agreement params).
-
-    Aggregation-based (groupBy per doc), so it is legal ONLY in batch
-    plans — ``foreachBatch`` bodies and differential oracles; the
-    single-operator stateful gate (``stream_near_dups``) must keep the
-    per-row kernel UDF, since Structured Streaming forbids aggregation
-    before ``applyInPandasWithState``.  ``shingle_k`` here counts WORDS
-    per gram, not characters; the two constructions' signatures are
-    mutually incomparable (streaming/ingest.py stamps the construction
-    into the persisted state's sig_params for exactly that reason)."""
-    from ..operators.dedup import _minhash_signatures
-
-    # event identity is (url, warc_ts) — fold it into doc_id so an
-    # in-batch recrawl keeps both occurrences' signatures.  NULL text
-    # folds to '' (the family-wide rule): without it the doc's grams
-    # are NULL, the groupBy never sees it, and every NULL-text page
-    # silently bypasses the gate — the kernel construction signs
-    # (t or ''), so the two options must agree on who is gated.
-    docs = pages.select(
-        F.struct("url", "warc_ts").alias("doc_id"),
-        F.coalesce(F.col("text"), F.lit("")).alias("text"),
-    )
-    sigs = _minhash_signatures(docs, "text", num_perm=num_perm,
-                               shingle_k=shingle_k, portable=False)
-    with_sig = sigs.select(
-        F.col("doc_id.url").alias("url"),
-        F.col("doc_id.warc_ts").alias("warc_ts"),
-        F.array(*[f"s{i}" for i in range(num_perm)]).alias("sig"),
-    )
-    return _band_sig(with_sig, num_perm, bands)
-
-
-def sig_banded(pages: DataFrame, num_perm: int, bands: int, shingle_k: int,
-               signatures: str = "kernel") -> DataFrame:
-    """Signature-source switch shared by the composed ingest and its
-    batch differential oracle: ``kernel`` (default — per-row numpy UDF,
-    the stateful gate's construction) or ``wordgram`` (JVM-side,
-    batch-only; needs co-tuned band/agreement params — see
-    stream_ingest's docstring)."""
-    if signatures == "wordgram":
-        return _sig_banded_wordgram(pages, num_perm, bands, shingle_k)
-    if signatures == "kernel":
-        return _sig_banded(pages, num_perm, bands, shingle_k)
-    raise ValueError(
-        f"signatures must be 'wordgram' or 'kernel', got {signatures!r}"
-    )
-
-
 def _fold_bucket(rows, reps, min_slots: int, max_reps: int):
     """The shared per-bucket fold (stream and batch run the SAME code):
     ``rows`` is (url, warc_ts, sig_list) in event order; ``reps`` the
@@ -235,7 +75,7 @@ def _fold_bucket(rows, reps, min_slots: int, max_reps: int):
 
     NOTE: the per-row Python loop is structurally forced — this is a
     per-key ORDERED state machine (earlier-seen-wins rep election)
-    inside applyInPandasWithState; do not vectorize it into an
+    whose result depends on arrival order; do not vectorize it into an
     unordered form."""
     out = []
     for url, ts, sig in rows:
@@ -254,108 +94,6 @@ def _fold_bucket(rows, reps, min_slots: int, max_reps: int):
     return out, reps
 
 
-def _near_dup_fn(num_perm: int, min_agreement: float, max_reps: int,
-                 ttl_seconds: int):
-    min_slots = int(-(-min_agreement * num_perm // 1))
-
-    def fn(key, pdf_iter, state):
-        import pickle
-
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        band_idx = int(key[0])
-        reps, latest = (
-            (pickle.loads(bytes(state.get[0])), state.get[1])
-            if state.exists else ([], -1)
-        )
-        rows = []
-        for pdf in pdf_iter:
-            for url, ts, sig in zip(pdf["url"], pdf["warc_ts"], pdf["sig"]):
-                ts_us = int(pd.Timestamp(ts).value // 1000)
-                latest = max(latest, ts_us)
-                rows.append((url, ts, list(sig)))
-        # sort the CONCATENATED rows: a hot bucket can span several Arrow
-        # chunks of pdf_iter in arbitrary order, and the fold's
-        # earlier-seen-wins semantics needs one global event order per
-        # micro-batch (per-chunk sorting alone would elect late reps)
-        rows.sort(key=lambda r: (r[1], r[0]))
-        dups, reps = _fold_bucket(rows, reps, min_slots, max_reps)
-        state.update((pickle.dumps(reps), latest))
-        if latest >= 0:
-            state.setTimeoutTimestamp(latest // 1000 + ttl_seconds * 1000)
-        if dups:
-            yield pd.DataFrame(
-                [(u, t, band_idx, d, a, s) for (u, t, d, a, s) in dups],
-                columns=["url", "warc_ts", "band_idx", "dup_of",
-                         "agreement", "saturated"],
-            )
-
-    return fn
-
-
-def stream_near_dups(
-    pages_stream: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    num_perm: int = 64,
-    bands: int = 8,
-    shingle_k: int = 3,
-    min_agreement: float = 0.9,
-    max_reps: int = 8,
-    watermark: str = "1 hour",
-    ttl_seconds: int = 7 * 24 * 3600,
-):
-    """Incremental near-dup detection over a page stream — the streaming
-    analog of ``operators.dedup.corpus_dedup``'s pair stage: per LSH
-    band bucket, persistent state holds up to ``max_reps``
-    representative signatures; an arriving page whose MinHash agrees
-    with a representative on >= ``min_agreement`` of ``num_perm`` slots
-    is flagged ``(url, band_idx, dup_of, agreement, saturated=False)``.
-    A url is a near-dup iff ANY band flags it with a non-null ``dup_of``
-    (aggregate downstream — the verdict rows are per-band so the stream
-    stays single-stateful-operator).  A distinct url that arrives at a
-    FULL bucket is emitted with ``saturated=True`` (null ``dup_of``):
-    the bucket can no longer gain representatives, so that url's future
-    duplicates pass this band undetected — monitor
-    ``filter(saturated)`` counts and raise ``bands``/``max_reps`` when
-    they grow (the streaming analog of ``minhash_hot_band_stats``).
-
-    State is bounded three ways: reps per bucket capped (keeper
-    semantics — dups are never added), the stream is watermarked, and
-    each bucket carries an event-time TTL past its newest row, exactly
-    like ``stream_new_versions``.  Like every verified-dedup path here,
-    band collision alone NEVER flags a page — the signature-agreement
-    check runs on every candidate (the round-5 over-merge lesson)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    flagged = (
-        _sig_banded(
-            pages_stream.select("url", "warc_ts", "text"),
-            num_perm, bands, shingle_k,
-        )
-        .withWatermark("warc_ts", watermark)
-        .groupBy("band_idx", "band_hash")
-        .applyInPandasWithState(
-            _near_dup_fn(num_perm, min_agreement, max_reps, ttl_seconds),
-            outputStructType=DUP_OUT_SCHEMA,
-            stateStructType=DUP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    return (
-        flagged.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def near_dup_flags_batch(
     pages: DataFrame,
     num_perm: int = 64,
@@ -363,13 +101,10 @@ def near_dup_flags_batch(
     shingle_k: int = 3,
     min_agreement: float = 0.9,
     max_reps: int = 8,
-    signatures: str = "kernel",
 ) -> DataFrame:
-    """Batch analog (differential oracle): the SAME ``_fold_bucket``
-    applied per band bucket over event-ordered rows.  ``signatures``
-    defaults to the stateful gate's kernel construction (this function
-    is ``stream_near_dups``'s oracle); pass ``'wordgram'`` to mirror
-    the composed ingest's scale default (same switch, shared code)."""
+    """Batch analog of ``stream_ingest``'s near-dup gate (its
+    differential reference): the SAME ``_fold_bucket`` applied per band
+    bucket over event-ordered rows, in one pass over a static frame."""
     min_slots = int(-(-min_agreement * num_perm // 1))
 
     def fold(pdf):
@@ -388,7 +123,7 @@ def near_dup_flags_batch(
 
     return (
         sig_banded(pages.select("url", "warc_ts", "text"),
-                   num_perm, bands, shingle_k, signatures=signatures)
+                   num_perm, bands, shingle_k)
         .groupBy("band_idx", "band_hash")
         .applyInPandas(fold, DUP_OUT_SCHEMA)
     )

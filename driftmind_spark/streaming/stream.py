@@ -1,24 +1,10 @@
-"""Structured Streaming variant of the ingestion pipeline (SURVEY.md §2.9).
+"""Structured Streaming source and sink shared by the composed ingest
+(streaming/ingest.py::stream_ingest, the one streaming entry point).
 
-The reference has no streaming surface (synchronous HTTP,
-``Program.cs:104-445``); this module exists because every batch stage we
-built is stateless per-url, so the same DataFrame expressions lift to
-``readStream`` unchanged — the ``warc_ts`` column becomes the event-time
-watermark, and windowed per-host counts demonstrate stateful streaming
-aggregation with late-data handling.
-
-Run modes:
-- ``stream_chunks``: file-source stream over a pages directory ->
-  chunk rows, ``foreachBatch`` appending to the same chunks table layout
-  the batch pipeline writes (shared schema, shared lineage discipline).
-- ``stream_host_counts``: watermarked sliding-window aggregation
-  (1-hour windows on ``warc_ts``, 30-minute late-data allowance).
-- ``stateful.stream_new_versions``: the custom
-  ``applyInPandasWithState`` operator (incremental re-crawl gate with
-  per-url version state + event-time TTL).
-
-Tests drive both with ``trigger(availableNow=True)`` so they terminate
-deterministically on a frozen corpus.
+``read_pages_stream`` is the file-source stream over a pages directory
+(the batch pipeline's pages schema, ``maxFilesPerTrigger`` bounding each
+micro-batch); ``_write_batch_idempotent`` is the exactly-once
+``foreachBatch`` sink every per-batch table of the ingest writes through.
 """
 
 from __future__ import annotations
@@ -70,124 +56,4 @@ def _write_batch_idempotent(df: DataFrame, out_path: str, batch_id: int) -> None
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id")
         .parquet(out_path)
-    )
-
-
-def stream_chunks(
-    pages_stream: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    chunk_size: int = 300,
-    overlap: int = 20,
-):
-    """pages stream -> chunk rows, written via the idempotent foreachBatch
-    sink (the same sink layout as the batch pipeline, so downstream
-    consumers can't tell which mode produced the table)."""
-    from ..operators.chunking import build_chunks
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        chunks = build_chunks(batch_df, chunk_size, overlap, with_embeddings=False)
-        _write_batch_idempotent(chunks, out_path, batch_id)
-
-    return (
-        pages_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_triples(
-    pages_stream: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    n_buckets: int = 8,
-):
-    """pages stream -> OpenIE triples, appended in the batch pipeline's
-    triples-table layout (bucket = hash(url) % n_buckets): incremental
-    KG ingestion — a crawl feed extends the triples table continuously,
-    and the batch nodes/edges stages (blocking, linking, CC,
-    canonicalization) run periodically over the growing table.  The
-    extraction kernel is the SAME stateless mapInArrow expression the
-    batch stage uses, so both modes emit identical triples per page."""
-    from ..kg.lineage import bucket_col
-    from ..kg.triples import extract_triples_df
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        triples = extract_triples_df(batch_df).withColumn(
-            "bucket", bucket_col("url", n_buckets)
-        )
-        _write_batch_idempotent(triples, out_path, batch_id)
-
-    return (
-        pages_stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_dedupe_pages(
-    pages_stream: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    watermark: str = "1 hour",
-):
-    """Idempotent re-upload rejection (the reference returns Conflict for
-    an existing DocumentId, ``Services/DocumentProcessingService.cs:
-    44-58``) as stateful streaming dedup: the first page per url within
-    the watermark horizon passes, duplicates are dropped.
-
-    ``dropDuplicatesWithinWatermark`` (not plain ``dropDuplicates``) is
-    load-bearing at crawl scale: with ``dropDuplicates(['url'])`` the
-    watermark only filters late input — url state is keyed without an
-    event-time column and is NEVER evicted, growing unboundedly.  The
-    WithinWatermark variant expires each url key once it falls behind
-    the watermark horizon, so state is bounded by the horizon's url
-    arrival rate."""
-    deduped = pages_stream.withWatermark(
-        "warc_ts", watermark
-    ).dropDuplicatesWithinWatermark(["url"])
-    return (
-        deduped.select("url", "warc_ts", "lang")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_host_counts(
-    pages_stream: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    window: str = "1 hour",
-    slide: str | None = None,
-    watermark: str = "30 minutes",
-):
-    """Watermarked event-time windowed aggregation: pages per host per
-    window; late rows beyond the watermark are dropped (state bounded)."""
-    host = F.regexp_extract("url", r"https?://([^/]+)/", 1)
-    win = F.window("warc_ts", window, slide) if slide else F.window("warc_ts", window)
-    agg = (
-        pages_stream.withWatermark("warc_ts", watermark)
-        .groupBy(win.alias("win"), host.alias("host"))
-        .agg(F.count("*").alias("n_pages"), F.max("warc_ts").alias("max_ts"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "host",
-            "n_pages",
-            "max_ts",
-        )
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
     )

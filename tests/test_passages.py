@@ -1,81 +1,10 @@
-"""Passage/chunk-level dedup (the Lee-et-al intra-document layer):
-keeper election, rebuild semantics, and a DuckDB oracle cross-check at
-sf0.01 (the registry sits AT the driver's 50-query cap, so this
-operator's oracle runs here with the same row/schema/multiset rigor as
-the driver gate instead of as a 51st registry entry)."""
-
-import os
-
-import duckdb
-import pytest
-from pyspark.sql import functions as F
+"""Chunk-level dedup (the Lee-et-al intra-document layer the pipeline's
+chunk_dedup stage runs): first-occurrence keeper election, idempotence,
+and re-running on its own output."""
 
 from driftmind_spark.operators import passages as ps
 
-SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
-
-
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id string, text string")
-
-
-BOILER = (
-    "This material is provided under the standard license terms and "
-    "may be redistributed freely provided this notice is preserved."
-)
 NAV = "Home News Sports Archive Contact About and further navigation text."
-
-
-def test_passage_dedup_first_occurrence_keeper(spark):
-    docs = _docs(spark, [
-        ("a", f"Unique opening for doc a.\n\n{BOILER}\n\nClosing thought a."),
-        ("b", f"{BOILER}\n\nEntirely different body for doc b."),
-        ("c", f"Doc c begins differently.\n\n{BOILER}"),
-    ])
-    res = ps.passage_dedup(docs, min_chars=50).collect()
-    by_key = {(r["doc_id"], r["passage_idx"]): r for r in res}
-    # the boilerplate passage: keeper = min (doc_id, passage_idx) = (a, 1)
-    assert by_key[("a", 1)]["is_kept"]
-    assert not by_key[("b", 0)]["is_kept"]
-    assert not by_key[("c", 1)]["is_kept"]
-    for k in [("a", 1), ("b", 0), ("c", 1)]:
-        assert by_key[k]["n_occurrences"] == 3
-        assert by_key[k]["n_docs"] == 3
-        assert by_key[k]["keeper_doc_id"] == "a"
-        assert by_key[k]["keeper_passage_idx"] == 1
-    # unique passages all kept, keeper columns NULL
-    for k in [("a", 0), ("a", 2), ("b", 1), ("c", 0)]:
-        assert by_key[k]["is_kept"]
-        assert by_key[k]["keeper_doc_id"] is None
-
-
-def test_passage_dedup_normalization_and_min_chars(spark):
-    shouty = BOILER.upper().replace(" ", "  ")  # case+whitespace variant
-    docs = _docs(spark, [
-        ("a", f"{BOILER}\n\nShort."),
-        ("b", f"  {shouty}\n\nShort."),
-    ])
-    res = {(r["doc_id"], r["passage_idx"]): r
-           for r in ps.passage_dedup(docs, min_chars=50).collect()}
-    # normalized variants share a fingerprint -> b's copy dropped
-    assert res[("a", 0)]["is_kept"] and not res[("b", 0)]["is_kept"]
-    # "Short." repeats but is under min_chars -> both kept (headings and
-    # short common sentences are legitimate repeated text)
-    assert res[("a", 1)]["is_kept"] and res[("b", 1)]["is_kept"]
-
-
-def test_apply_passage_dedup_rebuilds_and_keeps_empty_docs(spark):
-    docs = _docs(spark, [
-        ("a", f"Unique a text opener paragraph.\n\n{BOILER}"),
-        ("b", f"{BOILER}"),          # all passages dropped -> empty text
-        ("c", ""),                    # empty in, empty out
-    ])
-    got = {r["doc_id"]: r["text"]
-           for r in ps.apply_passage_dedup(docs, min_chars=50).collect()}
-    assert set(got) == {"a", "b", "c"}, "no doc may vanish"
-    assert got["a"] == f"Unique a text opener paragraph.\n\n{BOILER}"
-    assert got["b"] == ""
-    assert got["c"] == ""
 
 
 def test_chunk_dedup_filters_repeated_chunks(spark):
@@ -107,76 +36,6 @@ def test_chunk_dedup_filters_repeated_chunks(spark):
     assert again.filter("not is_kept").count() == 0
 
 
-@pytest.mark.parametrize("min_chars,min_repeats", [(50, 2), (20, 3)])
-def test_passage_dedup_matches_duckdb_oracle(spark, min_chars, min_repeats):
-    """Driver-gate-rigor oracle: the full resolution frame over the
-    sf0.01 documents table must match an independent DuckDB SQL
-    derivation row-for-row (count + order-insensitive multiset over all
-    columns)."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    res = ps.passage_dedup(docs, min_chars=min_chars,
-                           min_repeats=min_repeats)
-    sdf = res.select(
-        "doc_id", "passage_idx", "fingerprint", "n_occurrences", "n_docs",
-        "keeper_doc_id", "keeper_passage_idx", "is_kept",
-    ).toPandas()
-
-    con = duckdb.connect()
-    ddf = con.execute(rf"""
-        with p as (
-            select cast(doc_id as varchar) as doc_id,
-                   cast(i - 1 as int) as passage_idx,
-                   arr[i] as passage,
-                   md5(regexp_replace(lower(trim(arr[i])), '\s+', ' ', 'g'))
-                       as fingerprint
-            from (select doc_id,
-                         regexp_split_to_array(text, '\n{{2,}}') as arr
-                  from read_parquet('{SF_DIR}/documents.parquet')),
-                 lateral (select unnest(generate_series(1, len(arr))) as i)
-        ),
-        occ as (
-            select fingerprint,
-                   min({{'d': doc_id, 'i': passage_idx}}) as keeper,
-                   count(*) as n_occurrences,
-                   count(distinct doc_id) as n_docs
-            from p
-            where length(regexp_replace(lower(trim(passage)),
-                                        '\s+', ' ', 'g')) >= {min_chars}
-            group by fingerprint
-            having count(*) >= {min_repeats}
-        )
-        select p.doc_id, p.passage_idx, p.fingerprint,
-               occ.n_occurrences, occ.n_docs,
-               occ.keeper.d as keeper_doc_id,
-               occ.keeper.i as keeper_passage_idx,
-               (occ.n_occurrences is null
-                or (p.doc_id = occ.keeper.d
-                    and p.passage_idx = occ.keeper.i)) as is_kept
-        from p left join occ using (fingerprint)
-    """).fetchdf()
-
-    assert len(sdf) == len(ddf), (len(sdf), len(ddf))
-    assert len(sdf) > 0
-
-    def norm(df):
-        cols = sorted(df.columns)
-        return sorted(
-            "|".join("NULL" if v is None or v != v else str(v)
-                     for v in (r[c] for c in cols))
-            for _, r in df[cols].iterrows()
-        )
-
-    # pandas floats from nullable ints: normalize numerics to float str
-    for c in ("n_occurrences", "n_docs", "keeper_passage_idx"):
-        sdf[c] = sdf[c].astype("float64")
-        ddf[c] = ddf[c].astype("float64")
-    sm, dm = norm(sdf), norm(ddf)
-    diffs = [(a, b) for a, b in zip(sm, dm) if a != b][:3]
-    assert sm == dm, f"first diffs: {diffs}"
-
-
 def test_chunk_dedup_rerunnable_on_own_output(spark):
     """Round-6 review fix: feeding chunk_dedup its own full output (with
     derived columns still attached) must recompute instead of raising
@@ -190,247 +49,3 @@ def test_chunk_dedup_rerunnable_on_own_output(spark):
     again = ps.chunk_dedup(first.filter("is_kept"), min_chars=40)
     assert again.filter("not is_kept").count() == 0
     assert again.count() == 2
-
-
-def test_passage_dedup_null_text_doc_not_dropped(spark):
-    """Round-6 review fix: split(NULL) posexplodes to zero rows — a
-    null-text doc must still appear (as one empty kept passage)."""
-    docs = _docs(spark, [("n", None), ("t", "real text")])
-    got = {r["doc_id"]: r for r in ps.passage_dedup(docs).collect()}
-    assert set(got) == {"n", "t"}
-    assert got["n"]["is_kept"] and got["n"]["passage"] == ""
-
-
-# ---- fixed-k token-window granularity (round 6 late) -----------------------
-
-LICENSE_BLOCK = " ".join(f"license term number {i} applies here" for i in range(12))
-# 60 tokens -> spans two windows at window_tokens=30
-
-
-def test_window_fingerprints_disjoint_cover_all_tokens(spark):
-    docs = _docs(spark, [
-        ("a", " ".join(f"tok{i}" for i in range(70))),
-        ("b", "short doc only"),
-        ("c", ""),
-    ])
-    w = ps.window_fingerprints(docs, window_tokens=30).collect()
-    by_doc = {}
-    for r in w:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    # 70 tokens, stride 30 -> starts 0,30,60; the tail window is
-    # TRUNCATED (10 tokens), never silently dropped: coverage is total
-    starts_a = sorted(r["start_token"] for r in by_doc["a"])
-    assert starts_a == [0, 30, 60]
-    sizes = {r["start_token"]: r["n_window_tokens"] for r in by_doc["a"]}
-    assert sizes == {0: 30, 30: 30, 60: 10}
-    assert sum(sizes.values()) == 70
-    # short doc -> one window of all tokens
-    assert len(by_doc["b"]) == 1
-    assert by_doc["b"][0]["n_window_tokens"] == 3
-    # empty doc -> no windows (apply_* restores the doc as empty)
-    assert "c" not in by_doc
-
-
-def test_window_dedup_flags_repeated_block(spark):
-    docs = _docs(spark, [
-        ("a", f"{LICENSE_BLOCK} unique tail for doc a here"),
-        ("b", f"{LICENSE_BLOCK} entirely different ending text b"),
-    ])
-    res = ps.window_dedup(docs, window_tokens=30).collect()
-    flagged = [r for r in res if r["n_occurrences"] is not None]
-    # both license windows (0-29, 30-59) repeat across the two docs
-    assert {(r["doc_id"], r["win_idx"]) for r in flagged} >= {
-        ("a", 0), ("a", 1), ("b", 0), ("b", 1)
-    }
-    by_key = {(r["doc_id"], r["win_idx"]): r for r in res}
-    assert by_key[("a", 0)]["is_kept"] and not by_key[("b", 0)]["is_kept"]
-    assert by_key[("b", 0)]["keeper_doc_id"] == "a"
-
-
-def test_apply_window_dedup_removes_repeats_keeps_all_docs(spark):
-    docs = _docs(spark, [
-        ("a", LICENSE_BLOCK),
-        ("b", LICENSE_BLOCK),
-        ("c", "totally unique little document"),
-        ("d", ""),
-    ])
-    got = {r["doc_id"]: r["text"]
-           for r in ps.apply_window_dedup(docs, window_tokens=30).collect()}
-    assert set(got) == {"a", "b", "c", "d"}
-    assert got["a"] == LICENSE_BLOCK.lower()
-    # b's two FULL windows repeat a's and are dropped; its truncated
-    # 12-token tail is ineligible by the minimum-span rule and survives
-    tail = " ".join(LICENSE_BLOCK.lower().split()[60:])
-    assert got["b"] == tail
-    assert got["c"] == "totally unique little document"
-    assert got["d"] == ""
-
-
-# ~100 words of license-ish boilerplate: one reworded word costs
-# shingle_k=5 word-grams, so variants sit at J ~= 0.9 — inside the
-# min_agreement=0.8 verification band with ~2-sigma margin, while
-# distinct passages sit near J = 0.
-LONG_BOILER = (
-    "this software is provided by the copyright holders and contributors "
-    "as is and any express or implied warranties including but not "
-    "limited to the implied warranties of merchantability and fitness "
-    "for a particular purpose are disclaimed in no event shall the "
-    "copyright owner or contributors be liable for any direct indirect "
-    "incidental special exemplary or consequential damages including but "
-    "not limited to procurement of substitute goods or services loss of "
-    "use data or profits or business interruption however caused and on "
-    "any theory of liability whether in contract strict liability or "
-    "tort arising in any way out of the use of this software even if "
-    "advised of the possibility of such damage"
-)
-
-
-def _reworded_corpus(n=6):
-    """n docs, each = one unique paragraph + the boilerplate with ONE
-    word reworded differently per doc (so every passage fingerprint is
-    unique and the exact layer is provably blind)."""
-    words = LONG_BOILER.split()
-    rows = []
-    for i in range(n):
-        w = list(words)
-        w[20] = f"reworded{i}"
-        uniq = " ".join(f"unique{i}w{j}" for j in range(15))
-        rows.append((f"doc{i}", f"{uniq}\n\n{' '.join(w)}"))
-    return rows
-
-
-def test_passage_near_dedup_catches_reworded_boilerplate(spark):
-    """Round-7: the fuzzy layer catches what the exact fingerprint
-    misses — reworded boilerplate collapses to its first occurrence,
-    distinct paragraphs are untouched (precision)."""
-    docs = _docs(spark, _reworded_corpus(6))
-
-    # exact layer provably blind: every fingerprint unique, nothing drops
-    assert ps.passage_dedup(docs, min_chars=50).filter(
-        "not is_kept").count() == 0
-
-    rows = {(r["doc_id"], r["passage_idx"]): r
-            for r in ps.passage_near_dedup(docs, min_chars=50).collect()}
-    dropped = sorted(k for k, r in rows.items() if not r["is_kept"])
-    # recall: all non-first boilerplate variants dropped
-    assert dropped == [(f"doc{i}", 1) for i in range(1, 6)]
-    keeper = rows[("doc0", 1)]
-    assert keeper["is_kept"]
-    assert keeper["n_occurrences"] == 6 and keeper["n_docs"] == 6
-    for i in range(1, 6):
-        r = rows[(f"doc{i}", 1)]
-        assert r["keeper_doc_id"] == "doc0"
-        assert r["keeper_passage_idx"] == 1
-    # precision: every unique paragraph kept, keeper columns NULL
-    for i in range(6):
-        r = rows[(f"doc{i}", 0)]
-        assert r["is_kept"] and r["keeper_doc_id"] is None
-
-
-def test_passage_near_dedup_exact_and_near_merge(spark):
-    """Verbatim copies collapse through the exact md5 group (fast path)
-    and merge with reworded variants into ONE cluster — keeper = global
-    minimum (doc_id, passage_idx) across both layers."""
-    words = LONG_BOILER.split()
-    w = list(words)
-    w[20] = "rewordedx"
-    docs = _docs(spark, [
-        ("a", f"{' '.join(f'uaw{j}' for j in range(15))}\n\n{LONG_BOILER}"),
-        ("b", f"{LONG_BOILER}\n\n{' '.join(f'ubw{j}' for j in range(15))}"),
-        ("c", f"{' '.join(f'ucw{j}' for j in range(15))}\n\n{' '.join(w)}"),
-    ])
-    rows = {(r["doc_id"], r["passage_idx"]): r
-            for r in ps.passage_near_dedup(docs, min_chars=50).collect()}
-    # one cluster of 3 (a#1 exact= b#0, near= c#1); keeper = (a, 1)
-    for k in [("a", 1), ("b", 0), ("c", 1)]:
-        assert rows[k]["n_occurrences"] == 3
-        assert rows[k]["keeper_doc_id"] == "a"
-        assert rows[k]["keeper_passage_idx"] == 1
-    assert rows[("a", 1)]["is_kept"]
-    assert not rows[("b", 0)]["is_kept"]
-    assert not rows[("c", 1)]["is_kept"]
-
-
-def test_passage_near_dedup_short_and_null_kept(spark):
-    """Ineligible (short) passages and NULL-text docs follow the
-    passage_dedup family rules: always kept, never vanish."""
-    docs = _docs(spark, [
-        ("n", None),
-        ("s", "Tiny.\n\nAlso small."),
-        ("t", "Tiny.\n\nAlso small."),
-    ])
-    res = ps.passage_near_dedup(docs, min_chars=50)
-    assert res.filter("not is_kept").count() == 0
-    assert {r["doc_id"] for r in res.select("doc_id").collect()} == \
-        {"n", "s", "t"}
-
-
-def test_apply_passage_near_dedup_idempotent(spark):
-    """Rebuilding then re-running is a fixed point: the surviving
-    boilerplate occurrence is unique corpus-wide, so nothing else
-    drops."""
-    docs = _docs(spark, _reworded_corpus(5))
-    rebuilt = ps.apply_passage_near_dedup(docs)
-    assert rebuilt.count() == 5
-    again = ps.passage_near_dedup(rebuilt, min_chars=50)
-    assert again.filter("not is_kept").count() == 0
-    # doc0 kept its boilerplate, doc1..4 only their unique paragraph
-    texts = {r["doc_id"]: r["text"] for r in rebuilt.collect()}
-    assert "reworded0" in texts["doc0"]
-    for i in range(1, 5):
-        assert "liability" not in texts[f"doc{i}"]
-
-
-def test_passage_near_dedup_synth_corpus_recall_precision(spark):
-    """Synth-corpus validation (the round-7 'done' bar): every page of a
-    real 500-doc synth corpus gets the same ~70-word boilerplate with
-    one word reworded per crc32(doc_id)%7 family — the exact layer
-    collapses WITHIN each family (verbatim copies) but must leave one
-    surviving copy per family, and the fuzzy layer must merge the
-    families (pairwise J >~ 0.84, verified, transitively closed) into
-    ONE cluster.  Precision: rebuild keeps every doc and exactly one
-    surviving boilerplate copy corpus-wide."""
-    boiler = ("all content on this site is provided without any warranty "
-              "of correctness completeness or fitness for a particular "
-              "purpose and the operators accept no liability whatsoever "
-              "for damages arising from the use of this material "
-              "including direct indirect or consequential losses however "
-              "caused and on any theory of liability whether contract or "
-              "tort or otherwise even when advised of the possibility of "
-              "such damage in advance by any party")
-    docs = (
-        spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        .select(F.col("doc_id").cast("string").alias("doc_id"), "text")
-        .withColumn(
-            "variant",
-            F.regexp_replace(
-                F.lit(boiler), "warranty",
-                F.concat(F.lit("warranty"), F.crc32("doc_id") % 7),
-            ),
-        )
-        .select("doc_id", F.concat_ws("\n\n", "text", "variant").alias("text"))
-    )
-    n_docs = docs.count()
-
-    # exact layer stops at the family boundary: one keeper per reworded
-    # family survives (7 near-identical copies corpus-wide)
-    exact = ps.passage_dedup(docs, min_chars=50)
-    assert exact.filter(
-        F.col("passage").contains("liability whatsoever")
-        & F.col("is_kept")
-    ).count() == 7
-
-    res = ps.passage_near_dedup(docs, min_chars=50).cache()
-    planted = res.filter(F.col("passage").contains("liability whatsoever"))
-    n_planted = planted.count()
-    assert n_planted == n_docs
-    # recall: one keeper corpus-wide, every other variant dropped
-    assert planted.filter("is_kept").count() == 1
-    assert planted.filter("not is_kept").count() == n_docs - 1
-
-    rebuilt = ps.apply_passage_near_dedup(docs, min_chars=50)
-    assert rebuilt.count() == n_docs
-    assert rebuilt.filter(
-        F.col("text").contains("liability whatsoever")
-    ).count() == 1
-    res.unpersist()

@@ -186,47 +186,10 @@ def test_quality_filter_tokenizes_each_page_once(spark):
         assert plan.count("split(") == 1, plan.count("split(")
 
 
-def test_passage_dedup_plan_partial_agg_no_python(spark):
-    """Keeper election aggregates partially map-side (a passage repeated
+def test_chunk_dedup_plan_shapes(spark):
+    """Keeper election aggregates partially map-side (a chunk repeated
     10^9 times reaches its reducer as one row per map task), stays
     JVM-only, and joins without cartesian products."""
-    from driftmind_spark.operators.passages import passage_dedup
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    plan = (
-        passage_dedup(docs)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "partial_" in plan or "partial " in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
-def test_passage_near_dedup_plan_shapes(spark):
-    """Round-7 fuzzy layer: signatures are JVM long arithmetic
-    (portable=False word-grams — zero Python crossings), keeper
-    election still partial-aggregates map-side, and nothing degenerates
-    to a cartesian product."""
-    from driftmind_spark.operators.passages import passage_near_dedup
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    plan = (
-        passage_near_dedup(docs)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "partial_" in plan
-    assert "CartesianProduct" not in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
-def test_chunk_dedup_plan_shapes(spark):
-    """Same contract over an existing chunks-shaped table."""
     from driftmind_spark.operators.passages import chunk_dedup
     from pyspark.sql import functions as F
 
@@ -240,6 +203,7 @@ def test_chunk_dedup_plan_shapes(spark):
     )
     assert "partial_" in plan
     assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 

@@ -1,16 +1,7 @@
 """Structured Streaming pipeline and streaming ingest tests."""
 
-import glob
-import os
-
 import pytest
 from pyspark.sql import functions as F
-
-from driftmind_spark.streaming.stream import (
-    read_pages_stream,
-    stream_chunks,
-    stream_host_counts,
-)
 
 
 @pytest.fixture(scope="module")
@@ -25,218 +16,6 @@ def stream_corpus(tmp_path_factory):
         pages, _ = generate_pages(50, start=part * 50)
         pq.write_table(pages, f"{d}/part-{part}.parquet")
     return d
-
-
-def test_stream_chunks_matches_batch(spark, stream_corpus, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("stream_chunks_out"))
-    ckpt = str(tmp_path_factory.mktemp("ckpt1"))
-    q = stream_chunks(
-        read_pages_stream(spark, stream_corpus, max_files_per_trigger=1),
-        out, ckpt,
-    )
-    q.awaitTermination(300)
-    streamed = spark.read.parquet(out)
-    # multiple micro-batches actually happened
-    assert streamed.select("batch_id").distinct().count() > 1
-
-    from driftmind_spark.operators.chunking import build_chunks
-
-    batch = build_chunks(
-        spark.read.parquet(stream_corpus), with_embeddings=False
-    )
-    s_fp = streamed.select("url", "chunk_index", "content")
-    b_fp = batch.select("url", "chunk_index", "content")
-    assert s_fp.count() == b_fp.count()
-    assert s_fp.exceptAll(b_fp).count() == 0
-
-
-def test_stream_host_counts_watermarked(spark, stream_corpus, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("stream_counts_out"))
-    ckpt = str(tmp_path_factory.mktemp("ckpt2"))
-    q = stream_host_counts(
-        read_pages_stream(spark, stream_corpus, max_files_per_trigger=1),
-        out, ckpt,
-    )
-    q.awaitTermination(300)
-    files = glob.glob(os.path.join(out, "*.parquet"))
-    assert files, "windowed aggregation produced no output"
-    res = spark.read.parquet(out)
-    assert {"window_start", "window_end", "host", "n_pages"}.issubset(res.columns)
-    assert res.agg(F.sum("n_pages")).first()[0] > 0
-    # windows are exactly 1 hour
-    one_hour = res.select(
-        (F.col("window_end").cast("long") - F.col("window_start").cast("long"))
-        .alias("dur")
-    ).distinct().collect()
-    assert all(r["dur"] == 3600 for r in one_hour)
-
-
-def test_stream_resume_from_checkpoint(spark, stream_corpus, tmp_path_factory):
-    """availableNow + same checkpoint: a second start() with no new files
-    writes nothing new (offsets persisted)."""
-    out = str(tmp_path_factory.mktemp("stream_resume_out"))
-    ckpt = str(tmp_path_factory.mktemp("ckpt3"))
-    q1 = stream_chunks(read_pages_stream(spark, stream_corpus), out, ckpt)
-    q1.awaitTermination(300)
-    n1 = spark.read.parquet(out).count()
-    q2 = stream_chunks(read_pages_stream(spark, stream_corpus), out, ckpt)
-    q2.awaitTermination(300)
-    n2 = spark.read.parquet(out).count()
-    assert n1 == n2
-
-
-def test_stream_dedupe_pages(spark, stream_corpus, tmp_path_factory):
-    """Stateful idempotent-ingest: duplicated input files produce each url
-    exactly once downstream."""
-    import shutil
-
-    from driftmind_spark.streaming.stream import stream_dedupe_pages
-
-    dup_dir = str(tmp_path_factory.mktemp("dup_pages"))
-    for i, f in enumerate(sorted(__import__("glob").glob(f"{stream_corpus}/*.parquet"))):
-        shutil.copy(f, f"{dup_dir}/part-{i}a.parquet")
-        shutil.copy(f, f"{dup_dir}/part-{i}b.parquet")  # exact duplicates
-    out = str(tmp_path_factory.mktemp("dedupe_out"))
-    ckpt = str(tmp_path_factory.mktemp("ckpt_dd"))
-    # wide watermark: micro-batch arrival order (mtime) is arbitrary for
-    # copied files, so a narrow watermark would legitimately drop late
-    # originals — here we test the dedup semantics, not lateness
-    q = stream_dedupe_pages(read_pages_stream(spark, dup_dir, 2), out, ckpt,
-                            watermark="2 days")
-    q.awaitTermination(300)
-    res = spark.read.parquet(out)
-    n_unique = spark.read.parquet(dup_dir).select("url").distinct().count()
-    assert res.count() == n_unique  # every url emitted exactly once
-    assert res.groupBy("url").count().filter(F.col("count") > 1).count() == 0
-
-
-def test_stream_new_versions_stateful_gate(spark, tmp_path_factory):
-    """applyInPandasWithState custom operator: per-url persistent state
-    emits only strictly-newer versions with increasing version numbers;
-    late (older) re-crawls are dropped; state survives across triggers
-    via the checkpoint."""
-    import datetime as dt
-
-    from driftmind_spark.streaming.stateful import (
-        new_versions_batch,
-        stream_new_versions,
-    )
-    from driftmind_spark.streaming.stream import read_pages_stream
-
-    t0 = dt.datetime(2025, 1, 1)
-
-    def rows(*specs):
-        return [
-            (u, t0 + dt.timedelta(hours=h), b"<html/>", "x", "en")
-            for (u, h) in specs
-        ]
-
-    src = str(tmp_path_factory.mktemp("ver_pages"))
-    out = str(tmp_path_factory.mktemp("ver_out"))
-    ckpt = str(tmp_path_factory.mktemp("ver_ckpt"))
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-    # file 1: initial crawls
-    spark.createDataFrame(
-        rows(("u1", 0), ("u2", 0), ("u1", 2)), schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    q = stream_new_versions(read_pages_stream(spark, src, 2), out, ckpt)
-    q.awaitTermination(300)
-
-    got1 = {(r["url"], r["version"]): r["warc_ts"]
-            for r in spark.read.parquet(out).collect()}
-    assert got1 == {
-        ("u1", 1): t0, ("u1", 2): t0 + dt.timedelta(hours=2),
-        ("u2", 1): t0,
-    }
-
-    # file 2 (second trigger, state restored from checkpoint):
-    # u1 re-crawl NEWER (-> version 3); u1 STALE re-crawl at hour 1.5 —
-    # above the watermark (hour 1 after trigger 1) so it reaches the
-    # operator, but older than the state's hour-2 latest -> gated out;
-    # u3 first seen at hour 6 (inside the watermark horizon)
-    spark.createDataFrame(
-        rows(("u1", 5), ("u1", 1.5), ("u3", 6)), schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    q = stream_new_versions(read_pages_stream(spark, src, 2), out, ckpt)
-    q.awaitTermination(300)
-
-    got2 = {(r["url"], r["version"]): r["warc_ts"]
-            for r in spark.read.parquet(out).collect()}
-    assert ("u1", 3) in got2 and got2[("u1", 3)] == t0 + dt.timedelta(hours=5)
-    assert got2[("u3", 1)] == t0 + dt.timedelta(hours=6)
-    # the stale hour-1 re-crawl was gated out: u1 has exactly 3 versions
-    assert sum(1 for (u, _v) in got2 if u == "u1") == 3
-
-    # batch analog agrees on the monotone subset (it cannot know about
-    # arrival order, so the late row WOULD count there — that asymmetry
-    # is the point of the stateful operator)
-    batch = new_versions_batch(spark.read.parquet(src))
-    assert batch.filter("url = 'u3'").count() == 1
-    assert batch.filter("url = 'u1'").count() == 4  # includes the late row
-
-
-def test_stream_near_dups_flags_planted_clones(spark, tmp_path_factory):
-    """Streaming near-dup gate (round 5): clones planted in LATER
-    micro-batches are flagged against their earlier-seen sources with
-    per-band verdicts; the stream equals the batch analog row-for-row;
-    and the verified threshold prevents boilerplate over-flagging."""
-    import pyarrow.parquet as pq
-
-    from driftmind_spark.streaming.stateful import (
-        near_dup_flags_batch,
-        stream_near_dups,
-    )
-    from driftmind_spark.streaming.stream import read_pages_stream
-    from driftmind_spark.synth import _is_planted_clone, generate_pages
-
-    d = str(tmp_path_factory.mktemp("dup_stream_pages"))
-    for part in range(4):
-        pages, _ = generate_pages(60, start=part * 60, min_sent=12,
-                                  max_sent=20, dup_rate=0.15)
-        pq.write_table(pages, f"{d}/part-{part}.parquet")
-
-    out = str(tmp_path_factory.mktemp("near_dup_out"))
-    ckpt = str(tmp_path_factory.mktemp("near_dup_ckpt"))
-    q = stream_near_dups(
-        read_pages_stream(spark, d, max_files_per_trigger=1), out, ckpt,
-    )
-    q.awaitTermination(300)
-    # dup verdicts carry a non-null dup_of; saturated=True rows are the
-    # bucket-full observability signal, not dup flags
-    flagged = spark.read.parquet(out).filter("dup_of is not null")
-    flagged_urls = {r["url"] for r in flagged.select("url").distinct().collect()}
-
-    # every VERBATIM clone (identical text => identical signature,
-    # agreement = num_perm) must be flagged
-    pages_all = spark.read.parquet(d).toPandas()
-    by_text = {}
-    verbatim = set()
-    for row in pages_all.sort_values("warc_ts").itertuples():
-        if row.text and row.text in by_text:
-            verbatim.add(row.url)
-        else:
-            by_text[row.text] = row.url
-    assert verbatim, "corpus planted no verbatim clones"
-    assert verbatim <= flagged_urls, (
-        f"missed verbatim clones: {verbatim - flagged_urls}"
-    )
-    exact = flagged.filter("agreement = 64")
-    assert exact.count() > 0
-
-    # no over-flagging: the verified threshold keeps flags near the
-    # planted rate, never the boilerplate-sibling blowup
-    n_clones = sum(_is_planted_clone(i, 42, 0.15) for i in range(240))
-    assert len(flagged_urls) <= n_clones + 10
-
-    # differential: stream == batch analog (same fold, same order)
-    batch = near_dup_flags_batch(spark.read.parquet(d))
-    s_rows = flagged.select("url", "band_idx", "dup_of", "agreement", "saturated")
-    b_rows = batch.filter("dup_of is not null").select(
-        "url", "band_idx", "dup_of", "agreement", "saturated"
-    )
-    assert s_rows.count() == b_rows.count()
-    assert s_rows.exceptAll(b_rows).count() == 0
 
 
 def test_fold_bucket_invariants():
@@ -285,77 +64,6 @@ def test_fold_bucket_invariants():
     check()
 
 
-def test_stream_near_dups_state_survives_restart(spark, tmp_path_factory):
-    """Bucket representative state must persist across stream restarts:
-    a clone arriving in a SECOND run (new files, same checkpoint) is
-    flagged against a source seen only in the first run."""
-    import pyarrow.parquet as pq
-
-    from driftmind_spark.streaming.stateful import stream_near_dups
-    from driftmind_spark.streaming.stream import read_pages_stream
-    from driftmind_spark.synth import generate_pages
-
-    d = str(tmp_path_factory.mktemp("dup_restart_pages"))
-    out = str(tmp_path_factory.mktemp("dup_restart_out"))
-    ckpt = str(tmp_path_factory.mktemp("dup_restart_ckpt"))
-
-    # run 1: originals only (no clones planted below the floor region)
-    pages, _ = generate_pages(40, min_sent=12, max_sent=20)
-    pq.write_table(pages, f"{d}/part-0.parquet")
-    q = stream_near_dups(read_pages_stream(spark, d, 1), out, ckpt)
-    q.awaitTermination(300)
-
-    # run 2: verbatim re-posts of run-1 pages under new urls/timestamps
-    import pandas as pd
-    import pyarrow as pa
-
-    src = pages.to_pandas()
-    clones = src.iloc[30:36].copy()
-    clones["url"] = [f"https://mirror.example/re-{i}" for i in range(6)]
-    clones["warc_ts"] = clones["warc_ts"] + pd.Timedelta(seconds=999)
-    pq.write_table(
-        pa.Table.from_pandas(clones, preserve_index=False,
-                             schema=pages.schema),
-        f"{d}/part-1.parquet",
-    )
-    q2 = stream_near_dups(read_pages_stream(spark, d, 1), out, ckpt)
-    q2.awaitTermination(300)
-
-    flagged = spark.read.parquet(out)
-    got = {r["url"]: r["dup_of"]
-           for r in flagged.filter("agreement = 64").collect()}
-    src_urls = set(src.iloc[30:36]["url"])
-    for i in range(6):
-        u = f"https://mirror.example/re-{i}"
-        assert u in got, f"cross-restart clone {u} not flagged"
-        assert got[u] in src_urls
-
-
-def test_stream_triples_matches_batch(spark, stream_corpus, tmp_path_factory):
-    """Incremental KG ingestion: the streaming triples stage must emit
-    EXACTLY the batch stage's triples (same kernel, same bucket layout),
-    accumulated across micro-batches."""
-    from driftmind_spark.kg.triples import extract_triples_df
-    from driftmind_spark.streaming.stream import stream_triples
-
-    out = str(tmp_path_factory.mktemp("stream_triples_out"))
-    ckpt = str(tmp_path_factory.mktemp("ckpt_tr"))
-    q = stream_triples(
-        read_pages_stream(spark, stream_corpus, max_files_per_trigger=1),
-        out, ckpt, n_buckets=8,
-    )
-    q.awaitTermination(300)
-    streamed = spark.read.parquet(out)
-    assert streamed.select("batch_id").distinct().count() > 1
-    assert streamed.select("bucket").distinct().count() > 1
-
-    batch = extract_triples_df(spark.read.parquet(stream_corpus))
-    cols = ["url", "subj", "pred", "obj"]
-    s_fp = streamed.select(*cols).sort(*cols).collect()
-    b_fp = batch.select(*cols).sort(*cols).collect()
-    assert s_fp == b_fp
-
-
 def test_stream_sink_retry_is_idempotent(spark, stream_corpus, tmp_path_factory):
     """Round 4 (judge advice): a micro-batch RETRIED with the same
     batch_id — crash between parquet append and checkpoint commit — must
@@ -396,6 +104,22 @@ def test_fold_bucket_emits_saturation_signal():
     assert reps2 == reps
 
 
+@pytest.mark.parametrize("kwargs,match", [
+    ({"triples": True, "kg_every": 0}, "kg_every must be >= 1"),
+    ({"triples": True, "kg_every": -1}, "kg_every must be >= 1"),
+    ({"kg_every": 1}, "kg_every requires triples=True"),
+], ids=["zero", "negative", "no_triples"])
+def test_stream_ingest_rejects_bad_kg_every(tmp_path, kwargs, match):
+    """A bad rebuild cadence is refused before any query starts (no
+    stream is even passed in), not inside the sink after a batch's
+    flags, chunks, triples and state are already written."""
+    from driftmind_spark.streaming.ingest import stream_ingest
+
+    with pytest.raises(ValueError, match=match):
+        stream_ingest(None, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+                      **kwargs)
+
+
 def test_stream_ingest_gate_plus_chunks(spark, tmp_path_factory):
     """Round-6 composed streaming ingest: the near-dup gate chained in
     front of chunking inside one foreachBatch pipeline — flags equal the
@@ -421,13 +145,8 @@ def test_stream_ingest_gate_plus_chunks(spark, tmp_path_factory):
 
     out = str(tmp_path_factory.mktemp("ingest_out"))
     ckpt = str(tmp_path_factory.mktemp("ingest_ckpt"))
-    # run this parity test through the WORDGRAM construction (both
-    # sides of the differential) — the other ingest tests cover the
-    # kernel default, and this one pins that the signature switch stays
-    # differential-exact for the alternative construction too
     q = stream_ingest(
         read_pages_stream(spark, d, max_files_per_trigger=1), out, ckpt,
-        signatures="wordgram",
     )
     q.awaitTermination(300)
 
@@ -435,8 +154,7 @@ def test_stream_ingest_gate_plus_chunks(spark, tmp_path_factory):
     s_rows = flags.filter("dup_of is not null").select(
         "url", "band_idx", "dup_of", "agreement", "saturated"
     )
-    batch = near_dup_flags_batch(spark.read.parquet(d),
-                                 signatures="wordgram")
+    batch = near_dup_flags_batch(spark.read.parquet(d))
     b_rows = batch.filter("dup_of is not null").select(
         "url", "band_idx", "dup_of", "agreement", "saturated"
     )
@@ -467,7 +185,8 @@ def test_stream_ingest_checkpoint_restart(spark, tmp_path_factory):
     """Kill between micro-batch groups (two availableNow runs over a
     growing directory, same checkpoint): the resumed pipeline must end
     byte-identical to a single uninterrupted run — versioned rep state
-    carries the gate's memory across restarts."""
+    carries the gate's memory across restarts — and a further start
+    with no new files must write nothing."""
     import pyarrow.parquet as pq
 
     from driftmind_spark.streaming.ingest import stream_ingest
@@ -502,6 +221,17 @@ def test_stream_ingest_checkpoint_restart(spark, tmp_path_factory):
     q = stream_ingest(read_pages_stream(spark, d1, max_files_per_trigger=1),
                       out_r, ckpt_r)
     q.awaitTermination(300)
+
+    # one more start with no new files writes nothing (offsets persisted)
+    def _counts():
+        return [spark.read.parquet(f"{out_r}/{t}").count()
+                for t in ("dup_flags", "chunks")]
+
+    before = _counts()
+    q = stream_ingest(read_pages_stream(spark, d1, max_files_per_trigger=1),
+                      out_r, ckpt_r)
+    q.awaitTermination(300)
+    assert _counts() == before
 
     # uninterrupted reference run over the same four files
     d2 = str(tmp_path_factory.mktemp("ingest_f_pages"))
@@ -784,10 +514,10 @@ def test_stream_ingest_kg_restart_identity(spark, tmp_path_factory):
         assert sb.select(*cols).exceptAll(sa.select(*cols)).count() == 0, table
 
 
-def test_stream_ingest_state_sig_version_guard(spark, tmp_path_factory):
-    """Round-6 advice: rep state persisted under a different signature
-    construction must make the resume FAIL LOUDLY (mixed-version
-    agreement checks silently lose recall)."""
+def _resume_tampered_state(spark, tmp_path_factory, name, column, value):
+    """Ingest one file, rewrite ``column`` of the newest persisted dedup
+    state version to ``value``, add a second file and start the ingest
+    again on the same checkpoint; returns the resumed query."""
     import glob
     import os
     import shutil
@@ -798,25 +528,22 @@ def test_stream_ingest_state_sig_version_guard(spark, tmp_path_factory):
     from driftmind_spark.streaming.stream import read_pages_stream
     from driftmind_spark.synth import generate_pages
 
-    d = str(tmp_path_factory.mktemp("sigv_pages"))
+    d = str(tmp_path_factory.mktemp(f"{name}_pages"))
     pages, _ = generate_pages(20, min_sent=8, max_sent=12)
     p0 = f"{d}/part-0.parquet"
     pq.write_table(pages, p0)
     os.utime(p0, (1_700_000_000, 1_700_000_000))
 
-    out = str(tmp_path_factory.mktemp("sigv_out"))
-    ckpt = str(tmp_path_factory.mktemp("sigv_ckpt"))
+    out = str(tmp_path_factory.mktemp(f"{name}_out"))
+    ckpt = str(tmp_path_factory.mktemp(f"{name}_ckpt"))
     q = stream_ingest(read_pages_stream(spark, d, max_files_per_trigger=1),
                       out, ckpt)
     q.awaitTermination(300)
 
-    # tamper: rewrite the newest state version with a bogus sig_version
     state_dirs = sorted(glob.glob(f"{out}/dedup_state/state_v=*"))
     assert state_dirs
     newest = state_dirs[-1]
-    tampered = spark.read.parquet(newest).withColumn(
-        "sig_version", F.lit(999)
-    )
+    tampered = spark.read.parquet(newest).withColumn(column, value)
     tmp = newest + ".tmp"
     tampered.write.mode("overwrite").parquet(tmp)
     shutil.rmtree(newest)
@@ -827,8 +554,17 @@ def test_stream_ingest_state_sig_version_guard(spark, tmp_path_factory):
     pq.write_table(pages2, p1)
     os.utime(p1, (1_700_000_001, 1_700_000_001))
 
-    q = stream_ingest(read_pages_stream(spark, d, max_files_per_trigger=1),
-                      out, ckpt)
+    return stream_ingest(
+        read_pages_stream(spark, d, max_files_per_trigger=1), out, ckpt
+    )
+
+
+def test_stream_ingest_state_sig_version_guard(spark, tmp_path_factory):
+    """Round-6 advice: rep state persisted under a different signature
+    construction must make the resume FAIL LOUDLY (mixed-version
+    agreement checks silently lose recall)."""
+    q = _resume_tampered_state(spark, tmp_path_factory, "sigv",
+                               "sig_version", F.lit(999))
     with pytest.raises(Exception, match="signature version"):
         q.awaitTermination(300)
         raise AssertionError("query should have failed on tampered state")
@@ -925,37 +661,15 @@ def test_stream_ingest_all_junk_prefix_kg_rebuild(spark, tmp_path_factory):
 
 
 def test_stream_ingest_construction_switch_guard(spark, tmp_path_factory):
-    """Resuming a wordgram-gated out_dir with signatures='kernel' (or
-    vice versa) must fail loudly: the two constructions' signatures are
-    mutually incomparable, so a silent switch would keep every
-    cross-restart near-dup."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from driftmind_spark.streaming.ingest import stream_ingest
-    from driftmind_spark.streaming.stream import read_pages_stream
-    from driftmind_spark.synth import generate_pages
-
-    d = str(tmp_path_factory.mktemp("sigc_pages"))
-    pages, _ = generate_pages(20, min_sent=8, max_sent=12)
-    p0 = f"{d}/part-0.parquet"
-    pq.write_table(pages, p0)
-    os.utime(p0, (1_700_000_000, 1_700_000_000))
-
-    out = str(tmp_path_factory.mktemp("sigc_out"))
-    ckpt = str(tmp_path_factory.mktemp("sigc_ckpt"))
-    q = stream_ingest(read_pages_stream(spark, d, max_files_per_trigger=1),
-                      out, ckpt, signatures="wordgram")
-    q.awaitTermination(300)
-
-    pages2, _ = generate_pages(20, start=20, min_sent=8, max_sent=12)
-    p1 = f"{d}/part-1.parquet"
-    pq.write_table(pages2, p1)
-    os.utime(p1, (1_700_000_001, 1_700_000_001))
-
-    q = stream_ingest(read_pages_stream(spark, d, max_files_per_trigger=1),
-                      out, ckpt, signatures="kernel")
+    """State stamped by another MinHash construction (an out_dir gated
+    with word-gram signatures) must fail the resume loudly: the two
+    constructions' signatures are mutually incomparable, so a silent
+    resume would keep every cross-restart near-dup."""
+    q = _resume_tampered_state(
+        spark, tmp_path_factory, "sigc", "sig_params",
+        F.regexp_replace("sig_params", "^construction=kernel;",
+                         "construction=wordgram;"),
+    )
     with pytest.raises(Exception, match="construction=wordgram"):
         q.awaitTermination(300)
         raise AssertionError("query should have failed on switched "
@@ -973,27 +687,6 @@ def test_read_kg_snapshot_old_layout_fails_loudly(spark, tmp_path):
     os.makedirs(tmp_path / "nodes" / "snap_v=3")
     with pytest.raises(RuntimeError, match="pre-pairing"):
         latest_kg_snapshot_version(spark, str(tmp_path))
-
-
-def test_sig_banded_wordgram_null_text_gated(spark):
-    """NULL text folds to '' in the wordgram construction (family-wide
-    rule): the doc must still get banded rows — vanishing from the
-    signature table would silently exempt every NULL-text page from the
-    dedup gate, diverging from the kernel construction."""
-    from driftmind_spark.streaming.stateful import sig_banded
-
-    pages = spark.createDataFrame(
-        [("a", 1, None), ("b", 2, ""), ("c", 3, "real text with words")],
-        "url string, ts int, text string",
-    ).select("url", F.col("ts").cast("timestamp").alias("warc_ts"), "text")
-    banded = sig_banded(pages, num_perm=16, bands=4, shingle_k=3,
-                        signatures="wordgram")
-    urls = {r[0] for r in banded.select("url").distinct().collect()}
-    assert urls == {"a", "b", "c"}
-    # and the NULL doc's signature equals the empty doc's (same fold)
-    sa = banded.filter("url='a'").select("sig").first()[0]
-    sb = banded.filter("url='b'").select("sig").first()[0]
-    assert sa == sb
 
 
 def test_rebuild_kg_snapshot_pins_version(spark, tmp_path_factory):
