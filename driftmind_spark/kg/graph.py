@@ -18,9 +18,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .blocking import candidate_pairs, mentions_from_triples
 from .cc import canonical_mapping, connected_components
+from .lineage import N_BUCKETS
 from .linking import all_link_edges
 
 
@@ -28,7 +30,7 @@ def build_nodes(
     triples: DataFrame,
     aliases: DataFrame | None = None,
     embedding_dim: int = 64,
-    n_buckets: int = 8,
+    n_buckets: int = N_BUCKETS,
 ) -> tuple[DataFrame, tuple[DataFrame, ...]]:
     """triples -> canonical nodes table (mentions -> LSH candidate pairs
     -> link edges -> connected components -> canonical mapping), with
@@ -51,18 +53,33 @@ def build_nodes(
     components = connected_components(
         mentions.select("mention_id"), link_edges
     )
-    nodes = canonical_mapping(mentions, components).withColumn(
+    return _nodes_table(mentions, components, n_buckets), (mentions, link_edges)
+
+
+def _nodes_table(mentions: DataFrame, components: DataFrame,
+                 n_buckets: int) -> DataFrame:
+    return canonical_mapping(mentions, components).withColumn(
         "bucket",
         F.pmod(F.xxhash64("canonical_id"), F.lit(n_buckets)).cast("int"),
     )
-    return nodes, (mentions, link_edges)
+
+
+def planned_nodes_schema(triples: DataFrame) -> StructType:
+    """The schema :func:`build_nodes` yields, planned over an empty
+    component map: no Spark job (the linking itself collects the link
+    graph), so a resumed build re-reads a committed nodes table without
+    a footer-inference job."""
+    components = triples.sparkSession.createDataFrame(
+        [], "id long, component long")
+    return _nodes_table(
+        mentions_from_triples(triples), components, N_BUCKETS).schema
 
 
 def build_edges(
     triples: DataFrame,
     nodes: DataFrame,
     salt: int = 8,
-    n_buckets: int = 8,
+    n_buckets: int = N_BUCKETS,
 ) -> DataFrame:
     """triples resolved to canonical ids via the MATERIALIZED nodes
     table (re-deriving nodes per join side would re-run the whole

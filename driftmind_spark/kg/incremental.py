@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 
 from .blocking import banded_mentions, mentions_from_triples
 from .cc import connected_components
+from .lineage import N_BUCKETS
 from .linking import score_candidate_pairs
 
 # Bump on ANY change to the incremental dataflow that makes persisted
@@ -146,7 +147,7 @@ def incremental_nodes(
     delta_triples: DataFrame,
     aliases: DataFrame | None = None,
     embedding_dim: int = 64,
-    n_buckets: int = 8,
+    n_buckets: int = N_BUCKETS,
 ) -> tuple[DataFrame, DataFrame, DataFrame, tuple[DataFrame, ...]] | None:
     """Delta-linking + contracted CC.  Returns ``(nodes, new_bands,
     alias_hubs, caches)`` — the new snapshot's nodes table, the NEW

@@ -19,12 +19,18 @@ compensating-delete sagas (``Services/DocumentProcessingService.cs:
   metadata rows and its done-marker appear together or not at all, and
   no Spark job runs for bookkeeping;
 - ``max_warc_ts`` per bucket is the event-time watermark analog of the
-  reference's ``CreatedAt`` stamps (Models/DocumentChunk.cs:24-25).
+  reference's ``CreatedAt`` stamps (Models/DocumentChunk.cs:24-25);
+- the bucket count is part of the layout: a run records it with its
+  first commit, as a meta row ``(stage, -1, n_buckets, status=
+  'n_buckets')`` that rides in that commit's file, and resuming the run
+  under another count raises before any Spark job runs — bucket ``b``
+  of 8 and bucket ``b`` of 16 hold different urls, so mixing them
+  duplicates rows.
 
-:class:`Lineage` reads a run's rows once and answers every later
-question from memory.  The files use Spark's own Parquet layout (INT96
-timestamps), so Spark and pyarrow readers see one table whichever
-process wrote each file.
+:class:`Lineage` reads a run's rows once, on the driver, and answers
+every later question from memory.  The files use Spark's own Parquet
+layout (INT96 timestamps), so Spark and pyarrow readers see one table
+whichever process wrote each file.
 """
 
 from __future__ import annotations
@@ -44,7 +50,16 @@ LINEAGE_SCHEMA = (
 )
 
 
-def bucket_col(url_col: str = "url", n_buckets: int = 32):
+# The engine's one bucket count: every bucketed KG table (the batch
+# stages, nodes/edges, the streaming snapshots) defaults to it.  8 fits
+# a few-core box and corpora of thousands of pages: a 600-page build
+# wrote 624 files for 3.1 MB at 32 and 180 files for 2.2 MB at 8 (tiny
+# files carry a footer each and compress worse).  Very large corpora
+# pass ``n_buckets`` explicitly.
+N_BUCKETS = 8
+
+
+def bucket_col(url_col: str = "url", n_buckets: int = N_BUCKETS):
     """Deterministic url-range bucketing: pmod(xxhash64(url), n)."""
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
 
@@ -77,20 +92,63 @@ def bucket_metrics(buckets, ts_col: str | None) -> list[Column]:
 
 
 class Lineage:
-    """One run's committed lineage, read once (one Spark job, none when
-    the out_dir is new) and kept in memory; commits update both the
-    files and this copy."""
+    """One run's committed lineage, read once on the driver (no Spark
+    job) and kept in memory; commits update both the files and this
+    copy.  ``n_buckets``, the count the caller builds with, is checked
+    here and recorded with the run's first commit; a lineage that
+    predates the record mismatches when it holds a bucket outside
+    ``range(n_buckets)``."""
 
-    def __init__(self, spark: SparkSession, out_dir: str, run_id: str):
+    def __init__(self, spark: SparkSession, out_dir: str, run_id: str,
+                 n_buckets: int | None = None):
         self.spark, self.out_dir, self.run_id = spark, out_dir, run_id
-        self.rows: list[tuple[str, int, int]] = []
-        if _path_exists(spark, lineage_path(out_dir)):
-            self.rows = [
-                tuple(r) for r in read_lineage(spark, out_dir)
-                .filter((F.col("run_id") == run_id)
-                        & (F.col("status") == "done"))
-                .select("stage", "bucket", "row_count").collect()
-            ]
+        self.n_buckets = n_buckets
+        rows = self._read()
+        self.rows: list[tuple[str, int, int]] = [
+            (s, b, n) for s, b, n, status in rows if status == "done"]
+        self.bucket_counts = {
+            n for _, _, n, status in rows if status == "n_buckets"}
+        if n_buckets is not None:
+            self._check_bucket_count(n_buckets)
+
+    def _read(self) -> list[tuple[str, int, int, str]]:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        fs, directory = _fs(self.spark, lineage_path(self.out_dir))
+        if not fs.exists(directory):
+            return []
+        read_bytes = self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray
+        rows = []
+        for entry in fs.listStatus(directory):
+            if entry.getPath().getName().startswith(("_", ".")):
+                continue  # uncommitted temp files, _SUCCESS, checksums
+            stream = fs.open(entry.getPath())
+            try:
+                data = read_bytes(stream)
+            finally:
+                stream.close()
+            rows += pq.read_table(pa.BufferReader(data), columns=[
+                "run_id", "stage", "bucket", "row_count", "status",
+            ]).to_pylist()
+        return [
+            (r["stage"], r["bucket"], r["row_count"], r["status"])
+            for r in rows if r["run_id"] == self.run_id
+        ]
+
+    def _check_bucket_count(self, n_buckets: int) -> None:
+        stray = {b for _, b, _ in self.rows if b >= n_buckets}
+        if self.bucket_counts - {n_buckets} or stray:
+            committed = (f"{min(self.bucket_counts)} buckets"
+                         if self.bucket_counts
+                         else f"buckets up to {max(stray)}")
+            raise ValueError(
+                f"run {self.run_id!r} under {self.out_dir} was committed "
+                f"with {committed}, resumed with n_buckets={n_buckets}: "
+                "bucket b holds different urls under another count, so the "
+                "resume would duplicate rows; resume with the committed "
+                "count or start a fresh out_dir or run_id"
+            )
 
     def completed_buckets(self, stage: str) -> set[int]:
         return {b for s, b, _ in self.rows if s == stage}
@@ -129,6 +187,10 @@ class Lineage:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        status = ["done"] * len(rows)
+        if self.n_buckets is not None and not self.bucket_counts and rows:
+            rows = [(rows[0][0], -1, self.n_buckets, None)] + rows
+            status = ["n_buckets"] + status
         table = pa.table({
             "run_id": pa.array([self.run_id] * len(rows), pa.string()),
             "stage": pa.array([r[0] for r in rows], pa.string()),
@@ -136,13 +198,12 @@ class Lineage:
             "row_count": pa.array([r[2] for r in rows], pa.int64()),
             "max_warc_ts": pa.array([r[3] for r in rows], pa.int64())
             .cast(pa.timestamp("us")),
-            "status": pa.array(["done"] * len(rows), pa.string()),
+            "status": pa.array(status, pa.string()),
         })
         buf = io.BytesIO()
         pq.write_table(table, buf, use_deprecated_int96_timestamps=True)
+        fs, directory = _fs(self.spark, lineage_path(self.out_dir))
         path = self.spark._jvm.org.apache.hadoop.fs.Path
-        directory = path(lineage_path(self.out_dir))
-        fs = directory.getFileSystem(self.spark._jsc.hadoopConfiguration())
         name = f"commit-{uuid.uuid4().hex}.parquet"
         tmp = path(directory, "_" + name)
         stream = fs.create(tmp, True)
@@ -152,4 +213,15 @@ class Lineage:
             stream.close()
         if not fs.rename(tmp, path(directory, name)):
             raise OSError(f"lineage commit rename failed under {directory}")
-        self.rows += [(s, b, n) for s, b, n, _ in rows]
+        for (s, b, n, _), st in zip(rows, status):
+            if st == "done":
+                self.rows.append((s, b, n))
+            else:
+                self.bucket_counts.add(n)
+
+
+def _fs(spark: SparkSession, target: str):
+    """The Hadoop filesystem and path of ``target`` (local, HDFS and
+    object stores alike)."""
+    directory = spark._jvm.org.apache.hadoop.fs.Path(target)
+    return directory.getFileSystem(spark._jsc.hadoopConfiguration()), directory

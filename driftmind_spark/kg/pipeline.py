@@ -34,10 +34,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.chunking import build_chunks, extract_text_table
 from . import lineage as ln
-from .graph import build_edges, build_nodes
+from .graph import build_edges, build_nodes, planned_nodes_schema
 from .triples import extract_triples_df
 
 
@@ -68,25 +69,26 @@ def _write_bucketed(df: DataFrame, path: str, pre_clustered: bool = False,
 
 
 def _run_bucketed(lineage: ln.Lineage, stage: str, n_buckets: int, pages,
-                  build, path: str, pre_clustered: bool = False) -> None:
+                  build, path: str, pre_clustered: bool = False) -> StructType:
     """One bucketed stage: ``build`` maps the not-yet-committed buckets'
     pages (with a ``bucket`` column) to the stage output, one write
     stores it, and the buckets commit with the counts the write
     observed.  The todo set is ``range(n_buckets)`` minus the committed
-    buckets, so deciding it costs no Spark job."""
+    buckets, so deciding it costs no Spark job.  Returns the output's
+    schema, planned even when every bucket is already committed."""
     buckets = sorted(set(range(n_buckets)) - lineage.completed_buckets(stage))
-    if not buckets:
-        return
     todo = pages.withColumn("bucket", ln.bucket_col("url", n_buckets))
     if len(buckets) < n_buckets:
         todo = todo.filter(F.col("bucket").isin(buckets))
     out = build(todo)
-    observed = _write_bucketed(
-        out, path, pre_clustered=pre_clustered,
-        observe=ln.bucket_metrics(
-            buckets, "warc_ts" if "warc_ts" in out.columns else None),
-    )
-    lineage.commit_buckets(stage, buckets, observed)
+    if buckets:
+        observed = _write_bucketed(
+            out, path, pre_clustered=pre_clustered,
+            observe=ln.bucket_metrics(
+                buckets, "warc_ts" if "warc_ts" in out.columns else None),
+        )
+        lineage.commit_buckets(stage, buckets, observed)
+    return out.schema
 
 
 def run(
@@ -94,7 +96,7 @@ def run(
     corpus_dir: str,
     out_dir: str,
     run_id: str = "run-1",
-    n_buckets: int = 32,
+    n_buckets: int = ln.N_BUCKETS,
     embedding_dim: int = 64,
     chunk_size: int = 300,
     overlap: int = 20,
@@ -138,6 +140,15 @@ def run(
     ``corpus_dedup`` runs with its default signature and band
     parameters.
 
+    Every bucketed table is written in ``n_buckets`` url-hash buckets;
+    the default is the engine's one bucket count, ``kg.lineage.N_BUCKETS``
+    (8, sized for a few-core box and thousands of pages; very large
+    corpora pass ``n_buckets`` explicitly).  The count is part of the
+    run's lineage: it is recorded with the run's first commit, and
+    resuming a ``run_id`` under another count raises ``ValueError``
+    before any Spark job runs, since bucket ``b`` holds different urls
+    under each count.
+
     Every Spark job the build runs, from the first read of the corpus
     on, carries a ``dm:<run_id>:<stage>`` job description."""
     def _desc(stage: str) -> None:
@@ -146,6 +157,14 @@ def run(
         # skew metrics attribute to pipeline stages by name.
         spark.sparkContext.setJobDescription(f"dm:{run_id}:{stage}")
 
+    def _read(path: str, schema: StructType) -> DataFrame:
+        # a stage output is re-read with the schema it was written (or,
+        # on a resume, planned) with: a bare spark.read.parquet runs a
+        # footer-inference Spark job for every re-read
+        return spark.read.schema(schema).parquet(path)
+
+    # checked against the committed lineage before the first Spark job
+    lineage = ln.Lineage(spark, out_dir, run_id, n_buckets)
     # the corpus reads' schema-inference jobs belong to the extract stage
     _desc("extract")
     pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
@@ -168,14 +187,12 @@ def run(
     # and triple extraction both consume it, so the html column — the
     # bulk of the bytes at 100 TB — is read and boilerplate-stripped once.
     extracted_path = os.path.join(out_dir, "extracted")
-    lineage = ln.Lineage(spark, out_dir, run_id)
-    _run_bucketed(
+    extracted = _read(extracted_path, _run_bucketed(
         lineage, "extract", n_buckets, pages,
         lambda todo: extract_text_table(todo).withColumn(
             "bucket", ln.bucket_col("url", n_buckets)),
         extracted_path,
-    )
-    extracted = spark.read.parquet(extracted_path)
+    ))
     metrics["extracted"] = lineage.committed_row_count("extract")
     _mark("extract")
     if fail_after_stage == "extract":
@@ -217,7 +234,8 @@ def run(
                                      pre_clustered=True)["rows"]
             lineage.commit_global("quality", n_kept,
                                   {"quality_dropped": n_dropped})
-        extracted = spark.read.parquet(quality_path)
+        # the kept rows keep the extracted table's columns
+        extracted = _read(quality_path, extracted.schema)
         metrics["quality_kept"] = lineage.committed_row_count("quality")
         metrics["quality_dropped"] = lineage.committed_row_count(
             "quality_dropped")
@@ -271,7 +289,7 @@ def run(
             # non-keepers come from the durable audit table, not the live
             # lineage — the pairs/CC work is never recomputed past here
             non_keepers = (
-                spark.read.parquet(audit_path)
+                _read(audit_path, clusters.schema)
                 .filter(~F.col("is_keeper"))
                 .select(F.col("doc_id").alias("url"))
             )
@@ -281,7 +299,8 @@ def run(
                 "dedup_sig_version": MINHASH_SIG_VERSION,
                 "dedup_dropped": n_dropped,
             })
-        extracted = spark.read.parquet(dedup_path)
+        # the anti-join keeps the extracted table's columns (url first)
+        extracted = _read(dedup_path, extracted.schema)
         metrics["dedup_kept"] = lineage.committed_row_count("dedup")
         metrics["dedup_dropped"] = lineage.committed_row_count("dedup_dropped")
         _mark("dedup")
@@ -293,7 +312,7 @@ def run(
     chunks_path = os.path.join(out_dir, "chunks")
     # input is the bucket-partitioned extracted table mapped 1:1 -> rows
     # arrive clustered; skip the write-side shuffle
-    _run_bucketed(
+    chunks_schema = _run_bucketed(
         lineage, "chunks", n_buckets, extracted,
         lambda todo: build_chunks(
             todo, chunk_size, overlap, embedding_dim,
@@ -325,7 +344,7 @@ def run(
         if not lineage.stage_marker_done("chunk_dedup"):
             from ..operators.passages import chunk_dedup as _chunk_dedup
 
-            chunks_all = spark.read.parquet(chunks_path)
+            chunks_all = _read(chunks_path, chunks_schema)
             # two actions over the fingerprint join = two scans of the
             # chunks parquet — deliberate, same rationale as the quality
             # stage: `res` carries chunk content + embeddings, and
@@ -356,13 +375,12 @@ def run(
     # ---- stage 2: triples (bucketed, resumable) -----------------------------
     _desc("triples")
     triples_path = os.path.join(out_dir, "triples")
-    _run_bucketed(
+    triples = _read(triples_path, _run_bucketed(
         lineage, "triples", n_buckets, extracted,
         lambda todo: extract_triples_df(todo, use_text_column=True).withColumn(
             "bucket", ln.bucket_col("url", n_buckets)),
         triples_path, pre_clustered=True,
-    )
-    triples = spark.read.parquet(triples_path)
+    ))
     metrics["triples"] = lineage.committed_row_count("triples")
     _mark("triples")
     if fail_after_stage == "triples":
@@ -371,7 +389,9 @@ def run(
     # ---- stage 3: linking + canonicalization (global) -----------------------
     _desc("nodes")
     nodes_path = os.path.join(out_dir, "nodes")
-    if not lineage.stage_marker_done("nodes"):
+    if lineage.stage_marker_done("nodes"):
+        nodes_schema = planned_nodes_schema(triples)
+    else:
         # dataflow lives in kg/graph.py — shared with the streaming
         # rebuild (streaming/ingest.py), so the two paths cannot drift
         nodes, caches = build_nodes(
@@ -389,7 +409,8 @@ def run(
                               {"nodes_components": observed["components"]})
         for c in caches:
             c.unpersist()
-    nodes = spark.read.parquet(nodes_path)
+        nodes_schema = nodes.schema
+    nodes = _read(nodes_path, nodes_schema)
     metrics["nodes"] = lineage.committed_row_count("nodes")
     metrics["components"] = lineage.committed_row_count("nodes_components")
     _mark("nodes")

@@ -943,21 +943,22 @@ def corpus_dedup(
        O(cluster²) candidate pairs.
     2. NEAR on representatives: ``minhash_lsh_verified_pairs`` (capped
        banding + signature-agreement verification).
-    3. ``dedup_resolution`` closes verified pairs transitively at the
-       representative level (min-rep-id keeper = min-doc-id of the whole
-       merged cluster, since each rep is already its group's minimum).
-    4. Every doc maps through its text-group rep to the final keeper;
-       cluster sizes are recounted at DOC level.
+    3. ONE ``dedup_resolution`` over every doc closes the verified rep
+       pairs together with the exact groups, each group given as
+       ``(rep_id, doc_id)`` edges: keeper = the minimum doc id of the
+       merged cluster, cluster sizes counted at doc level.
 
     Returns ``(id_col, keeper_id, is_keeper, cluster_size)`` over every
     input doc, exactly like ``dedup_resolution``.
 
     Scale shape: one text-bearing shuffle (the md5 group-by, partial-
     aggregated map-side so the wire carries ~unique texts); signatures/
-    banding/verification touch representatives only; the doc→rep→keeper
-    mapping joins narrow (id, hash) rows.  md5(text) collision odds are
-    ~2^-64 at 10^12 docs — acceptable for dedup (a collision merges two
-    unrelated docs, it cannot lose data silently).
+    banding/verification touch representatives only; the exact-group
+    edges join narrow (id, hash) rows and are built once, inside the
+    closure's edge collection, so writing the resolution afterwards
+    scans only the doc ids.  md5(text) collision odds are ~2^-64 at
+    10^12 docs — acceptable for dedup (a collision merges two unrelated
+    docs, it cannot lose data silently).
 
     NULL text is treated as empty: ``md5(NULL)`` is NULL and every inner
     join here is on the text hash, so without the coalesce a null-text
@@ -983,21 +984,10 @@ def corpus_dedup(
     pairs = minhash_lsh_verified_pairs(
         reps, min_agreement=min_agreement, **sig_params,
     )
-    rep_res = dedup_resolution(
-        reps.select("doc_id"), pairs, small_graph_threshold=small_graph_threshold
-    )
-    doc_rep = ids.select("doc_id", F.md5("text").alias("text_md5")).join(
+    exact = ids.select("doc_id", F.md5("text").alias("text_md5")).join(
         groups.select("text_md5", "rep_id"), "text_md5"
-    )
-    assigned = doc_rep.join(
-        rep_res.select(F.col("doc_id").alias("rep_id"), "keeper_id"), "rep_id"
-    )
-    sizes = assigned.groupBy("keeper_id").agg(
-        F.count("*").alias("cluster_size")
-    )
-    return assigned.join(sizes, "keeper_id").select(
-        F.col("doc_id").alias(id_col),
-        "keeper_id",
-        (F.col("doc_id") == F.col("keeper_id")).alias("is_keeper"),
-        "cluster_size",
-    )
+    ).select(F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("doc_b"))
+    return dedup_resolution(
+        ids.select("doc_id"), pairs.unionByName(exact),
+        small_graph_threshold=small_graph_threshold,
+    ).withColumnRenamed("doc_id", id_col)

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..kg.lineage import N_BUCKETS, bucket_col
 from .stateful import _fold_bucket, sig_banded
 from .stream import _write_batch_idempotent
 
@@ -359,7 +360,7 @@ def rebuild_kg_snapshot(
     out_dir: str,
     version: int,
     aliases: DataFrame | None = None,
-    n_buckets: int = 8,
+    n_buckets: int = N_BUCKETS,
     embedding_dim: int = 64,
     salt: int = 8,
     triples_schema=None,
@@ -460,7 +461,7 @@ def rebuild_kg_snapshot_incremental(
     out_dir: str,
     version: int,
     aliases: DataFrame | None = None,
-    n_buckets: int = 8,
+    n_buckets: int = N_BUCKETS,
     embedding_dim: int = 64,
     salt: int = 8,
     triples_schema=None,
@@ -638,7 +639,7 @@ def stream_ingest(
     kg_every: int | None = None,
     kg_incremental: bool = False,
     aliases: DataFrame | None = None,
-    n_buckets: int = 8,
+    n_buckets: int = N_BUCKETS,
     embedding_dim: int = 64,
     salt: int = 8,
 ):
@@ -694,7 +695,6 @@ def stream_ingest(
     path's (cap crossings and parameter drift self-heal via a full
     rebuild; kg/incremental.py).
     """
-    from ..kg.lineage import bucket_col
     from ..operators.chunking import build_chunks
 
     if kg_every is not None and not triples:

@@ -295,6 +295,109 @@ def test_resume_skips_completed_buckets(spark, pages_dir, tmp_path_factory):
     assert dupes == 0
 
 
+# ---- bucket count: one default, checked on resume ---------------------------
+
+def _jobs_and_files(spark, out, call):
+    """Run ``call`` in its own job group; return its Spark job count and
+    the (path, size, mtime) listing of ``out`` before and after."""
+    import uuid
+
+    def listing():
+        return sorted(
+            (os.path.join(d, f), os.path.getsize(os.path.join(d, f)),
+             os.path.getmtime(os.path.join(d, f)))
+            for d, _, fs in os.walk(out) for f in fs
+        )
+
+    before = listing()
+    sc = spark.sparkContext
+    group = f"kg-guard-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return (len(sc.statusTracker().getJobIdsForGroup(group)), before,
+            listing())
+
+
+@pytest.fixture(scope="module")
+def small_corpus(tmp_path_factory):
+    from driftmind_spark.synth import write_corpus
+
+    out = str(tmp_path_factory.mktemp("small_corpus"))
+    write_corpus(out, n=40, seed=5)
+    return out
+
+
+@pytest.mark.parametrize("built,resumed", [(8, 16), (16, 8)])
+def test_resume_under_other_bucket_count_raises(
+        spark, small_corpus, tmp_path_factory, built, resumed):
+    """Bucket b holds different urls under another count, so a resume
+    that mixes counts would duplicate rows: it must raise before any
+    Spark job and write nothing."""
+    out = str(tmp_path_factory.mktemp("kg_nbuckets"))
+    with pytest.raises(StageKill):
+        run(spark, small_corpus, out, embedding_dim=32, n_buckets=built,
+            fail_after_stage="chunks")
+
+    def resume():
+        with pytest.raises(ValueError, match=f"{built} buckets.*"
+                                             f"n_buckets={resumed}"):
+            run(spark, small_corpus, out, embedding_dim=32,
+                n_buckets=resumed)
+
+    jobs, before, after = _jobs_and_files(spark, out, resume)
+    assert jobs == 0
+    assert after == before
+    # the recorded count rides in the first commit, once
+    lin = spark.read.parquet(f"{out}/lineage")
+    recorded = lin.filter(F.col("status") == "n_buckets").collect()
+    assert [(r["stage"], r["bucket"], r["row_count"]) for r in recorded] \
+        == [("extract", -1, built)]
+
+
+def test_resume_unrecorded_count_with_stray_bucket_raises(
+        spark, small_corpus, tmp_path_factory):
+    """A lineage that predates the recorded count is a mismatch when a
+    committed bucket lies outside range(n_buckets)."""
+    from driftmind_spark.kg import lineage as ln
+
+    out = str(tmp_path_factory.mktemp("kg_legacy_buckets"))
+    ln.Lineage(spark, out, "run-1").commit_buckets(
+        "extract", [3, 12], {"rows_3": 2, "rows_12": 1})
+    assert not ln.Lineage(spark, out, "run-1").bucket_counts
+
+    def resume():
+        with pytest.raises(ValueError, match="buckets up to 12"):
+            run(spark, small_corpus, out, embedding_dim=32, n_buckets=8)
+
+    jobs, before, after = _jobs_and_files(spark, out, resume)
+    assert jobs == 0 and after == before
+    # every committed bucket inside range(n_buckets): no mismatch
+    assert ln.Lineage(spark, out, "run-1", 13).completed_buckets(
+        "extract") == {3, 12}
+
+
+def test_default_bucket_count_is_one_constant():
+    import inspect
+
+    from driftmind_spark.kg import graph, incremental
+    from driftmind_spark.kg import lineage as ln
+    from driftmind_spark.kg import pipeline
+    from driftmind_spark.streaming import ingest
+
+    entry_points = [
+        pipeline.run, ln.bucket_col, graph.build_nodes, graph.build_edges,
+        incremental.incremental_nodes, ingest.stream_ingest,
+        ingest.rebuild_kg_snapshot, ingest.rebuild_kg_snapshot_incremental,
+    ]
+    for fn in entry_points:
+        default = inspect.signature(fn).parameters["n_buckets"].default
+        assert default == ln.N_BUCKETS, fn.__qualname__
+    assert ln.N_BUCKETS == 8
+
+
 # ---- corpus-level near-dup dedup stage (round 5) ---------------------------
 
 @pytest.fixture(scope="module")
@@ -731,8 +834,9 @@ def test_quality_filter_partial_collision_fails_loudly(spark):
 # junk and clones ran 211 Spark jobs when every stage read its output
 # back, probed isEmpty before each write and kept lineage as Spark
 # appends; with one observed write per table and driver-side lineage it
-# runs 76.
-MAX_BUILD_JOBS = 100
+# ran 76, and 67 once stage re-reads carry their schema and corpus
+# dedup resolves its clusters once.  The budget is 67 plus 10%.
+MAX_BUILD_JOBS = 74
 
 
 def test_build_job_budget(spark, tmp_path_factory):
