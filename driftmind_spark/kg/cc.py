@@ -84,7 +84,9 @@ def connected_components(
     small_graph_threshold: int = 200_000,
 ) -> DataFrame:
     """(id) + (src, dst) -> (id, component) with component = min id of
-    the connected component (isolated vertices map to themselves).
+    the connected component (isolated vertices map to themselves); any
+    other vertex columns pass through after ``component``, so a caller
+    that keys per-vertex data by id needs no join back.
     ``stats``, if given, receives {'rounds': n} for scaling assertions.
 
     Size-adaptive (the broadcast-threshold philosophy applied to CC):
@@ -137,10 +139,7 @@ def connected_components(
             StructField("id", id_type), StructField("component", id_type),
         ])
         label_df = spark.createDataFrame(labels, label_schema)
-        ids = vertices.select(F.col(id_col).alias("id"))
-        return ids.join(F.broadcast(label_df), "id", "left").select(
-            "id", F.coalesce("component", F.col("id")).alias("component")
-        )
+        return _label(vertices, id_col, F.broadcast(label_df))
     if stats is not None:
         stats["mode"] = "alternating_star"
     e = e.localCheckpoint()
@@ -162,9 +161,16 @@ def connected_components(
         )
     # fixpoint edges form disjoint stars: src=child -> dst=root
     labels = e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
-    ids = vertices.select(F.col(id_col).alias("id"))
+    return _label(vertices, id_col, labels)
+
+
+def _label(vertices: DataFrame, id_col: str, labels: DataFrame) -> DataFrame:
+    """Vertices left-joined to their (id, component) labels; an
+    unlabeled (isolated) vertex is its own component."""
+    ids = vertices.withColumnRenamed(id_col, "id")
+    rest = [c for c in ids.columns if c != "id"]
     return ids.join(labels, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
+        "id", F.coalesce("component", F.col("id")).alias("component"), *rest
     )
 
 

@@ -20,17 +20,18 @@ compensating-delete sagas (``Services/DocumentProcessingService.cs:
   no Spark job runs for bookkeeping;
 - ``max_warc_ts`` per bucket is the event-time watermark analog of the
   reference's ``CreatedAt`` stamps (Models/DocumentChunk.cs:24-25);
-- the bucket count is part of the layout: a run records it with its
-  first commit, as a meta row ``(stage, -1, n_buckets, status=
-  'n_buckets')`` that rides in that commit's file, and resuming the run
-  under another count raises before any Spark job runs — bucket ``b``
-  of 8 and bucket ``b`` of 16 hold different urls, so mixing them
-  duplicates rows.
+- the bucket count is part of the out_dir's layout: it is recorded
+  with the first commit into the out_dir, as a meta row ``(stage, -1,
+  n_buckets, status='n_buckets')`` that rides in that commit's file,
+  and a run of ANY run_id under another count raises before any Spark
+  job runs — bucket ``b`` of 8 and bucket ``b`` of 16 hold different
+  urls, and dynamic partition overwrite leaves the other count's bucket
+  directories in place, so mixing counts duplicates rows.
 
-:class:`Lineage` reads a run's rows once, on the driver, and answers
-every later question from memory.  The files use Spark's own Parquet
-layout (INT96 timestamps), so Spark and pyarrow readers see one table
-whichever process wrote each file.
+:class:`Lineage` reads the out_dir's rows once, on the driver, and
+answers every later question from memory.  The files use Spark's own
+Parquet layout (INT96 timestamps), so Spark and pyarrow readers see one
+table whichever process wrote each file.
 """
 
 from __future__ import annotations
@@ -39,10 +40,8 @@ import io
 import os
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-
-from ..sources.tables import _path_exists
 
 LINEAGE_SCHEMA = (
     "run_id string, stage string, bucket int, row_count long, "
@@ -68,13 +67,6 @@ def lineage_path(out_dir: str) -> str:
     return os.path.join(out_dir, "lineage")
 
 
-def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    path = lineage_path(out_dir)
-    if not _path_exists(spark, path):
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
-
-
 def bucket_metrics(buckets, ts_col: str | None) -> list[Column]:
     """Named aggregates for a bucketed stage write to observe: the row
     count ``rows_<b>`` and the max ``ts_col`` ``ts_<b>`` (as epoch
@@ -95,8 +87,9 @@ class Lineage:
     """One run's committed lineage, read once on the driver (no Spark
     job) and kept in memory; commits update both the files and this
     copy.  ``n_buckets``, the count the caller builds with, is checked
-    here and recorded with the run's first commit; a lineage that
-    predates the record mismatches when it holds a bucket outside
+    against every run of the out_dir — the tables are shared — and
+    recorded with the out_dir's first commit; a lineage that predates
+    the record mismatches when any run holds a bucket outside
     ``range(n_buckets)``."""
 
     def __init__(self, spark: SparkSession, out_dir: str, run_id: str,
@@ -105,13 +98,17 @@ class Lineage:
         self.n_buckets = n_buckets
         rows = self._read()
         self.rows: list[tuple[str, int, int]] = [
-            (s, b, n) for s, b, n, status in rows if status == "done"]
+            (s, b, n) for r, s, b, n, status in rows
+            if r == run_id and status == "done"]
         self.bucket_counts = {
-            n for _, _, n, status in rows if status == "n_buckets"}
+            n for _, _, _, n, status in rows if status == "n_buckets"}
+        self.max_bucket = max(
+            (b for _, _, b, _, status in rows if status == "done"),
+            default=-1)
         if n_buckets is not None:
             self._check_bucket_count(n_buckets)
 
-    def _read(self) -> list[tuple[str, int, int, str]]:
+    def _read(self) -> list[tuple[str, str, int, int, str]]:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -132,22 +129,22 @@ class Lineage:
                 "run_id", "stage", "bucket", "row_count", "status",
             ]).to_pylist()
         return [
-            (r["stage"], r["bucket"], r["row_count"], r["status"])
-            for r in rows if r["run_id"] == self.run_id
+            (r["run_id"], r["stage"], r["bucket"], r["row_count"],
+             r["status"])
+            for r in rows
         ]
 
     def _check_bucket_count(self, n_buckets: int) -> None:
-        stray = {b for _, b, _ in self.rows if b >= n_buckets}
-        if self.bucket_counts - {n_buckets} or stray:
-            committed = (f"{min(self.bucket_counts)} buckets"
-                         if self.bucket_counts
-                         else f"buckets up to {max(stray)}")
+        other = self.bucket_counts - {n_buckets}
+        if other or self.max_bucket >= n_buckets:
+            committed = (f"{min(other)} buckets" if other
+                         else f"buckets up to {self.max_bucket}")
             raise ValueError(
-                f"run {self.run_id!r} under {self.out_dir} was committed "
-                f"with {committed}, resumed with n_buckets={n_buckets}: "
-                "bucket b holds different urls under another count, so the "
-                "resume would duplicate rows; resume with the committed "
-                "count or start a fresh out_dir or run_id"
+                f"{self.out_dir} was committed with {committed}, run "
+                f"{self.run_id!r} builds with n_buckets={n_buckets}: bucket "
+                "b holds different urls under another count, so the run "
+                "would duplicate rows; build with the committed count or "
+                "start a fresh out_dir"
             )
 
     def completed_buckets(self, stage: str) -> set[int]:

@@ -144,10 +144,11 @@ def run(
     the default is the engine's one bucket count, ``kg.lineage.N_BUCKETS``
     (8, sized for a few-core box and thousands of pages; very large
     corpora pass ``n_buckets`` explicitly).  The count is part of the
-    run's lineage: it is recorded with the run's first commit, and
-    resuming a ``run_id`` under another count raises ``ValueError``
-    before any Spark job runs, since bucket ``b`` holds different urls
-    under each count.
+    out_dir's layout: it is recorded with the first commit into
+    ``out_dir``, and a run of any ``run_id`` under another count raises
+    ``ValueError`` before any Spark job runs, since bucket ``b`` holds
+    different urls under each count and the tables are shared by every
+    run; to change the count, start a fresh ``out_dir``.
 
     Every Spark job the build runs, from the first read of the corpus
     on, carries a ``dm:<run_id>:<stage>`` job description."""

@@ -943,28 +943,33 @@ def corpus_dedup(
        O(cluster²) candidate pairs.
     2. NEAR on representatives: ``minhash_lsh_verified_pairs`` (capped
        banding + signature-agreement verification).
-    3. ONE ``dedup_resolution`` over every doc closes the verified rep
-       pairs together with the exact groups, each group given as
-       ``(rep_id, doc_id)`` edges: keeper = the minimum doc id of the
-       merged cluster, cluster sizes counted at doc level.
+    3. Connected components close the verified pairs transitively at
+       the representative level (min-rep-id keeper = min-doc-id of the
+       whole merged cluster, since each rep is already its group's
+       minimum); each group carries its doc count, so a cluster's size
+       is the sum over its reps.
+    4. Every doc maps through its text group to the final keeper.
 
     Returns ``(id_col, keeper_id, is_keeper, cluster_size)`` over every
     input doc, exactly like ``dedup_resolution``.
 
     Scale shape: one text-bearing shuffle (the md5 group-by, partial-
     aggregated map-side so the wire carries ~unique texts); signatures/
-    banding/verification touch representatives only; the exact-group
-    edges join narrow (id, hash) rows and are built once, inside the
-    closure's edge collection, so writing the resolution afterwards
-    scans only the doc ids.  md5(text) collision odds are ~2^-64 at
-    10^12 docs — acceptable for dedup (a collision merges two unrelated
-    docs, it cannot lose data silently).
+    banding/verification and the closure touch representatives only,
+    so the CC edge count (and its driver/distributed switch at
+    ``small_graph_threshold``) grows with near-dup pairs, never with
+    verbatim copies; the doc→keeper mapping joins narrow (id, hash)
+    rows and needs no doc-level recount.  md5(text) collision odds are
+    ~2^-64 at 10^12 docs — acceptable for dedup (a collision merges two
+    unrelated docs, it cannot lose data silently).
 
     NULL text is treated as empty: ``md5(NULL)`` is NULL and every inner
     join here is on the text hash, so without the coalesce a null-text
     doc would silently vanish from the output (neither keeper nor
     duplicate) — a caller rebuilding the corpus from ``filter(is_keeper)``
     would lose it without any error."""
+    from ..kg.cc import connected_components
+
     sig_params = corpus_dedup_params(
         num_perm=num_perm, bands=bands, shingle_k=shingle_k,
         max_bucket_size=max_bucket_size, portable=portable,
@@ -979,15 +984,29 @@ def corpus_dedup(
         # min_by partial-aggregates map-side, so the shuffle carries one
         # candidate text per distinct md5, not every copy
         F.min_by("text", "doc_id").alias("text"),
+        F.count("*").alias("n_docs"),
     )
     reps = groups.select(F.col("rep_id").alias("doc_id"), "text")
     pairs = minhash_lsh_verified_pairs(
         reps, min_agreement=min_agreement, **sig_params,
     )
-    exact = ids.select("doc_id", F.md5("text").alias("text_md5")).join(
-        groups.select("text_md5", "rep_id"), "text_md5"
-    ).select(F.col("rep_id").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    return dedup_resolution(
-        ids.select("doc_id"), pairs.unionByName(exact),
+    # the groups ride through the closure as vertex columns: each rep
+    # comes back with its keeper, text hash and doc count, no join back
+    rep_keeper = connected_components(
+        groups.select(F.col("rep_id").alias("mention_id"), "text_md5",
+                      "n_docs"),
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
         small_graph_threshold=small_graph_threshold,
-    ).withColumnRenamed("doc_id", id_col)
+    ).withColumnRenamed("component", "keeper_id")
+    sizes = rep_keeper.groupBy("keeper_id").agg(
+        F.sum("n_docs").alias("cluster_size")
+    )
+    assigned = ids.select("doc_id", F.md5("text").alias("text_md5")).join(
+        rep_keeper.select("text_md5", "keeper_id"), "text_md5"
+    )
+    return assigned.join(sizes, "keeper_id").select(
+        F.col("doc_id").alias(id_col),
+        "keeper_id",
+        (F.col("doc_id") == F.col("keeper_id")).alias("is_keeper"),
+        "cluster_size",
+    )

@@ -357,6 +357,25 @@ def test_resume_under_other_bucket_count_raises(
         == [("extract", -1, built)]
 
 
+def test_new_run_id_under_other_bucket_count_raises(
+        spark, small_corpus, tmp_path_factory):
+    """The count belongs to the out_dir, not to one run: a new run_id
+    under another count would overwrite buckets 0..7 and leave the old
+    count's other bucket directories in every table."""
+    out = str(tmp_path_factory.mktemp("kg_nbuckets_new_run"))
+    run(spark, small_corpus, out, run_id="a", embedding_dim=32,
+        n_buckets=16)
+
+    def other_run():
+        with pytest.raises(ValueError, match="16 buckets.*n_buckets=8"):
+            run(spark, small_corpus, out, run_id="b", embedding_dim=32,
+                n_buckets=8)
+
+    jobs, before, after = _jobs_and_files(spark, out, other_run)
+    assert jobs == 0
+    assert after == before
+
+
 def test_resume_unrecorded_count_with_stray_bucket_raises(
         spark, small_corpus, tmp_path_factory):
     """A lineage that predates the recorded count is a mismatch when a
@@ -835,7 +854,8 @@ def test_quality_filter_partial_collision_fails_loudly(spark):
 # back, probed isEmpty before each write and kept lineage as Spark
 # appends; with one observed write per table and driver-side lineage it
 # ran 76, and 67 once stage re-reads carry their schema and corpus
-# dedup resolves its clusters once.  The budget is 67 plus 10%.
+# dedup carries each text group's doc count through the closure.  The
+# budget is 67 plus 10%.
 MAX_BUILD_JOBS = 74
 
 

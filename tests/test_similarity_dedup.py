@@ -666,6 +666,45 @@ def test_corpus_dedup_exact_then_near(spark):
     assert got["d9"]["is_keeper"] and got["d9"]["cluster_size"] == 1
 
 
+def test_corpus_dedup_closes_at_representative_level(spark, monkeypatch):
+    """Verbatim copies never reach the closure: its edge list holds only
+    the verified pairs between representatives, so the driver/distributed
+    CC switch does not count copies, and both CC paths resolve alike
+    with doc-level cluster sizes."""
+    from driftmind_spark.kg import cc
+
+    real, modes = cc.connected_components, []
+
+    def spy(vertices, edges, **kw):
+        stats = {}
+        out = real(vertices, edges, stats=stats, **kw)
+        modes.append(stats["mode"])
+        return out
+
+    monkeypatch.setattr(cc, "connected_components", spy)
+    rng = np.random.RandomState(53)
+    vocab = np.array(["amber", "birch", "cedar", "delta", "elder",
+                      "fjord", "grove", "heath", "inlet", "juniper"])
+    base = _sentences(rng, 25, vocab)
+    docs = spark.createDataFrame(
+        [(f"c{i:02d}", base) for i in range(40)]               # exact x40
+        + [("n0", base + " " + _sentences(rng, 1, vocab)),     # near
+           ("x0", _sentences(rng, 25, vocab))],                # singleton
+        "doc_id string, text string",
+    )
+    on_driver = sorted(
+        map(tuple, dd.corpus_dedup(docs, small_graph_threshold=1).collect()))
+    assert modes == ["driver_union_find"]  # one edge: (c00, n0)
+    distributed = sorted(
+        map(tuple, dd.corpus_dedup(docs, small_graph_threshold=0).collect()))
+    assert modes == ["driver_union_find", "alternating_star"]
+    assert on_driver == distributed
+    got = {r[0]: r[1:] for r in on_driver}
+    assert got["c00"] == ("c00", True, 41)
+    assert got["c39"] == got["n0"] == ("c00", False, 41)
+    assert got["x0"] == ("x0", True, 1)
+
+
 def test_portable_sample_mod_takes_effect(spark):
     """Regression (round-5 review): the portable path used to ignore
     sample_mod entirely (hardcoded 1/4 digits).  Different mods must

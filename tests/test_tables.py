@@ -89,7 +89,8 @@ def test_zero_output_bucket_committed_once(spark, tmp_path):
     assert done == {0, 1, 2}  # bucket 1 committed with zero rows
     rows = {
         r["bucket"]: r["row_count"]
-        for r in ln.read_lineage(spark, out_dir).collect()
+        for r in spark.read.schema(ln.LINEAGE_SCHEMA)
+        .parquet(ln.lineage_path(out_dir)).collect()
     }
     assert rows == {0: 2, 1: 0, 2: 1}
     assert lineage.committed_row_count("chunks") == 3
@@ -163,7 +164,8 @@ def test_driver_lineage_reads_same_in_spark_and_pyarrow(spark, tmp_path):
     }
     got_spark = {
         (r["stage"], r["bucket"], r["row_count"], r["max_warc_ts"])
-        for r in ln.read_lineage(spark, out_dir).collect()
+        for r in spark.read.schema(ln.LINEAGE_SCHEMA)
+        .parquet(ln.lineage_path(out_dir)).collect()
     }
     assert got_spark == expected
     table = pq.read_table(ln.lineage_path(out_dir)).to_pylist()
