@@ -62,8 +62,8 @@ def make_embed_udf(dim: int = 256):
 # ---------------------------------------------------------------------------
 
 
-def make_minhash_bands_udf(num_perm: int = 128, bands: int = 32,
-                           shingle_k: int = 3, seed: int = 42):
+def make_minhash_bands_udf(num_perm: int, bands: int, shingle_k: int,
+                           seed: int):
     mh = hk.MinHasher(num_perm=num_perm, seed=seed)
 
     @pandas_udf(ArrayType(LongType()))
@@ -79,8 +79,8 @@ def make_minhash_bands_udf(num_perm: int = 128, bands: int = 32,
     return minhash_bands_udf
 
 
-def make_minhash_sig_udf(num_perm: int = 128, shingle_k: int = 3, seed: int = 42):
-    mh = hk.MinHasher(num_perm=num_perm, seed=seed)
+def make_minhash_sig_udf(num_perm: int, shingle_k: int):
+    mh = hk.MinHasher(num_perm=num_perm)
 
     @pandas_udf(ArrayType(LongType()))
     def minhash_sig_udf(text: pd.Series) -> pd.Series:

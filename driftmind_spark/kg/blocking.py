@@ -11,12 +11,16 @@ blocking.  Scale design:
 - candidate pairs come from an equi-join on ``(band_idx, band_hash)`` —
   a shuffle hash/sort-merge join Catalyst can plan, never a cross join;
 - hot buckets (a band-hash shared by a huge cluster, the LSH analog of
-  head-entity skew) are CAPPED at ``max_bucket_size``: membership above
+  head-entity skew) are CAPPED at ``LSH_MAX_BUCKET``: membership above
   the cap means the bucket key carries no discriminative information and
   the pair explosion would be O(n^2); AQE skew-join splitting handles the
-  moderate ones, the cap removes the pathological ones.  The dropped
-  buckets are observable via ``hot_bucket_stats`` (no silent truncation:
-  surfaces in a dropped bucket still meet in their other 31 bands).
+  moderate ones, the cap removes the pathological ones.  A dropped bucket
+  truncates nothing silently: surfaces in it still meet in their other
+  31 bands.
+
+The banding constants below are the linking's one definition: the
+incremental rebuild (kg/incremental.py) bands with the same constants
+and stamps them into its persisted state.
 """
 
 from __future__ import annotations
@@ -25,6 +29,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.udfs import make_minhash_bands_udf
+
+LSH_NUM_PERM = 128
+LSH_BANDS = 32
+LSH_SHINGLE_K = 3
+LSH_SEED = 42
+# hot-bucket cap: a band bucket with more members generates no pairs
+LSH_MAX_BUCKET = 256
 
 
 def mentions_from_triples(triples: DataFrame) -> DataFrame:
@@ -44,14 +55,9 @@ def mentions_from_triples(triples: DataFrame) -> DataFrame:
     )
 
 
-def banded_mentions(
-    mentions: DataFrame,
-    num_perm: int = 128,
-    bands: int = 32,
-    shingle_k: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    bands_udf = make_minhash_bands_udf(num_perm, bands, shingle_k, seed)
+def banded_mentions(mentions: DataFrame) -> DataFrame:
+    bands_udf = make_minhash_bands_udf(
+        LSH_NUM_PERM, LSH_BANDS, LSH_SHINGLE_K, LSH_SEED)
     return mentions.select(
         "mention_id",
         "surface",
@@ -62,14 +68,11 @@ def banded_mentions(
 
 def candidate_pairs(
     mentions: DataFrame,
-    num_perm: int = 128,
-    bands: int = 32,
-    shingle_k: int = 3,
-    seed: int = 42,
-    max_bucket_size: int = 256,
+    max_bucket_size: int = LSH_MAX_BUCKET,
 ) -> DataFrame:
-    """LSH candidate pairs (id_a < id_b), deduped across bands."""
-    banded = banded_mentions(mentions, num_perm, bands, shingle_k, seed)
+    """LSH candidate pairs (id_a < id_b), deduped across bands.
+    ``max_bucket_size`` exists for tests that force the cap."""
+    banded = banded_mentions(mentions)
     # anti-join against the HOT buckets only (same pattern as
     # operators/dedup.py): the over-cap list is tiny by construction — a
     # few degenerate surface clusters — so it broadcasts, instead of the
@@ -101,19 +104,3 @@ def candidate_pairs(
     )
     return pairs
 
-
-def hot_bucket_stats(
-    mentions: DataFrame,
-    num_perm: int = 128,
-    bands: int = 32,
-    shingle_k: int = 3,
-    seed: int = 42,
-    max_bucket_size: int = 256,
-) -> DataFrame:
-    """Observability for the skew cap: buckets that exceeded the cap."""
-    banded = banded_mentions(mentions, num_perm, bands, shingle_k, seed)
-    return (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(F.count("*").alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket_size)
-    )

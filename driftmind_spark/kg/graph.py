@@ -25,6 +25,11 @@ from .cc import canonical_mapping, connected_components
 from .lineage import N_BUCKETS
 from .linking import all_link_edges
 
+# Salt of the edges table's bucket key: a hot head subject spreads over
+# this many pseudo-random buckets (see :func:`build_edges`).  Recorded in
+# each incremental snapshot's ``meta``.
+EDGE_SALT = 8
+
 
 def build_nodes(
     triples: DataFrame,
@@ -78,7 +83,6 @@ def planned_nodes_schema(triples: DataFrame) -> StructType:
 def build_edges(
     triples: DataFrame,
     nodes: DataFrame,
-    salt: int = 8,
     n_buckets: int = N_BUCKETS,
 ) -> DataFrame:
     """triples resolved to canonical ids via the MATERIALIZED nodes
@@ -94,17 +98,16 @@ def build_edges(
     does not — the same reasoning that removed the hint from the
     contracted-CC canonical map in kg/incremental.py."""
     canon = nodes.select("surface", "canonical_id", "canonical_surface")
-    b_canon = canon
     return (
         triples
         .join(
-            b_canon.withColumnRenamed("canonical_id", "subj_id")
+            canon.withColumnRenamed("canonical_id", "subj_id")
             .withColumnRenamed("canonical_surface", "subj_canonical"),
             triples.subj == F.col("surface"),
         )
         .drop("surface")
         .join(
-            b_canon.withColumnRenamed("canonical_id", "obj_id")
+            canon.withColumnRenamed("canonical_id", "obj_id")
             .withColumnRenamed("canonical_surface", "obj_canonical"),
             triples.obj == F.col("surface"),
         )
@@ -115,14 +118,15 @@ def build_edges(
         )
         # SALTED partitioning key (explicit skew mitigation, north_rule):
         # hash the (subject, obj-derived salt) PAIR so a hot head subject
-        # spreads over `salt` pseudo-random buckets.  (Multiplying a
+        # spreads over EDGE_SALT pseudo-random buckets.  (Multiplying a
         # bucket id by the salt and re-modding collapses to a fixed
         # residue class — measured max-bucket share stayed 2x too high;
         # hashing the composite key does not.)
         .withColumn(
             "bucket",
             F.pmod(
-                F.xxhash64("subj_id", F.pmod(F.xxhash64("obj_id"), F.lit(salt))),
+                F.xxhash64("subj_id",
+                          F.pmod(F.xxhash64("obj_id"), F.lit(EDGE_SALT))),
                 F.lit(n_buckets),
             ).cast("int"),
         )

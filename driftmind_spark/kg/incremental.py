@@ -39,7 +39,7 @@ makes the per-snapshot cost O(delta + dictionary):
    row-level updates are the long-term seam, sources/tables.py.)
 
 Exactness guard — **hot-bucket cap crossing**: the full path drops ALL
-pairs of an LSH band bucket whose membership exceeds ``max_bucket_size``
+pairs of an LSH band bucket whose membership exceeds ``LSH_MAX_BUCKET``
 (kg/blocking.py).  If new surfaces push a bucket that previously held
 >=2 members (i.e. had generated pairs) over the cap, a from-scratch run
 would drop those old pairs while the incremental state has already
@@ -60,10 +60,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .blocking import banded_mentions, mentions_from_triples
+from .blocking import (
+    LSH_BANDS,
+    LSH_MAX_BUCKET,
+    LSH_NUM_PERM,
+    LSH_SEED,
+    LSH_SHINGLE_K,
+    banded_mentions,
+    mentions_from_triples,
+)
 from .cc import connected_components
 from .lineage import N_BUCKETS
-from .linking import score_candidate_pairs
+from .linking import COSINE_THRESHOLD, JACCARD_THRESHOLD, score_candidate_pairs
 
 # Bump on ANY change to the incremental dataflow that makes persisted
 # state (bands / alias_hubs / canonical mapping) incomparable with what
@@ -71,18 +79,6 @@ from .linking import score_candidate_pairs
 # full rebuild (self-healing: unlike dedup-rep state, KG state is fully
 # derivable from the triples store).
 KG_STATE_VERSION = 1
-
-# The linking parameters the full path uses implicitly via defaults
-# (kg/blocking.py candidate_pairs, kg/linking.py all_link_edges).  The
-# incremental path must band/score EXACTLY like the full path or the
-# accumulated pair set diverges from a from-scratch run's.
-_NUM_PERM = 128
-_BANDS = 32
-_SHINGLE_K = 3
-_SEED = 42
-_MAX_BUCKET = 256
-_JACCARD_T = 0.5
-_COSINE_T = 0.85
 
 _BAND_KEY = ["band_idx", "band_hash"]
 
@@ -102,9 +98,10 @@ def _alias_fingerprint(aliases: DataFrame | None) -> str:
 
 def state_params(embedding_dim: int, aliases: DataFrame | None) -> str:
     return (
-        f"kgstate={KG_STATE_VERSION};num_perm={_NUM_PERM};bands={_BANDS};"
-        f"shingle_k={_SHINGLE_K};seed={_SEED};cap={_MAX_BUCKET};"
-        f"jaccard={_JACCARD_T};cosine={_COSINE_T};"
+        f"kgstate={KG_STATE_VERSION};num_perm={LSH_NUM_PERM};"
+        f"bands={LSH_BANDS};shingle_k={LSH_SHINGLE_K};seed={LSH_SEED};"
+        f"cap={LSH_MAX_BUCKET};jaccard={JACCARD_THRESHOLD};"
+        f"cosine={COSINE_THRESHOLD};"
         f"embedding_dim={embedding_dim};aliases={_alias_fingerprint(aliases)}"
     )
 
@@ -122,9 +119,7 @@ def derive_state_from_nodes(
         "mention_id", "surface",
         F.lower(F.trim(F.col("surface"))).alias("norm"),
     )
-    bands = banded_mentions(
-        mentions_like, _NUM_PERM, _BANDS, _SHINGLE_K, _SEED
-    )
+    bands = banded_mentions(mentions_like)
     if aliases is None:
         spark = nodes.sparkSession
         hubs = spark.createDataFrame([], "entity string, hub_id bigint")
@@ -162,9 +157,7 @@ def incremental_nodes(
     new_surf = dm.join(
         prev_nodes.select("mention_id"), "mention_id", "left_anti"
     ).cache()
-    new_bands = banded_mentions(
-        new_surf, _NUM_PERM, _BANDS, _SHINGLE_K, _SEED
-    ).cache()
+    new_bands = banded_mentions(new_surf).cache()
 
     # --- cap-crossing guard + hot-bucket filter (updated sizes) -------
     prev_sizes = prev_bands.groupBy(*_BAND_KEY).agg(
@@ -184,8 +177,8 @@ def incremental_nodes(
     )
     crossing = sizes.filter(
         (F.col("prev_size") >= 2)
-        & (F.col("prev_size") <= _MAX_BUCKET)
-        & (F.col("total") > _MAX_BUCKET)
+        & (F.col("prev_size") <= LSH_MAX_BUCKET)
+        & (F.col("total") > LSH_MAX_BUCKET)
     )
     if crossing.limit(1).count() > 0:
         for c in (new_bands, new_surf, dm):
@@ -194,7 +187,7 @@ def incremental_nodes(
     # buckets over the cap (all of them old-only over-cap or fresh
     # over-cap — crossings were just excluded) generate no new pairs,
     # exactly like the full path's anti-join in candidate_pairs
-    hot = sizes.filter(F.col("total") > _MAX_BUCKET).select(*_BAND_KEY)
+    hot = sizes.filter(F.col("total") > LSH_MAX_BUCKET).select(*_BAND_KEY)
     nb = new_bands.join(F.broadcast(hot), _BAND_KEY, "left_anti")
     ab = (
         prev_bands.unionByName(new_bands)
@@ -223,9 +216,7 @@ def incremental_nodes(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    scored = score_candidate_pairs(
-        pairs, _JACCARD_T, _COSINE_T, embedding_dim
-    ).select("src", "dst")
+    scored = score_candidate_pairs(pairs, embedding_dim).select("src", "dst")
 
     # --- alias edges for new surfaces ----------------------------------
     if aliases is not None:

@@ -43,6 +43,8 @@ import uuid
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import hadoop_fs
+
 LINEAGE_SCHEMA = (
     "run_id string, stage string, bucket int, row_count long, "
     "max_warc_ts timestamp, status string"
@@ -112,7 +114,7 @@ class Lineage:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        fs, directory = _fs(self.spark, lineage_path(self.out_dir))
+        fs, directory = hadoop_fs(self.spark, lineage_path(self.out_dir))
         if not fs.exists(directory):
             return []
         read_bytes = self.spark._jvm.org.apache.commons.io.IOUtils.toByteArray
@@ -199,7 +201,7 @@ class Lineage:
         })
         buf = io.BytesIO()
         pq.write_table(table, buf, use_deprecated_int96_timestamps=True)
-        fs, directory = _fs(self.spark, lineage_path(self.out_dir))
+        fs, directory = hadoop_fs(self.spark, lineage_path(self.out_dir))
         path = self.spark._jvm.org.apache.hadoop.fs.Path
         name = f"commit-{uuid.uuid4().hex}.parquet"
         tmp = path(directory, "_" + name)
@@ -216,9 +218,3 @@ class Lineage:
             else:
                 self.bucket_counts.add(n)
 
-
-def _fs(spark: SparkSession, target: str):
-    """The Hadoop filesystem and path of ``target`` (local, HDFS and
-    object stores alike)."""
-    directory = spark._jvm.org.apache.hadoop.fs.Path(target)
-    return directory.getFileSystem(spark._jsc.hadoopConfiguration()), directory

@@ -4,9 +4,9 @@ alias-dictionary linking.
 Link evidence, in decreasing precision order:
 1. alias dictionary (J7): both surfaces map to the same canonical entity
    via a broadcast hash join against the (small) alias table;
-2. shingle-Jaccard >= ``jaccard_threshold`` on the normalized surfaces
+2. shingle-Jaccard >= ``JACCARD_THRESHOLD`` on the normalized surfaces
    (verifies the LSH candidates — LSH recalls, Jaccard confirms);
-3. embedding cosine >= ``cosine_threshold`` on the hashed-ngram vectors
+3. embedding cosine >= ``COSINE_THRESHOLD`` on the hashed-ngram vectors
    (catches word-level paraphrases char-shingles miss).
 
 All three produce (src, dst) mention-id edges consumed by K6.
@@ -22,10 +22,16 @@ from pyspark.sql.types import DoubleType
 
 from ..functions.text import cosine_sim
 from ..functions.udfs import make_embed_udf
+from .blocking import LSH_SHINGLE_K
 
+# link-evidence thresholds, shared with the incremental rebuild
+# (kg/incremental.py), which stamps them into its persisted state
+JACCARD_THRESHOLD = 0.5
+COSINE_THRESHOLD = 0.85
 
-def make_jaccard_udf(shingle_k: int = 3):
-    """Shingle-Jaccard scorer, round-4 vectorization of the round-3
+def make_jaccard_udf():
+    """Shingle-Jaccard scorer over ``LSH_SHINGLE_K``-char shingles (the
+    banding's shingle length), round-4 vectorization of the round-3
     memoized version.  Per Arrow batch:
 
     1. shingle-ID arrays are built ONCE per DISTINCT surface (batch-local
@@ -54,12 +60,12 @@ def make_jaccard_udf(shingle_k: int = 3):
             if r is None:
                 if not t:
                     subs = ()
-                elif len(t) < shingle_k:
+                elif len(t) < LSH_SHINGLE_K:
                     subs = (t,)
                 else:
                     subs = {
-                        t[i:i + shingle_k]
-                        for i in range(len(t) - shingle_k + 1)
+                        t[i:i + LSH_SHINGLE_K]
+                        for i in range(len(t) - LSH_SHINGLE_K + 1)
                     }
                 r = np.fromiter(
                     (vocab.setdefault(s, len(vocab)) for s in subs),
@@ -104,13 +110,10 @@ def make_jaccard_udf(shingle_k: int = 3):
 
 def score_candidate_pairs(
     pairs: DataFrame,
-    jaccard_threshold: float = 0.5,
-    cosine_threshold: float = 0.85,
     embedding_dim: int = 128,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """K4: verified link edges (src, dst, jaccard, cosine, evidence)."""
-    jac = make_jaccard_udf(shingle_k)
+    jac = make_jaccard_udf()
     embed = make_embed_udf(embedding_dim)
     scored = (
         pairs.withColumn("jaccard", jac("norm_a", "norm_b"))
@@ -121,15 +124,15 @@ def score_candidate_pairs(
     )
     return (
         scored.filter(
-            (F.col("jaccard") >= jaccard_threshold)
-            | (F.col("cosine") >= cosine_threshold)
+            (F.col("jaccard") >= JACCARD_THRESHOLD)
+            | (F.col("cosine") >= COSINE_THRESHOLD)
         )
         .select(
             F.col("id_a").alias("src"),
             F.col("id_b").alias("dst"),
             "jaccard",
             "cosine",
-            F.when(F.col("jaccard") >= jaccard_threshold, F.lit("jaccard"))
+            F.when(F.col("jaccard") >= JACCARD_THRESHOLD, F.lit("jaccard"))
             .otherwise(F.lit("cosine"))
             .alias("evidence"),
         )
@@ -164,13 +167,9 @@ def all_link_edges(
     mentions: DataFrame,
     aliases: DataFrame | None,
     pairs: DataFrame,
-    jaccard_threshold: float = 0.5,
-    cosine_threshold: float = 0.85,
     embedding_dim: int = 128,
 ) -> DataFrame:
-    edges = score_candidate_pairs(
-        pairs, jaccard_threshold, cosine_threshold, embedding_dim
-    )
+    edges = score_candidate_pairs(pairs, embedding_dim)
     if aliases is not None:
         edges = edges.unionByName(alias_link_edges(mentions, aliases))
     return edges

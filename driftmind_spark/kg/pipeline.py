@@ -19,11 +19,11 @@ tests/test_kg.py).
 
 Skew (north_rule): Zipf head entities concentrate edges on few
 ``subj_canonical_id``s.  The edges table is therefore written partitioned
-by a SALTED key — ``pmod(hash(subj_canonical_id) + hash(obj) % SALT, P)``
-spreads one hot subject over SALT partitions; readers aggregating by
-subject do a two-phase agg (partial per salted partition, final merge),
-which ``dedup_triples``-style queries get for free from Catalyst partial
-aggregation.  AQE skew-join splitting is on globally (session.py).
+by a SALTED key — ``pmod(hash(subj_id, hash(obj_id) % EDGE_SALT), P)``
+spreads one hot subject over EDGE_SALT partitions (kg/graph.py); readers
+aggregating by subject do a two-phase agg (partial per salted partition,
+final merge), which ``dedup_triples``-style queries get for free from
+Catalyst partial aggregation.  AQE skew-join splitting is on globally (session.py).
 """
 
 from __future__ import annotations
@@ -98,15 +98,18 @@ def run(
     run_id: str = "run-1",
     n_buckets: int = ln.N_BUCKETS,
     embedding_dim: int = 64,
-    chunk_size: int = 300,
-    overlap: int = 20,
     fail_after_stage: str | None = None,
-    salt: int = 8,
     quality: bool = False,
     dedup: bool = False,
     chunk_dedup: bool = False,
 ) -> dict:
     """Execute (or resume) the full pipeline; returns stage metrics.
+
+    The tuning is fixed in the modules that own each decision: chunks
+    are ``kernels.textproc.chunk_text``'s 300-char chunks with a 20-char
+    overlap (the reference's TextChunkingService), linking uses the
+    ``kg.blocking`` / ``kg.linking`` constants and the edges table's
+    bucket salt is ``kg.graph.EDGE_SALT``.
 
     ``quality=True`` inserts a quality/language gate between extract and
     dedup — the step a crawl pipeline runs BEFORE spending dedup/embed
@@ -316,11 +319,10 @@ def run(
     chunks_schema = _run_bucketed(
         lineage, "chunks", n_buckets, extracted,
         lambda todo: build_chunks(
-            todo, chunk_size, overlap, embedding_dim,
-            use_text_column=True,
+            todo, embedding_dim=embedding_dim, use_text_column=True,
         ).drop(
-            # norm_text is an intra-kernel column (embed-dedupe join key);
-            # nothing reads it from the durable table and it nearly
+            # norm_text is an intra-kernel column (the embedding cache
+            # key); nothing reads it from the durable table and it nearly
             # duplicates `content` — dropping it cuts the written chunks
             # table ~30% (measured 1.4 GB -> 1.0 GB at 1M pages, wall
             # time unchanged; at 100 TB that is real storage).
@@ -424,7 +426,7 @@ def run(
     if not lineage.stage_marker_done("edges"):
         # broadcast canonical-map join + salted bucket key — shared core
         # in kg/graph.py (see there for the skew-mitigation rationale)
-        edges = build_edges(triples, nodes, salt=salt, n_buckets=n_buckets)
+        edges = build_edges(triples, nodes, n_buckets=n_buckets)
         lineage.commit_global("edges", _write_bucketed(edges, edges_path)["rows"])
     metrics["edges"] = lineage.committed_row_count("edges")
     _mark("edges")

@@ -12,10 +12,7 @@ Scale notes (10^12 rows):
 - chunk indices are assigned in-kernel at emit time (the posexplode/W4
   discipline — never a window shuffle for numbering);
 - the reference's embedding cache (EmbeddingService.cs:37-58) maps to
-  per-batch caching by default and to a global
-  dropDuplicates(norm_text) -> embed -> join-back under
-  ``dedupe_embeddings=True`` (worth the shuffle only when the embedder
-  is expensive, e.g. an API or a large model).
+  per-batch caching: each batch embeds its distinct texts once.
 """
 
 from __future__ import annotations
@@ -23,20 +20,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.udfs import make_embed_udf
-
 MAX_PAGE_BYTES = 3 * 1024 * 1024  # appsettings.json:26 (3 MB upload cap)
 
 
-def validated_pages(pages: DataFrame, langs: tuple[str, ...] | None = None) -> DataFrame:
+def validated_pages(pages: DataFrame) -> DataFrame:
     """S1/S2: row-level filters replacing the reference's per-file
     validation (FileProcessingService.cs:28-37) — pushed to the scan."""
-    out = pages
     if "html" in pages.columns:
-        out = out.filter(F.length("html") <= MAX_PAGE_BYTES)
-    if langs:
-        out = out.filter(F.col("lang").isin(*langs))
-    return out
+        return pages.filter(F.length("html") <= MAX_PAGE_BYTES)
+    return pages
 
 
 def extract_text_table(pages: DataFrame) -> DataFrame:
@@ -81,13 +73,13 @@ def _extract_only_kernel():
     return kernel
 
 
-def _fused_chunk_batches(chunk_size: int, overlap: int, use_text_column: bool,
-                         embedding_dim: int | None):
+def _fused_chunk_batches(use_text_column: bool, embedding_dim: int | None):
     """ONE Python crossing per page batch: extract -> chunk -> normalize
     [-> embed] inside a single mapInArrow kernel.  Chained pandas UDFs
     would round-trip each intermediate column through Arrow once per
     stage; at 10^12 rows that ser/de dominates the stage, so the whole
-    stateless per-url part of the pipeline is fused.
+    stateless per-url part of the pipeline is fused.  Chunking runs with
+    ``chunk_text``'s defaults (300-char chunks, 20-char overlap).
 
     Arrow-native on both sides (r1 verdict follow-up): no pandas
     DataFrame/index construction, per-doc metadata repeated via
@@ -120,7 +112,7 @@ def _fused_chunk_batches(chunk_size: int, overlap: int, use_text_column: bool,
             contents: list[str] = []
             norms: list[str] = []
             for r, text in enumerate(texts):
-                chunks = chunk_text(text, chunk_size, overlap)
+                chunks = chunk_text(text)
                 idxs.extend(range(len(chunks)))
                 contents.extend(chunks)
                 norms.extend(normalize_for_caching(c) for c in chunks)
@@ -166,12 +158,9 @@ _CHUNK_ROWS_SCHEMA = (
 
 def build_chunks(
     pages: DataFrame,
-    chunk_size: int = 300,
-    overlap: int = 20,
     embedding_dim: int = 256,
     with_embeddings: bool = True,
     use_text_column: bool = False,
-    dedupe_embeddings: bool = False,
 ) -> DataFrame:
     """pages -> chunks(url, warc_ts, lang, chunk_index, content,
     norm_text, chunk_id [, embedding]).
@@ -181,29 +170,18 @@ def build_chunks(
     idempotent (F14 note in SURVEY.md: no GUIDs).  The empty-text guard
     (P7) is implicit: chunk_text returns [] for whitespace-only pages.
 
-    ``dedupe_embeddings``: the reference's embedding cache as a GLOBAL
-    batch dedupe — dropDuplicates(norm_text) -> embed once -> join back.
-    Use it when the embedder is expensive (an API or a large model):
-    it trades one shuffle of the chunk text for embedding each distinct
-    text once.  With the cheap local hashed-ngram kernel the shuffle
-    costs more than re-embedding, so the default embeds inline in the
-    fused kernel (narrow plan, zero shuffles) with per-batch caching.
+    Chunks are ``chunk_text``'s 300-char chunks with a 20-char overlap.
+    Embeddings are computed inline in the fused kernel (narrow plan, zero
+    shuffles), each batch embedding its distinct texts once.
     """
     ts_type = dict(pages.dtypes).get("warc_ts", "timestamp_ntz")
     schema = _CHUNK_ROWS_SCHEMA.replace("timestamp_ntz", ts_type)
-    inline_dim = embedding_dim if (with_embeddings and not dedupe_embeddings) else None
+    inline_dim = embedding_dim if with_embeddings else None
     if inline_dim:
         schema += ", embedding array<float>"
-    chunks = validated_pages(pages).mapInArrow(
-        _fused_chunk_batches(chunk_size, overlap, use_text_column, inline_dim), schema
+    return validated_pages(pages).mapInArrow(
+        _fused_chunk_batches(use_text_column, inline_dim), schema
     ).withColumn("chunk_id", F.concat_ws("_", "url", "chunk_index"))
-    if not with_embeddings or inline_dim:
-        return chunks
-
-    embed = make_embed_udf(embedding_dim)
-    distinct_texts = chunks.select("norm_text").dropDuplicates()
-    embedded = distinct_texts.withColumn("embedding", embed("norm_text"))
-    return chunks.join(embedded, "norm_text")
 
 
 def docs_meta(chunks: DataFrame) -> DataFrame:

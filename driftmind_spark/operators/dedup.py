@@ -3,7 +3,8 @@ n-gram-Jaccard, portable-MinHash-LSH, SimHash, embedding-cosine.
 
 Scale design: every variant is blocked AND capped — no unblocked O(n^2)
 pair generation anywhere, and every block family has a hot-bucket cap
-with a ``*_stats`` observability frame (no silent truncation).  Exact
+(the n-gram, MinHash and embedding caps with a ``*_stats``
+observability frame; a capped pair still meets in its other blocks).  Exact
 dedup is one hash aggregation; n-gram Jaccard runs an inverted-index
 postings join with a gram-df cap; MinHash-LSH bands are capped
 equi-join keys; SimHash blocks on max_hamming+1 disjoint bit blocks
@@ -454,9 +455,8 @@ def minhash_hot_band_stats(
     (band_idx, band_hash) buckets ``minhash_lsh_pairs_sql`` /
     ``minhash_lsh_verified_pairs`` dropped, with their sizes.  Pass the
     SAME num_perm/bands/portable/sample_mod as the pair call to observe
-    its exact buckets — for a ``corpus_dedup`` run use
-    ``minhash_hot_band_stats(docs, **corpus_dedup_params(<same
-    overrides>))`` so the two resolve from one source of truth (the
+    its exact buckets — for ``corpus_dedup`` that is
+    ``minhash_hot_band_stats(docs, **CORPUS_DEDUP_SIG_DEFAULTS)`` (the
     defaults here match the PORTABLE oracle query, NOT corpus_dedup's
     production path)."""
     melted = _melt_bands(
@@ -508,7 +508,7 @@ def simhash_pairs_from_hashes(
     pytest now covers).  Exact Hamming verification via bit_count(xor);
     ``max_bucket_size`` caps a block-value bucket exactly like the
     MinHash band cap (64-bit SimHash of boilerplate text collides en
-    masse), with drops observable via ``simhash_hot_block_stats``."""
+    masse); a capped pair still meets in its other blocks."""
     layout = simhash_block_layout(max_hamming, n_blocks)
     melted = hashed.select(
         "doc_id",
@@ -562,37 +562,6 @@ def simhash_near_dups(
     recall at <= max_hamming), verified by exact Hamming distance."""
     sh = docs.select("doc_id", simhash_udf(F.col(text_col)).alias("simhash"))
     return simhash_pairs_from_hashes(sh, max_hamming, n_blocks, max_bucket_size)
-
-
-def simhash_hot_block_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_hamming: int = 3,
-    n_blocks: int | None = None,
-    max_bucket_size: int = 1024,
-) -> DataFrame:
-    """Observability for the block-bucket cap: the (block_idx, block_val)
-    buckets ``simhash_near_dups`` dropped, with their sizes."""
-    layout = simhash_block_layout(max_hamming, n_blocks)
-    sh = docs.select(simhash_udf(F.col(text_col)).alias("simhash"))
-    melted = sh.select(
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("block_idx"),
-                    F.shiftrightunsigned("simhash", off)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    .alias("block_val"),
-                )
-                for i, (off, width) in enumerate(layout)
-            ])
-        ).alias("blk")
-    ).select("blk.block_idx", "blk.block_val")
-    return (
-        melted.groupBy("block_idx", "block_val")
-        .agg(F.count("*").alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket_size)
-    )
 
 
 def hyperplane_bucket_keys(
@@ -877,6 +846,11 @@ def minhash_lsh_verified_pairs(
     )
 
 
+# The signature and banding parameters ``corpus_dedup`` runs with: the
+# production (word-gram, portable=False) construction.  The one source
+# of truth shared by the pair path and the observability call
+# ``minhash_hot_band_stats(docs, **CORPUS_DEDUP_SIG_DEFAULTS)``, whose
+# buckets then provably match the buckets the pair run capped on.
 CORPUS_DEDUP_SIG_DEFAULTS: dict = {
     "num_perm": 64,
     "bands": 8,
@@ -886,51 +860,10 @@ CORPUS_DEDUP_SIG_DEFAULTS: dict = {
     "sample_mod": 4,
 }
 
-# "parameter not supplied" sentinel: for max_bucket_size, None is a REAL
-# value (disable the hot-bucket cap — the documented pre-round-6
-# semantics), so absence needs its own marker.
-UNSET: object = object()
-
-
-def corpus_dedup_params(**overrides) -> dict:
-    """The signature/banding parameters a ``corpus_dedup`` call resolves
-    to — the single source of truth shared by the pair path and the
-    observability path.  Call ``minhash_hot_band_stats(docs,
-    **corpus_dedup_params(<same overrides>))`` and the observed buckets
-    provably match the buckets the production pair run capped on.
-    (Without this, the stats call's ``portable=True`` default silently
-    reported buckets for a DIFFERENT signature construction than
-    corpus_dedup's ``portable=False`` production path.)
-
-    ``max_bucket_size=None`` (or 0) DISABLES the cap; for every other
-    key, ``None``/:data:`UNSET` means "use the default"."""
-    unknown = set(overrides) - set(CORPUS_DEDUP_SIG_DEFAULTS)
-    if unknown:
-        raise TypeError(
-            f"unknown corpus_dedup signature params: {sorted(unknown)}"
-        )
-    params = dict(CORPUS_DEDUP_SIG_DEFAULTS)
-    for k, v in overrides.items():
-        if v is UNSET or (v is None and k != "max_bucket_size"):
-            continue
-        params[k] = v
-    if params["max_bucket_size"] == 0:
-        params["max_bucket_size"] = None  # 0 = disable the hot-bucket cap
-    return params
-
 
 def corpus_dedup(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int | None = None,
-    bands: int | None = None,
-    shingle_k: int | None = None,
-    max_bucket_size=UNSET,  # int; None/0 disables the hot-bucket cap
-    min_agreement: float = 0.9,
     small_graph_threshold: int = 200_000,
-    portable: bool | None = None,
-    sample_mod: int | None = None,
 ) -> DataFrame:
     """Full corpus-level dedup resolution — the composition a
     training-data pipeline runs before it embeds or extracts anything:
@@ -950,8 +883,13 @@ def corpus_dedup(
        is the sum over its reps.
     4. Every doc maps through its text group to the final keeper.
 
-    Returns ``(id_col, keeper_id, is_keeper, cluster_size)`` over every
-    input doc, exactly like ``dedup_resolution``.
+    ``docs`` has ``doc_id`` and ``text`` columns.  Returns ``(doc_id,
+    keeper_id, is_keeper, cluster_size)`` over every input doc, exactly
+    like ``dedup_resolution``.  Signatures and banding run with
+    :data:`CORPUS_DEDUP_SIG_DEFAULTS`, verification with
+    ``minhash_lsh_verified_pairs``' default 0.9 agreement;
+    ``small_graph_threshold`` selects the closure's driver or
+    distributed path (tests pin both).
 
     Scale shape: one text-bearing shuffle (the md5 group-by, partial-
     aggregated map-side so the wire carries ~unique texts); signatures/
@@ -970,14 +908,8 @@ def corpus_dedup(
     would lose it without any error."""
     from ..kg.cc import connected_components
 
-    sig_params = corpus_dedup_params(
-        num_perm=num_perm, bands=bands, shingle_k=shingle_k,
-        max_bucket_size=max_bucket_size, portable=portable,
-        sample_mod=sample_mod,
-    )
     ids = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.coalesce(F.col(text_col), F.lit("")).alias("text"),
+        "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text"),
     )
     groups = ids.groupBy(F.md5("text").alias("text_md5")).agg(
         F.min("doc_id").alias("rep_id"),
@@ -987,9 +919,7 @@ def corpus_dedup(
         F.count("*").alias("n_docs"),
     )
     reps = groups.select(F.col("rep_id").alias("doc_id"), "text")
-    pairs = minhash_lsh_verified_pairs(
-        reps, min_agreement=min_agreement, **sig_params,
-    )
+    pairs = minhash_lsh_verified_pairs(reps, **CORPUS_DEDUP_SIG_DEFAULTS)
     # the groups ride through the closure as vertex columns: each rep
     # comes back with its keeper, text hash and doc count, no join back
     rep_keeper = connected_components(
@@ -1005,7 +935,7 @@ def corpus_dedup(
         rep_keeper.select("text_md5", "keeper_id"), "text_md5"
     )
     return assigned.join(sizes, "keeper_id").select(
-        F.col("doc_id").alias(id_col),
+        "doc_id",
         "keeper_id",
         (F.col("doc_id") == F.col("keeper_id")).alias("is_keeper"),
         "cluster_size",

@@ -47,8 +47,8 @@ QUALITY_DEFAULTS: dict = {
 
 def quality_params(**overrides) -> dict:
     """Resolve quality thresholds against :data:`QUALITY_DEFAULTS` —
-    unknown keys raise (the corpus_dedup_params contract: one source of
-    truth, no silently-ignored knobs)."""
+    unknown keys raise (one source of truth, no silently-ignored
+    knobs)."""
     unknown = set(overrides) - set(QUALITY_DEFAULTS)
     if unknown:
         raise TypeError(f"unknown quality params: {sorted(unknown)}")

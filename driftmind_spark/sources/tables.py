@@ -38,13 +38,13 @@ def iceberg_available(spark: SparkSession) -> bool:
     return False
 
 
-def _path_exists(spark: SparkSession, target: str) -> bool:
-    """Hadoop-FS existence check (works for local, HDFS, and object-store
-    paths alike — os.path would only see the local filesystem)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(target)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(path))
+def hadoop_fs(spark: SparkSession, target: str):
+    """``(fs, path)``: the Hadoop filesystem and path of ``target``.  The
+    package's one copy of the py4j boilerplate; going through the Hadoop
+    FS API works for local, HDFS and object-store paths alike, where
+    ``os.path`` would only see the local filesystem."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(target)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
 
 
 @dataclass
@@ -106,7 +106,10 @@ class TableIO:
             else:
                 writer.append()
             return {}
-        existed = bool(partition_by) and _path_exists(self.spark, target)
+        existed = False
+        if partition_by:
+            fs, path = hadoop_fs(self.spark, target)
+            existed = bool(fs.exists(path))
         if partition_by and not pre_clustered:
             # cluster rows by the partition key first: otherwise every
             # task fans out across every partition directory and the job

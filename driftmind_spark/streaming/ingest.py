@@ -22,9 +22,10 @@ sink (stream.py::_write_batch_idempotent).  Old versions are pruned to
 the last two (N's retry only ever needs N-1).
 
 Scale shape: state is (band_idx, band_hash, url, sig[num_perm],
-rep_order) — bounded by ``max_reps`` per bucket and TTL-evicted by event
-time; the per-batch work is one cogroup shuffle on (band_idx, band_hash)
-plus the chunks/triples kernels over kept rows only.  The periodic
+rep_order) — bounded by ``GATE_MAX_REPS`` per bucket and TTL-evicted by
+event time (the gate constants, streaming/stateful.py); the per-batch
+work is one cogroup shuffle on (band_idx, band_hash) plus the
+chunks/triples kernels over kept rows only.  The periodic
 nodes/edges rebuild runs the batch linking stages over the growing
 triples table in-line: O(total distinct surfaces) per rebuild, so
 cadence (``kg_every``) trades snapshot freshness against rebuild cost —
@@ -39,8 +40,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..kg.graph import EDGE_SALT
 from ..kg.lineage import N_BUCKETS, bucket_col
-from .stateful import _fold_bucket, sig_banded
+from ..sources.tables import hadoop_fs
+from .stateful import (
+    GATE_MAX_REPS,
+    GATE_MIN_SLOTS,
+    GATE_SIG_PARAMS,
+    GATE_TTL_SECONDS,
+    _fold_bucket,
+    sig_banded,
+)
 from .stream import _write_batch_idempotent
 
 # The numpy kernel's construction version, persisted in the rep state.
@@ -61,68 +71,55 @@ GATE_OUT_SCHEMA = (
 )
 
 
-def _gate_cogroup_fn(min_slots: int, max_reps: int):
+def _gate_cogroup(key, rows_pdf, reps_pdf):
     """Per-bucket cogrouped fold: (batch rows, persisted reps) ->
     flag rows (kind='flag') + the bucket's post-fold representative set
     (kind='rep').  Buckets with no batch rows pass their reps through
     unchanged (state must survive quiet batches)."""
+    import pandas as pd
 
-    def fn(key, rows_pdf, reps_pdf):
-        import pandas as pd
-
-        band_idx, band_hash = int(key[0]), int(key[1])
-        reps_pdf = reps_pdf.sort_values("rep_order")
-        reps = [(u, list(s)) for u, s in zip(reps_pdf["url"], reps_pdf["sig"])]
-        rep_ts = dict(zip(reps_pdf["url"], reps_pdf["warc_ts"]))
-        rows = [(u, t, list(s)) for u, t, s in
-                zip(rows_pdf["url"], rows_pdf["warc_ts"], rows_pdf["sig"])]
-        # one global event order per batch (near_dup_flags_batch's rule)
-        rows.sort(key=lambda r: (r[1], r[0]))
-        row_ts: dict = {}
-        for u, t, _ in rows:
-            # first-wins: a rep's timestamp is the event that elected it
-            row_ts.setdefault(u, t)
-        # bucket activity clock: refreshed by EVERY arriving row
-        # (including duplicates), so an actively matching bucket never
-        # TTL-expires — eviction keys on this, not on each rep's
-        # election time
-        latest = max(
-            [t for t in reps_pdf["bucket_latest"] if pd.notna(t)]
-            + [t for _, t, _ in rows],
-            default=None,
+    band_idx, band_hash = int(key[0]), int(key[1])
+    reps_pdf = reps_pdf.sort_values("rep_order")
+    reps = [(u, list(s)) for u, s in zip(reps_pdf["url"], reps_pdf["sig"])]
+    rep_ts = dict(zip(reps_pdf["url"], reps_pdf["warc_ts"]))
+    rows = [(u, t, list(s)) for u, t, s in
+            zip(rows_pdf["url"], rows_pdf["warc_ts"], rows_pdf["sig"])]
+    # one global event order per batch (near_dup_flags_batch's rule)
+    rows.sort(key=lambda r: (r[1], r[0]))
+    row_ts: dict = {}
+    for u, t, _ in rows:
+        # first-wins: a rep's timestamp is the event that elected it
+        row_ts.setdefault(u, t)
+    # bucket activity clock: refreshed by EVERY arriving row
+    # (including duplicates), so an actively matching bucket never
+    # TTL-expires — eviction keys on this, not on each rep's
+    # election time
+    latest = max(
+        [t for t in reps_pdf["bucket_latest"] if pd.notna(t)]
+        + [t for _, t, _ in rows],
+        default=None,
+    )
+    flags, reps_after = _fold_bucket(rows, reps, GATE_MIN_SLOTS,
+                                     GATE_MAX_REPS)
+    out = [
+        (
+            "flag", band_idx, band_hash, u, t, d, a, s, None, None, None,
         )
-        flags, reps_after = _fold_bucket(rows, reps, min_slots, max_reps)
-        out = [
-            (
-                "flag", band_idx, band_hash, u, t, d, a, s, None, None, None,
-            )
-            for (u, t, d, a, s) in flags
-        ] + [
-            (
-                "rep", band_idx, band_hash, u,
-                rep_ts.get(u, row_ts.get(u)), None, None, None, sig, i,
-                latest,
-            )
-            for i, (u, sig) in enumerate(reps_after)
-        ]
-        return pd.DataFrame(
-            out,
-            columns=["kind", "band_idx", "band_hash", "url", "warc_ts",
-                     "dup_of", "agreement", "saturated", "sig", "rep_order",
-                     "bucket_latest"],
+        for (u, t, d, a, s) in flags
+    ] + [
+        (
+            "rep", band_idx, band_hash, u,
+            rep_ts.get(u, row_ts.get(u)), None, None, None, sig, i,
+            latest,
         )
-
-    return fn
-
-
-def _fs(spark: SparkSession, dir_path: str):
-    """(fs, path, jvm) Hadoop FS handle for ``dir_path`` — the one copy
-    of the py4j boilerplate; going through the Hadoop FS API keeps the
-    same code working on HDFS/object stores."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(dir_path)
-    return path.getFileSystem(conf), path, jvm
+        for i, (u, sig) in enumerate(reps_after)
+    ]
+    return pd.DataFrame(
+        out,
+        columns=["kind", "band_idx", "band_hash", "url", "warc_ts",
+                 "dup_of", "agreement", "saturated", "sig", "rep_order",
+                 "bucket_latest"],
+    )
 
 
 def _parse_version(name: str, prefix: str) -> int | None:
@@ -139,30 +136,9 @@ def _parse_version(name: str, prefix: str) -> int | None:
         return None
 
 
-def _latest_version(spark: SparkSession, base_dir: str,
-                    below: int | None = None,
-                    prefix: str = "state_v=") -> int | None:
-    """Newest committed (``_SUCCESS``-gated) version under ``base_dir``,
-    optionally strictly below ``below`` (retry safety: a replayed batch
-    must fold from its ORIGINAL base state, never from its own partial
-    output)."""
-    fs, path, jvm = _fs(spark, base_dir)
-    if not fs.exists(path):
-        return None
-    versions = []
-    for st in fs.listStatus(path):
-        v = _parse_version(st.getPath().getName(), prefix)
-        if v is not None:
-            if (below is None or v < below) and fs.exists(
-                jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-            ):
-                versions.append(v)
-    return max(versions) if versions else None
-
-
 def _prune_versions(spark: SparkSession, base_dir: str, keep_from: int,
                     prefix: str = "state_v=") -> None:
-    fs, path, _ = _fs(spark, base_dir)
+    fs, path = hadoop_fs(spark, base_dir)
     if not fs.exists(path):
         return
     for st in fs.listStatus(path):
@@ -177,17 +153,16 @@ def _prune_keep_last(spark: SparkSession, base_dir: str, keep: int = 2,
     uncommitted debris older than the newest committed one (a crashed
     rebuild's half-written directory — its batch will be replayed at the
     same or a higher version)."""
-    fs, path, jvm = _fs(spark, base_dir)
+    fs, path = hadoop_fs(spark, base_dir)
     if not fs.exists(path):
         return
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
     committed, uncommitted, tmp_versions = [], [], []
     for st in fs.listStatus(path):
         name = st.getPath().getName()
         v = _parse_version(name, prefix)
         if v is not None:
-            if fs.exists(
-                jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-            ):
+            if fs.exists(hpath(st.getPath(), "_SUCCESS")):
                 committed.append(v)
             else:
                 uncommitted.append(v)
@@ -211,28 +186,27 @@ def _prune_keep_last(spark: SparkSession, base_dir: str, keep: int = 2,
         # NEWER version committed the stale staging dir is dead weight)
         for tv in tmp_versions:
             if tv < committed[-1]:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(
-                        path, f"_tmp_{prefix}{tv}"
-                    ),
-                    True,
-                )
+                fs.delete(hpath(path, f"_tmp_{prefix}{tv}"), True)
     for v in drop:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(path, f"{prefix}{v}"), True)
+        fs.delete(hpath(path, f"{prefix}{v}"), True)
 
 
 def _committed_versions(spark: SparkSession, base_dir: str,
                         prefix: str, up_to: int | None = None) -> list[int]:
     """All committed (``_SUCCESS``-gated) versions under ``base_dir``,
-    ascending, optionally only those ``<= up_to``."""
-    fs, path, jvm = _fs(spark, base_dir)
+    ascending, optionally only those ``<= up_to``.  The newest version
+    below ``N`` is ``max(_committed_versions(..., up_to=N - 1))``: a
+    replayed batch must fold from its ORIGINAL base state, never from
+    its own partial output."""
+    fs, path = hadoop_fs(spark, base_dir)
     if not fs.exists(path):
         return []
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
     versions = []
     for st in fs.listStatus(path):
         v = _parse_version(st.getPath().getName(), prefix)
         if v is not None and (up_to is None or v <= up_to) and fs.exists(
-            jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
+            hpath(st.getPath(), "_SUCCESS")
         ):
             versions.append(v)
     return sorted(versions)
@@ -247,8 +221,7 @@ def _prepare_staging(spark: SparkSession, kg_dir: str, version: int
     the two divergent (the kg/graph.py lesson, round 7)."""
     staging = posixpath.join(kg_dir, f"_tmp_snap_v={version}")
     snap = posixpath.join(kg_dir, f"snap_v={version}")
-    fs, _, jvm = _fs(spark, snap)
-    staging_path = jvm.org.apache.hadoop.fs.Path(staging)
+    fs, staging_path = hadoop_fs(spark, staging)
     if fs.exists(staging_path):
         fs.delete(staging_path, True)
     return staging, snap
@@ -262,11 +235,10 @@ def _commit_staged_snapshot(spark: SparkSession, kg_dir: str,
     ``snap`` was untouched and fully readable — the unreadable window
     is two metadata ops, and a crash inside it is healed by the
     replay's deterministic rewrite."""
-    fs, snap_path, jvm = _fs(spark, snap)
-    staging_path = jvm.org.apache.hadoop.fs.Path(staging)
-    fs.create(
-        jvm.org.apache.hadoop.fs.Path(staging_path, "_SUCCESS"), True
-    ).close()
+    fs, snap_path = hadoop_fs(spark, snap)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    staging_path = hpath(staging)
+    fs.create(hpath(staging_path, "_SUCCESS"), True).close()
     if fs.exists(snap_path):
         fs.delete(snap_path, True)
     if not fs.rename(staging_path, snap_path):
@@ -288,12 +260,11 @@ def latest_kg_snapshot_version(
     snapshots would serve an empty graph until the next rebuild and
     orphan the old trees forever — same doctrine as the dedup-state
     signature guard."""
-    v = _latest_version(
-        spark, posixpath.join(out_dir, "kg"), prefix="snap_v="
-    )
+    v = max(_committed_versions(spark, posixpath.join(out_dir, "kg"),
+                                "snap_v="), default=None)
     if v is None:
         old = posixpath.join(out_dir, "nodes")
-        fs, old_path, _ = _fs(spark, old)
+        fs, old_path = hadoop_fs(spark, old)
         if fs.exists(old_path) and any(
             st.getPath().getName().startswith("snap_v=")
             for st in fs.listStatus(old_path)
@@ -339,7 +310,7 @@ def read_kg_snapshot(
     snap = posixpath.join(out_dir, "kg", f"snap_v={v}")
     table_path = posixpath.join(snap, table)
     if table == "edges":
-        fs, tp, _ = _fs(spark, table_path)
+        fs, tp = hadoop_fs(spark, table_path)
         if not fs.exists(tp):
             from ..kg.graph import build_edges
 
@@ -348,10 +319,7 @@ def read_kg_snapshot(
                 posixpath.join(out_dir, "triples")
             ).filter(F.col("batch_id") <= meta["version"])
             nodes_t = spark.read.parquet(posixpath.join(snap, "nodes"))
-            return build_edges(
-                triples, nodes_t, salt=meta["salt"],
-                n_buckets=meta["n_buckets"],
-            )
+            return build_edges(triples, nodes_t, n_buckets=meta["n_buckets"])
     return spark.read.parquet(table_path)
 
 
@@ -362,7 +330,6 @@ def rebuild_kg_snapshot(
     aliases: DataFrame | None = None,
     n_buckets: int = N_BUCKETS,
     embedding_dim: int = 64,
-    salt: int = 8,
     triples_schema=None,
 ) -> bool:
     """The batch pipeline's nodes + edges stages (shared dataflow:
@@ -449,7 +416,7 @@ def rebuild_kg_snapshot(
     # read-back shape: re-deriving nodes per join side would re-run the
     # whole linking lineage twice)
     nodes_t = spark.read.parquet(nodes_path)
-    edges = build_edges(triples_all, nodes_t, salt=salt, n_buckets=n_buckets)
+    edges = build_edges(triples_all, nodes_t, n_buckets=n_buckets)
     edges.write.mode("overwrite").parquet(posixpath.join(staging, "edges"))
 
     _commit_staged_snapshot(spark, kg_dir, staging, snap)
@@ -463,7 +430,6 @@ def rebuild_kg_snapshot_incremental(
     aliases: DataFrame | None = None,
     n_buckets: int = N_BUCKETS,
     embedding_dim: int = 64,
-    salt: int = 8,
     triples_schema=None,
 ) -> bool:
     """Incremental variant of :func:`rebuild_kg_snapshot` — O(delta +
@@ -526,12 +492,13 @@ def rebuild_kg_snapshot_incremental(
     kg_dir = posixpath.join(out_dir, "kg")
     bands_dir = posixpath.join(out_dir, "kg_bands")
     params = kginc.state_params(embedding_dim, aliases)
-    prev_v = _latest_version(spark, kg_dir, below=version, prefix="snap_v=")
+    prev_v = max(_committed_versions(spark, kg_dir, "snap_v=",
+                                     up_to=version - 1), default=None)
 
     prev = None
     if prev_v is not None:
         prev_snap = posixpath.join(kg_dir, f"snap_v={prev_v}")
-        fs, meta_path, _ = _fs(spark, posixpath.join(prev_snap, "meta"))
+        fs, meta_path = hadoop_fs(spark, posixpath.join(prev_snap, "meta"))
         if fs.exists(meta_path):
             meta = spark.read.parquet(
                 posixpath.join(prev_snap, "meta")
@@ -596,7 +563,7 @@ def rebuild_kg_snapshot_incremental(
             )
             # bootstrap/fallback resets the append-only band store to
             # ONE delta holding the full current dictionary
-            fs, bands_path, _ = _fs(spark, bands_dir)
+            fs, bands_path = hadoop_fs(spark, bands_dir)
             if fs.exists(bands_path):
                 fs.delete(bands_path, True)
         # the band DELTA commits before the snapshot swap (crash-safety
@@ -611,7 +578,7 @@ def rebuild_kg_snapshot_incremental(
         for c in caches:
             c.unpersist()
     spark.createDataFrame(
-        [(version, True, salt, n_buckets, params, mode)],
+        [(version, True, EDGE_SALT, n_buckets, params, mode)],
         "version long, edges_view boolean, salt int, n_buckets int, "
         "params string, mode string",
     ).coalesce(1).write.mode("overwrite").parquet(
@@ -626,14 +593,6 @@ def stream_ingest(
     pages_stream: DataFrame,
     out_dir: str,
     checkpoint_path: str,
-    num_perm: int = 64,
-    bands: int = 8,
-    shingle_k: int = 3,
-    min_agreement: float = 0.9,
-    max_reps: int = 8,
-    ttl_seconds: int = 7 * 24 * 3600,
-    chunk_size: int = 300,
-    overlap: int = 20,
     quality: bool = False,
     triples: bool = False,
     kg_every: int | None = None,
@@ -641,7 +600,6 @@ def stream_ingest(
     aliases: DataFrame | None = None,
     n_buckets: int = N_BUCKETS,
     embedding_dim: int = 64,
-    salt: int = 8,
 ):
     """pages stream -> ``{out_dir}/dup_flags`` (per-band verdicts, incl.
     saturation signals) + ``{out_dir}/chunks`` (chunk rows for KEPT
@@ -658,9 +616,11 @@ def stream_ingest(
     event identity are undefined, as everywhere in this package.
 
     Signatures are the per-row numpy char-shingle MinHash kernel
-    (kernels/hashing).  The construction, its version and its
-    parameters are stamped into the persisted state; a resume under a
-    different construction or parameters fails loudly.
+    (kernels/hashing).  The gate's tuning is the ``GATE_*`` constants of
+    streaming/stateful.py; chunks use ``chunk_text``'s 300/20 defaults.
+    The construction, its version and its parameters
+    (``GATE_SIG_PARAMS``) are stamped into the persisted state; a resume
+    under a different construction or parameters fails loudly.
 
     ``quality=True`` prepends the batch pipeline's quality gate
     (operators/quality.py, the same default thresholds):
@@ -701,20 +661,6 @@ def stream_ingest(
         raise ValueError("kg_every requires triples=True")
     if kg_every is not None and kg_every < 1:
         raise ValueError(f"kg_every must be >= 1, got {kg_every}")
-    min_slots = int(-(-min_agreement * num_perm // 1))
-    # Everything that makes two signatures comparable: the construction,
-    # its version constant, AND the construction parameters.  num_perm
-    # changes the signature length (zip-truncated agreement can never
-    # reach min_slots), bands/shingle_k change band_hash keys and
-    # signature content — parameter drift across a resume is exactly as
-    # recall-destroying as a construction bump, so all of it is
-    # persisted with the state and fails loudly on mismatch (round-7
-    # self-review).  min_agreement is NOT stamped: it is a comparison
-    # threshold, not part of the signature construction — retuning it
-    # across a restart is legitimate.
-    sig_version = MINHASH_KERNEL_VERSION
-    sig_params = (f"construction=kernel;num_perm={num_perm};"
-                  f"bands={bands};shingle_k={shingle_k}")
     # The persisted-state compatibility probe only needs to run on the
     # FIRST batch that loads state after a (re)start: every state
     # version this query writes later carries the current constants, so
@@ -799,11 +745,10 @@ def stream_ingest(
             if audit is not None:
                 _write_batch_idempotent(audit, qaudit_dir, batch_id)
             batch_df = gated
-            banded = sig_banded(
-                batch_df.select("url", "warc_ts", "text"),
-                num_perm, bands, shingle_k,
-            )
-            base_v = _latest_version(spark, state_dir, below=batch_id)
+            banded = sig_banded(batch_df.select("url", "warc_ts", "text"))
+            base_v = max(_committed_versions(spark, state_dir, "state_v=",
+                                             up_to=batch_id - 1),
+                         default=None)
             if base_v is None:
                 reps = spark.createDataFrame([], STATE_SCHEMA)
             else:
@@ -813,10 +758,12 @@ def stream_ingest(
                 # Mixed-signature resume detection (round-6 advice + round-7
                 # params extension): rep signatures from an older kernel OR
                 # a different (num_perm, bands, shingle_k) never agree with
-                # current arrivals, so recall would silently collapse — fail
-                # loudly instead.  Runs once per query (first state load);
-                # the state table is bounded (max_reps per active bucket),
-                # so even that one probe is cheap.
+                # current arrivals — num_perm changes the signature length,
+                # bands/shingle_k the band keys and signature content — so
+                # recall would silently collapse; fail loudly instead.
+                # Runs once per query (first state load); the state table
+                # is bounded (GATE_MAX_REPS per bucket), so even that one
+                # probe is cheap.
                 if not state_checked[0]:
                     missing = [c for c in ("sig_version", "sig_params")
                                if c not in reps.columns]
@@ -829,26 +776,25 @@ def stream_ingest(
                             "with a fresh out_dir/checkpoint"
                         )
                     stale = reps.filter(
-                        (F.col("sig_version") != sig_version)
-                        | (F.col("sig_params") != sig_params)
+                        (F.col("sig_version") != MINHASH_KERNEL_VERSION)
+                        | (F.col("sig_params") != GATE_SIG_PARAMS)
                     ).select("sig_version", "sig_params").first()
                     if stale is not None:
                         raise RuntimeError(
                             f"dedup state {state_dir}/state_v={base_v} holds "
                             f"signature version {stale[0]} with params "
                             f"[{stale[1]}], current code builds version "
-                            f"{sig_version} with [{sig_params}]; "
-                            "mixed-signature near-dup comparison silently "
-                            "loses recall — restart the ingest with a fresh "
-                            "out_dir/checkpoint (or the original params)"
+                            f"{MINHASH_KERNEL_VERSION} with "
+                            f"[{GATE_SIG_PARAMS}]; mixed-signature near-dup "
+                            "comparison silently loses recall — restart the "
+                            "ingest with a fresh out_dir/checkpoint (or the "
+                            "code that wrote the state)"
                         )
                     state_checked[0] = True
             folded = (
                 banded.groupby("band_idx", "band_hash")
                 .cogroup(reps.groupby("band_idx", "band_hash"))
-                .applyInPandas(
-                    _gate_cogroup_fn(min_slots, max_reps), GATE_OUT_SCHEMA
-                )
+                .applyInPandas(_gate_cogroup, GATE_OUT_SCHEMA)
                 .persist()
             )
             flags = folded.filter(F.col("kind") == "flag").select(
@@ -864,8 +810,8 @@ def stream_ingest(
                 "band_idx", "band_hash", "url", "warc_ts", "sig", "rep_order",
                 "bucket_latest",
             ).withColumn(
-                "sig_version", F.lit(sig_version)
-            ).withColumn("sig_params", F.lit(sig_params))
+                "sig_version", F.lit(MINHASH_KERNEL_VERSION)
+            ).withColumn("sig_params", F.lit(GATE_SIG_PARAMS))
             # by here at least one action over the cached plan has
             # completed (audit write or the gate fold behind the flags
             # write), so the observed horizon is available without
@@ -875,7 +821,8 @@ def stream_ingest(
             if horizon is not None:
                 new_state = new_state.filter(
                     F.col("bucket_latest")
-                    >= F.lit(horizon) - F.expr(f"INTERVAL {ttl_seconds} SECONDS")
+                    >= F.lit(horizon)
+                    - F.expr(f"INTERVAL {GATE_TTL_SECONDS} SECONDS")
                 )
             new_state.write.mode("overwrite").parquet(
                 posixpath.join(state_dir, f"state_v={batch_id}")
@@ -891,7 +838,7 @@ def stream_ingest(
                 .select("url", "warc_ts").distinct()
             )
             kept = batch_df.join(dup_events, ["url", "warc_ts"], "left_anti")
-            chunks = build_chunks(kept, chunk_size, overlap, with_embeddings=False)
+            chunks = build_chunks(kept, with_embeddings=False)
             _write_batch_idempotent(chunks, chunks_dir, batch_id)
 
             if triples:
@@ -912,7 +859,7 @@ def stream_ingest(
                 rebuild(
                     spark, out_dir, batch_id, aliases=aliases,
                     n_buckets=n_buckets, embedding_dim=embedding_dim,
-                    salt=salt, triples_schema=tri.schema,
+                    triples_schema=tri.schema,
                 )
         finally:
             if folded is not None:

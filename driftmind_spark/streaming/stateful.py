@@ -11,6 +11,11 @@ the bucket has room.  ``stream_ingest`` runs the fold per micro-batch
 with the representatives persisted between batches;
 ``near_dup_flags_batch`` runs the SAME fold over a static frame in one
 pass, so the two must agree row for row.
+
+The gate's tuning lives in the constants below.  The signature
+construction's part of it (``GATE_SIG_PARAMS``) is stamped into the
+persisted state, and a resume under other values fails loudly; the
+threshold, the bucket capacity and the TTL are not stamped.
 """
 
 from __future__ import annotations
@@ -18,25 +23,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+GATE_NUM_PERM = 64
+GATE_BANDS = 8
+GATE_SHINGLE_K = 3
+# a near-dup agrees with a representative on this share of slots
+GATE_MIN_AGREEMENT = 0.9
+GATE_MIN_SLOTS = int(-(-GATE_MIN_AGREEMENT * GATE_NUM_PERM // 1))  # ceil
+# representatives kept per band bucket
+GATE_MAX_REPS = 8
+# event-time TTL of a band bucket's representatives
+GATE_TTL_SECONDS = 7 * 24 * 3600
+# everything that makes two signatures comparable, stamped into the state
+GATE_SIG_PARAMS = (f"construction=kernel;num_perm={GATE_NUM_PERM};"
+                   f"bands={GATE_BANDS};shingle_k={GATE_SHINGLE_K}")
+
 DUP_OUT_SCHEMA = (
     "url string, warc_ts timestamp, band_idx int, dup_of string, "
     "agreement int, saturated boolean"
 )
 
 
-def sig_banded(pages: DataFrame, num_perm: int, bands: int,
-               shingle_k: int) -> DataFrame:
+def sig_banded(pages: DataFrame) -> DataFrame:
     """(url, warc_ts, text) -> (url, warc_ts, sig, band_idx, band_hash)
     rows, one per band: ONE numpy MinHash UDF per page (kernels/hashing
     — per-row, so it needs no aggregation), band keys derived JVM-side
     from signature slices."""
     from ..functions.udfs import make_minhash_sig_udf
 
-    sig_udf = make_minhash_sig_udf(num_perm=num_perm, shingle_k=shingle_k)
+    sig_udf = make_minhash_sig_udf(GATE_NUM_PERM, GATE_SHINGLE_K)
     with_sig = pages.select(
         "url", "warc_ts", sig_udf("text").alias("sig")
     )
-    rows_per_band = num_perm // bands
+    rows_per_band = GATE_NUM_PERM // GATE_BANDS
     band_structs = [
         F.struct(
             F.lit(b).alias("band_idx"),
@@ -50,7 +68,7 @@ def sig_banded(pages: DataFrame, num_perm: int, bands: int,
                 )
             ).alias("band_hash"),
         )
-        for b in range(bands)
+        for b in range(GATE_BANDS)
     ]
     return with_sig.select(
         "url", "warc_ts", "sig",
@@ -68,8 +86,8 @@ def _fold_bucket(rows, reps, min_slots: int, max_reps: int):
     bucket has capacity.  A distinct row arriving at a FULL bucket is
     emitted as ``(url, ts, None, 0, saturated=True)`` — the saturation
     signal: its later duplicates will pass this band undetected, so
-    operators watching the output can raise bands/max_reps instead of
-    silently losing recall (the streaming analog of the batch
+    operators watching the output can raise GATE_BANDS/GATE_MAX_REPS
+    instead of silently losing recall (the streaming analog of the batch
     hot-band-stats frame).  Returns (out_rows, reps) with out_rows =
     (url, ts, dup_of, agreement, saturated).
 
@@ -94,18 +112,10 @@ def _fold_bucket(rows, reps, min_slots: int, max_reps: int):
     return out, reps
 
 
-def near_dup_flags_batch(
-    pages: DataFrame,
-    num_perm: int = 64,
-    bands: int = 8,
-    shingle_k: int = 3,
-    min_agreement: float = 0.9,
-    max_reps: int = 8,
-) -> DataFrame:
+def near_dup_flags_batch(pages: DataFrame) -> DataFrame:
     """Batch analog of ``stream_ingest``'s near-dup gate (its
     differential reference): the SAME ``_fold_bucket`` applied per band
     bucket over event-ordered rows, in one pass over a static frame."""
-    min_slots = int(-(-min_agreement * num_perm // 1))
 
     def fold(pdf):
         import pandas as pd
@@ -114,7 +124,7 @@ def near_dup_flags_batch(
         band_idx = int(pdf["band_idx"].iloc[0])
         rows = [(u, t, list(s)) for u, t, s in
                 zip(pdf["url"], pdf["warc_ts"], pdf["sig"])]
-        dups, _ = _fold_bucket(rows, [], min_slots, max_reps)
+        dups, _ = _fold_bucket(rows, [], GATE_MIN_SLOTS, GATE_MAX_REPS)
         return pd.DataFrame(
             [(u, t, band_idx, d, a, s) for (u, t, d, a, s) in dups],
             columns=["url", "warc_ts", "band_idx", "dup_of",
@@ -122,8 +132,7 @@ def near_dup_flags_batch(
         )
 
     return (
-        sig_banded(pages.select("url", "warc_ts", "text"),
-                   num_perm, bands, shingle_k)
+        sig_banded(pages.select("url", "warc_ts", "text"))
         .groupBy("band_idx", "band_hash")
         .applyInPandas(fold, DUP_OUT_SCHEMA)
     )

@@ -152,13 +152,35 @@ def test_incremental_merge_of_two_prev_components(spark, tmp_path):
             == canon["Alpha Foo Companies"])
 
 
+def test_persisted_stamps_are_pinned():
+    """The stamps persisted with streaming dedup state, incremental KG
+    state and batch dedup lineage, written out literally: a tuning
+    constant cannot change without a visible edit here and the version
+    bump the resume guards rely on."""
+    from driftmind_spark.kernels.hashing import MINHASH_KERNEL_VERSION
+    from driftmind_spark.kg.graph import EDGE_SALT
+    from driftmind_spark.kg.incremental import KG_STATE_VERSION, state_params
+    from driftmind_spark.operators.dedup import MINHASH_SIG_VERSION
+    from driftmind_spark.streaming.stateful import GATE_SIG_PARAMS
+
+    assert GATE_SIG_PARAMS == (
+        "construction=kernel;num_perm=64;bands=8;shingle_k=3")
+    assert state_params(64, None) == (
+        "kgstate=1;num_perm=128;bands=32;shingle_k=3;seed=42;cap=256;"
+        "jaccard=0.5;cosine=0.85;embedding_dim=64;aliases=none")
+    assert MINHASH_SIG_VERSION == 2
+    assert MINHASH_KERNEL_VERSION == 1
+    assert KG_STATE_VERSION == 1
+    assert EDGE_SALT == 8  # the salt column of incremental snapshot meta
+
+
 def test_cap_crossing_returns_none(spark, tmp_path, monkeypatch):
     """Pushing a band bucket that previously generated pairs over the
     hot-bucket cap must refuse the delta path (the full rebuild would
     retract those pairs, so incremental state could diverge)."""
     import driftmind_spark.kg.incremental as kginc
 
-    monkeypatch.setattr(kginc, "_MAX_BUCKET", 2)
+    monkeypatch.setattr(kginc, "LSH_MAX_BUCKET", 2)
     # identical norms -> identical band sets -> every bucket holds all
     # members of this cluster
     t1 = _mk_triples(spark, [

@@ -832,20 +832,14 @@ def test_short_docs_get_signatures(spark):
 def test_corpus_dedup_params_shared_with_stats(spark):
     """Round-6 advice fix: the observability call must see the SAME
     signature construction as the production pair run —
-    corpus_dedup_params is the single source of truth for both."""
+    CORPUS_DEDUP_SIG_DEFAULTS is the single source of truth for both."""
     from driftmind_spark.operators.dedup import (
         CORPUS_DEDUP_SIG_DEFAULTS,
-        corpus_dedup_params,
         minhash_hot_band_stats,
     )
 
-    p = corpus_dedup_params()
-    assert p == CORPUS_DEDUP_SIG_DEFAULTS
+    p = CORPUS_DEDUP_SIG_DEFAULTS
     assert p["portable"] is False, "defaults must match the production path"
-    assert corpus_dedup_params(num_perm=16)["num_perm"] == 16
-    assert corpus_dedup_params(max_bucket_size=0)["max_bucket_size"] is None
-    with pytest.raises(TypeError, match="min_agreement"):
-        corpus_dedup_params(min_agreement=0.8)  # not a signature param
 
     docs = spark.createDataFrame(
         [(i, f"doc number {i} with some shared words in it plus token{i}")
@@ -854,7 +848,7 @@ def test_corpus_dedup_params_shared_with_stats(spark):
     )
     # stats call with the resolved params runs against the production
     # (portable=False) construction without error
-    stats = minhash_hot_band_stats(docs, **corpus_dedup_params())
+    stats = minhash_hot_band_stats(docs, **CORPUS_DEDUP_SIG_DEFAULTS)
     assert stats.columns == ["band_idx", "band_hash", "bucket_size"]
     assert stats.count() == 0  # 6 distinct docs saturate no bucket
 
@@ -863,20 +857,16 @@ def test_corpus_dedup_params_none_disables_cap(spark):
     """Round-6 review fix: max_bucket_size=None means DISABLE the cap
     (the documented pre-round-6 semantics), not 'use the default'."""
     from driftmind_spark.operators.dedup import (
-        corpus_dedup_params, minhash_hot_band_stats,
+        CORPUS_DEDUP_SIG_DEFAULTS, minhash_hot_band_stats,
     )
 
-    assert corpus_dedup_params(max_bucket_size=None)["max_bucket_size"] is None
-    assert corpus_dedup_params(max_bucket_size=0)["max_bucket_size"] is None
-    assert corpus_dedup_params()["max_bucket_size"] == 256
-    assert corpus_dedup_params(num_perm=None)["num_perm"] == 64  # None=unset
     docs = spark.createDataFrame(
         [(i, f"shared words everywhere {i}") for i in range(4)],
         "doc_id long, text string",
     )
     # stats with a disabled cap: nothing is ever dropped -> empty frame
     stats = minhash_hot_band_stats(
-        docs, **corpus_dedup_params(max_bucket_size=None)
+        docs, **{**CORPUS_DEDUP_SIG_DEFAULTS, "max_bucket_size": None}
     )
     assert stats.count() == 0
 

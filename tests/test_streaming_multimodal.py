@@ -576,33 +576,10 @@ def test_stream_ingest_state_sig_params_guard(spark, tmp_path_factory):
     version bump — zip-truncated agreement can never reach min_slots and
     band keys stop lining up, so every cross-restart near-dup would be
     silently kept.  The resumed query must fail loudly instead."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from driftmind_spark.streaming.ingest import stream_ingest
-    from driftmind_spark.streaming.stream import read_pages_stream
-    from driftmind_spark.synth import generate_pages
-
-    d = str(tmp_path_factory.mktemp("sigp_pages"))
-    pages, _ = generate_pages(20, min_sent=8, max_sent=12)
-    p0 = f"{d}/part-0.parquet"
-    pq.write_table(pages, p0)
-    os.utime(p0, (1_700_000_000, 1_700_000_000))
-
-    out = str(tmp_path_factory.mktemp("sigp_out"))
-    ckpt = str(tmp_path_factory.mktemp("sigp_ckpt"))
-    q = stream_ingest(read_pages_stream(spark, d, max_files_per_trigger=1),
-                      out, ckpt, num_perm=64)
-    q.awaitTermination(300)
-
-    pages2, _ = generate_pages(20, start=20, min_sent=8, max_sent=12)
-    p1 = f"{d}/part-1.parquet"
-    pq.write_table(pages2, p1)
-    os.utime(p1, (1_700_000_001, 1_700_000_001))
-
-    q = stream_ingest(read_pages_stream(spark, d, max_files_per_trigger=1),
-                      out, ckpt, num_perm=32)
+    q = _resume_tampered_state(
+        spark, tmp_path_factory, "sigp", "sig_params",
+        F.regexp_replace("sig_params", ";num_perm=64;", ";num_perm=32;"),
+    )
     with pytest.raises(Exception, match="num_perm=64"):
         q.awaitTermination(300)
         raise AssertionError("query should have failed on changed params")
