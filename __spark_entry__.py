@@ -169,7 +169,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     sf_dir = "/root/testdata/sf0.001"
     docs = _t(spark, sf_dir, "documents")
-    chunk_udf = make_chunk_udf(300, 20)
+    chunk_udf = make_chunk_udf()
     embed = make_embed_udf(64)
     chunks = (
         docs.filter(F.trim("text") != "")
@@ -688,7 +688,7 @@ def q_chunk_documents(spark, sf_dir):
     from driftmind_spark.functions.udfs import make_chunk_udf
 
     d = _t(spark, sf_dir, "documents")
-    chunk_udf = make_chunk_udf(300, 20)
+    chunk_udf = make_chunk_udf()
     return d.select(
         "doc_id", F.posexplode(chunk_udf("text")).alias("chunk_index", "content")
     )
@@ -704,7 +704,7 @@ def q_catalog_top3(spark, sf_dir):
     from driftmind_spark.functions.udfs import make_chunk_udf
 
     d = _spread(spark, _t(spark, sf_dir, "documents"))
-    chunk_udf = make_chunk_udf(300, 20)
+    chunk_udf = make_chunk_udf()
     chunks = d.select(
         "doc_id", F.posexplode(chunk_udf("text")).alias("chunk_index", "content")
     )
@@ -738,7 +738,7 @@ def _legacy_chunks_df(spark, sf_dir):
     d = _spread(spark, _t(spark, sf_dir, "documents"))
     chunks = d.select(
         "doc_id", "n_chars",
-        F.posexplode(make_chunk_udf(300, 20)("text")).alias(
+        F.posexplode(make_chunk_udf()("text")).alias(
             "chunk_index", "content"
         ),
     )

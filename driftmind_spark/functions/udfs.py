@@ -18,15 +18,16 @@ from ..kernels.textproc import chunk_text
 
 
 # ---------------------------------------------------------------------------
-# Chunking (F1/F2): text -> array<string> of chunks; chunk indices come from
-# posexplode (W4), so no window shuffle is ever needed for numbering.
+# Chunking (F1/F2): text -> array<string> of chunks (``chunk_text``'s own
+# 300/20 defaults); chunk indices come from posexplode (W4), so no window
+# shuffle is ever needed for numbering.
 # ---------------------------------------------------------------------------
 
 
-def make_chunk_udf(chunk_size: int = 300, overlap: int = 20):
+def make_chunk_udf():
     @pandas_udf(ArrayType(StringType()))
     def chunk_udf(text: pd.Series) -> pd.Series:
-        return text.map(lambda t: chunk_text(t, chunk_size, overlap))
+        return text.map(chunk_text)
 
     return chunk_udf
 

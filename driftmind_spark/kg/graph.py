@@ -23,7 +23,7 @@ from pyspark.sql.types import StructType
 from .blocking import candidate_pairs, mentions_from_triples
 from .cc import canonical_mapping, connected_components
 from .lineage import N_BUCKETS
-from .linking import all_link_edges
+from .linking import EMBEDDING_DIM, all_link_edges
 
 # Salt of the edges table's bucket key: a hot head subject spreads over
 # this many pseudo-random buckets (see :func:`build_edges`).  Recorded in
@@ -34,7 +34,7 @@ EDGE_SALT = 8
 def build_nodes(
     triples: DataFrame,
     aliases: DataFrame | None = None,
-    embedding_dim: int = 64,
+    embedding_dim: int = EMBEDDING_DIM,
     n_buckets: int = N_BUCKETS,
 ) -> tuple[DataFrame, tuple[DataFrame, ...]]:
     """triples -> canonical nodes table (mentions -> LSH candidate pairs

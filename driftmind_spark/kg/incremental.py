@@ -71,7 +71,12 @@ from .blocking import (
 )
 from .cc import connected_components
 from .lineage import N_BUCKETS
-from .linking import COSINE_THRESHOLD, JACCARD_THRESHOLD, score_candidate_pairs
+from .linking import (
+    COSINE_THRESHOLD,
+    EMBEDDING_DIM,
+    JACCARD_THRESHOLD,
+    score_candidate_pairs,
+)
 
 # Bump on ANY change to the incremental dataflow that makes persisted
 # state (bands / alias_hubs / canonical mapping) incomparable with what
@@ -141,7 +146,7 @@ def incremental_nodes(
     prev_hubs: DataFrame,
     delta_triples: DataFrame,
     aliases: DataFrame | None = None,
-    embedding_dim: int = 64,
+    embedding_dim: int = EMBEDDING_DIM,
     n_buckets: int = N_BUCKETS,
 ) -> tuple[DataFrame, DataFrame, DataFrame, tuple[DataFrame, ...]] | None:
     """Delta-linking + contracted CC.  Returns ``(nodes, new_bands,

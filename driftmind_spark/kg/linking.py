@@ -24,10 +24,13 @@ from ..functions.text import cosine_sim
 from ..functions.udfs import make_embed_udf
 from .blocking import LSH_SHINGLE_K
 
-# link-evidence thresholds, shared with the incremental rebuild
-# (kg/incremental.py), which stamps them into its persisted state
+# link-evidence thresholds and the KG's embedding dimension (the default
+# of every entry point that embeds chunks or link surfaces), shared with
+# the incremental rebuild (kg/incremental.py), which stamps them into its
+# persisted state
 JACCARD_THRESHOLD = 0.5
 COSINE_THRESHOLD = 0.85
+EMBEDDING_DIM = 64
 
 def make_jaccard_udf():
     """Shingle-Jaccard scorer over ``LSH_SHINGLE_K``-char shingles (the
@@ -110,7 +113,7 @@ def make_jaccard_udf():
 
 def score_candidate_pairs(
     pairs: DataFrame,
-    embedding_dim: int = 128,
+    embedding_dim: int = EMBEDDING_DIM,
 ) -> DataFrame:
     """K4: verified link edges (src, dst, jaccard, cosine, evidence)."""
     jac = make_jaccard_udf()
@@ -167,7 +170,7 @@ def all_link_edges(
     mentions: DataFrame,
     aliases: DataFrame | None,
     pairs: DataFrame,
-    embedding_dim: int = 128,
+    embedding_dim: int = EMBEDDING_DIM,
 ) -> DataFrame:
     edges = score_candidate_pairs(pairs, embedding_dim)
     if aliases is not None:

@@ -4,6 +4,8 @@
         └─> extracted_dedup (optional near-dup    [stage: dedup,   global]
             MinHash-LSH corpus dedup + audit)
         └─> chunks (extract/chunk/embed)          [stage: chunks,  bucketed]
+              └─> chunk_dedup_audit (optional     [stage: chunk_dedup, global]
+                  dropped repeats; kept = chunks ⋉̸ audit, at read time)
         └─> triples (OpenIE)                      [stage: triples, bucketed]
               └─> mentions ─> LSH pairs ─> links ─> components
                     └─> nodes (canonical map)     [stage: nodes,   global]
@@ -39,6 +41,7 @@ from pyspark.sql.types import StructType
 from ..operators.chunking import build_chunks, extract_text_table
 from . import lineage as ln
 from .graph import build_edges, build_nodes, planned_nodes_schema
+from .linking import EMBEDDING_DIM
 from .triples import extract_triples_df
 
 
@@ -97,7 +100,7 @@ def run(
     out_dir: str,
     run_id: str = "run-1",
     n_buckets: int = ln.N_BUCKETS,
-    embedding_dim: int = 64,
+    embedding_dim: int = EMBEDDING_DIM,
     fail_after_stage: str | None = None,
     quality: bool = False,
     dedup: bool = False,
@@ -125,10 +128,11 @@ def run(
     stage (operators/passages.py::chunk_dedup — the Lee-et-al
     intra-document layer, default thresholds): chunk rows whose
     normalized content repeats corpus-wide keep only their first
-    occurrence.  Kept rows land in ``chunks_dedup``;
-    dropped rows (narrow: ids + fingerprint + keeper) become
-    ``chunk_dedup_audit``.  Chunk boundaries stay byte-exact — dedup
-    only FILTERS rows, so the parity contract is untouched.
+    occurrence.  The stage writes only its decision, the dropped rows
+    (narrow: ids + fingerprint + keeper), as ``chunk_dedup_audit``; the
+    kept chunks are ``chunks`` left-anti-joined with it on ``(url,
+    chunk_index)``.  Chunk boundaries stay byte-exact — dedup only
+    FILTERS rows, so the parity contract is untouched.
 
     ``dedup=True`` inserts a corpus-level near-duplicate dedup stage
     between extract and chunk — the step a training-data pipeline runs
@@ -339,32 +343,23 @@ def run(
     # Global like the dedup stage: fingerprints repeat ACROSS url buckets, so
     # bucket-level resume can't apply; the keeper election is deterministic
     # (md5 fingerprint, min-(url,chunk_index) keeper), so a killed run
-    # re-derives identical tables under dynamic partition overwrite.
+    # re-derives an identical audit under dynamic partition overwrite.
     if chunk_dedup:
         _desc("chunk_dedup")
-        cdedup_path = os.path.join(out_dir, "chunks_dedup")
         cdaudit_path = os.path.join(out_dir, "chunk_dedup_audit")
         if not lineage.stage_marker_done("chunk_dedup"):
             from ..operators.passages import chunk_dedup as _chunk_dedup
 
-            chunks_all = _read(chunks_path, chunks_schema)
-            # two actions over the fingerprint join = two scans of the
-            # chunks parquet — deliberate, same rationale as the quality
-            # stage: `res` carries chunk content + embeddings, and
-            # caching that at corpus scale costs more than the re-scan
-            res = _chunk_dedup(chunks_all)
-            # audit is NARROW (ids + fingerprint + keeper): the dropped
-            # text is recoverable via the keeper row, so at 100 TB the
-            # audit table costs ids, not content
+            res = _chunk_dedup(_read(chunks_path, chunks_schema))
+            # only the decision is written, NARROW (ids + fingerprint +
+            # keeper): the kept chunks are `chunks` anti-joined with it at
+            # read time, so at 100 TB the stage costs ids, not content
             audit = res.filter(~F.col("is_kept")).select(
                 "url", "chunk_index", "bucket", "fingerprint",
                 "n_occurrences", "keeper_doc", "keeper_idx",
             )
             n_dropped = _write_bucketed(audit, cdaudit_path)["rows"]
-            # the keeper join shuffled rows by fingerprint, so the kept
-            # write re-clusters by bucket (no pre_clustered shortcut here)
-            kept = res.filter(F.col("is_kept")).select(*chunks_all.columns)
-            n_kept = _write_bucketed(kept, cdedup_path)["rows"]
+            n_kept = lineage.committed_row_count("chunks") - n_dropped
             lineage.commit_global("chunk_dedup", n_kept,
                                   {"chunk_dedup_dropped": n_dropped})
         metrics["chunk_dedup_kept"] = lineage.committed_row_count(

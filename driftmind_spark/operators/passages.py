@@ -7,8 +7,9 @@ Makes Language Models Better", ACL 2022; C4's repeated-span rule).
 otherwise-distinct documents* — boilerplate paragraphs, license blocks,
 navigation text that survives document-level dedup because the
 surrounding text differs.  It is the pipeline's ``chunk_dedup`` stage
-(kg/pipeline.py).  No reference counterpart (DriftMind's closest analog
-is the embed-cache ``dropDuplicates(norm_text)``,
+(kg/pipeline.py), which persists only the dropped rows.  No reference
+counterpart (DriftMind's closest analog is the embed-cache
+``dropDuplicates(norm_text)``,
 Services/EmbeddingService.cs:33-58, which dedups embedding COMPUTE but
 never removes the repeated text from the corpus).
 
@@ -42,53 +43,43 @@ from .dedup import NORM as _norm
 __all__ = ["chunk_dedup"]
 
 
-def chunk_dedup(
-    chunks: DataFrame,
-    doc_col: str = "url",
-    idx_col: str = "chunk_index",
-    content_col: str = "content",
-    min_chars: int = 50,
-    min_repeats: int = 2,
-) -> DataFrame:
+def chunk_dedup(chunks: DataFrame, min_chars: int = 50) -> DataFrame:
     """First-occurrence keeper election over an already-chunked table
-    (the pipeline's chunks stage output): a chunk whose normalized
-    content (at least ``min_chars`` long) occurs ``min_repeats`` or more
-    times corpus-wide is kept only at its minimum ``(doc, idx)``
-    occurrence.  Input columns pass through, plus ``(fingerprint,
-    n_occurrences, keeper_doc, keeper_idx, is_kept)``.  ``filter(is_kept)`` is the deduplicated chunks table —
-    what the pipeline's optional chunk-dedup stage writes.
+    (the pipeline's chunks stage output, keyed by ``(url, chunk_index)``):
+    a chunk whose normalized ``content`` (at least ``min_chars`` long)
+    occurs more than once corpus-wide is kept only at its minimum
+    ``(url, chunk_index)`` occurrence.  Input columns pass through, plus
+    ``(fingerprint, n_occurrences, keeper_doc, keeper_idx, is_kept)``.
+    ``filter(is_kept)`` is the deduplicated chunks table; the pipeline's
+    chunk-dedup stage persists only ``filter(~is_kept)``, narrowed to ids,
+    fingerprint and keeper, as ``chunk_dedup_audit``, and its kept set is
+    ``chunks`` left-anti-joined with that audit on ``(url, chunk_index)``.
 
     Operating on chunk rows (rather than re-splitting text) keeps the
     byte-parity chunking contract untouched: chunk boundaries are still
     exactly the reference's, and dedup only FILTERS rows.
 
     Re-runnable on its own output: a frame already carrying the derived
-    columns (a persisted ``chunks_dedup`` table, an audit join) has them
+    columns (an earlier pass's kept rows, an audit join) has them
     dropped and recomputed instead of colliding ambiguously."""
     derived = ("fingerprint", "n_occurrences", "keeper_doc", "keeper_idx",
                "is_kept")
     chunks = chunks.drop(*[c for c in derived if c in chunks.columns])
-    norm_len = F.length(_norm(F.col(content_col)))
+    fingerprint = F.md5(_norm(F.col("content")))
     occ = (
-        chunks.filter(norm_len >= min_chars)
-        .groupBy(F.md5(_norm(F.col(content_col))).alias("fingerprint"))
+        chunks.filter(F.length(_norm(F.col("content"))) >= min_chars)
+        .groupBy(fingerprint.alias("fingerprint"))
         .agg(
-            F.min(
-                F.struct(
-                    F.col(doc_col).alias("doc"), F.col(idx_col).alias("idx")
-                )
-            ).alias("keeper"),
+            F.min(F.struct(F.col("url").alias("doc"),
+                           F.col("chunk_index").alias("idx"))).alias("keeper"),
             F.count("*").alias("n_occurrences"),
         )
-        .filter(F.col("n_occurrences") >= min_repeats)
+        .filter(F.col("n_occurrences") > 1)
     )
-    with_fp = chunks.withColumn(
-        "fingerprint", F.md5(_norm(F.col(content_col)))
-    )
-    j = with_fp.join(occ, "fingerprint", "left")
-    first = (F.col(doc_col) == F.col("keeper.doc")) & (
-        F.col(idx_col) == F.col("keeper.idx")
-    )
+    j = chunks.withColumn("fingerprint", fingerprint).join(
+        occ, "fingerprint", "left")
+    first = (F.col("url") == F.col("keeper.doc")) & (
+        F.col("chunk_index") == F.col("keeper.idx"))
     return j.select(
         *chunks.columns,
         "fingerprint",

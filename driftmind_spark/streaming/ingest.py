@@ -42,6 +42,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..kg.graph import EDGE_SALT
 from ..kg.lineage import N_BUCKETS, bucket_col
+from ..kg.linking import EMBEDDING_DIM
 from ..sources.tables import hadoop_fs
 from .stateful import (
     GATE_MAX_REPS,
@@ -329,7 +330,7 @@ def rebuild_kg_snapshot(
     version: int,
     aliases: DataFrame | None = None,
     n_buckets: int = N_BUCKETS,
-    embedding_dim: int = 64,
+    embedding_dim: int = EMBEDDING_DIM,
     triples_schema=None,
 ) -> bool:
     """The batch pipeline's nodes + edges stages (shared dataflow:
@@ -429,7 +430,7 @@ def rebuild_kg_snapshot_incremental(
     version: int,
     aliases: DataFrame | None = None,
     n_buckets: int = N_BUCKETS,
-    embedding_dim: int = 64,
+    embedding_dim: int = EMBEDDING_DIM,
     triples_schema=None,
 ) -> bool:
     """Incremental variant of :func:`rebuild_kg_snapshot` — O(delta +
@@ -599,7 +600,7 @@ def stream_ingest(
     kg_incremental: bool = False,
     aliases: DataFrame | None = None,
     n_buckets: int = N_BUCKETS,
-    embedding_dim: int = 64,
+    embedding_dim: int = EMBEDDING_DIM,
 ):
     """pages stream -> ``{out_dir}/dup_flags`` (per-band verdicts, incl.
     saturation signals) + ``{out_dir}/chunks`` (chunk rows for KEPT

@@ -42,7 +42,7 @@ def _work(span: tuple[int, int]) -> int:
     n = 0
     for h in _HTMLS[lo:hi]:
         text = extract_main_text(h)
-        norms = [normalize_for_caching(c) for c in chunk_text(text, 300, 20)]
+        norms = [normalize_for_caching(c) for c in chunk_text(text)]
         if norms:
             hashed_ngram_embeddings_batch(norms, 64)
         n += len(norms) + len(extract_triples(text))

@@ -64,7 +64,7 @@ def fixture_chunk_documents(docs: pa.Table) -> pa.Table:
     for doc_id, text in zip(
         docs.column("doc_id").to_pylist(), docs.column("text").to_pylist()
     ):
-        for i, ch in enumerate(chunk_text(text, 300, 20)):
+        for i, ch in enumerate(chunk_text(text)):
             ids.append(doc_id)
             idxs.append(i)
             contents.append(ch)

@@ -163,6 +163,40 @@ def test_candidate_pairs_cap_is_broadcast_anti(spark, triples_df):
     assert capped <= uncapped
 
 
+def test_link_scoring_defaults_to_the_kg_embedding_dim(spark, triples_df):
+    """Every entry point that embeds chunks or link surfaces defaults to
+    the one KG dimension, so a direct ``all_link_edges`` call scores the
+    same pairs, with the same cosines, as the pipeline's nodes stage."""
+    import inspect
+
+    from driftmind_spark.kg import graph, incremental, linking, pipeline
+    from driftmind_spark.streaming import ingest
+
+    for fn in (linking.score_candidate_pairs, linking.all_link_edges,
+               graph.build_nodes, incremental.incremental_nodes,
+               pipeline.run, ingest.stream_ingest,
+               ingest.rebuild_kg_snapshot,
+               ingest.rebuild_kg_snapshot_incremental):
+        default = inspect.signature(fn).parameters["embedding_dim"].default
+        assert default == linking.EMBEDDING_DIM == 64, fn.__qualname__
+
+    aliases = spark.createDataFrame(sorted(ALIASES.items()),
+                                    "alias string, entity string")
+    _, (mentions, pipeline_links) = graph.build_nodes(triples_df, aliases)
+    direct = linking.all_link_edges(mentions, aliases,
+                                    candidate_pairs(mentions))
+
+    def links(df):
+        return sorted(tuple(r) for r in df.select(
+            "src", "dst", "evidence", "cosine").collect())
+
+    got = links(direct)
+    assert any(e == "cosine" or c < 1.0 for _, _, e, c in got)
+    assert got == links(pipeline_links)
+    mentions.unpersist()
+    pipeline_links.unpersist()
+
+
 def test_dedup_triples_counts(spark, triples_df):
     dd = dedup_triples(triples_df)
     assert dd.count() <= triples_df.count()
@@ -229,7 +263,11 @@ def test_edges_resolved_to_canonicals(spark, pipeline_out):
 # ---- resumability (north_rule): kill mid-run, resume, identical output --------
 
 def _table_fingerprint(spark, path, cols):
-    df = spark.read.parquet(path).select(*cols)
+    return _df_fingerprint(spark.read.parquet(path), cols)
+
+
+def _df_fingerprint(df, cols):
+    df = df.select(*cols)
     row = df.agg(
         F.count("*").alias("n"),
         F.bit_xor(F.xxhash64(*cols)).alias("h"),
@@ -673,18 +711,30 @@ def test_quality_kill_and_resume_identical(spark, junk_corpus,
 
 # ---- passage-level chunk dedup stage (round 6) ------------------------------
 
+def _kept_chunks(spark, out):
+    """The chunk-dedup stage's kept set: ``chunks`` left-anti-joined with
+    the dropped rows in ``chunk_dedup_audit``."""
+    return spark.read.parquet(f"{out}/chunks").join(
+        spark.read.parquet(f"{out}/chunk_dedup_audit")
+        .select("url", "chunk_index"),
+        ["url", "chunk_index"], "left_anti",
+    )
+
+
 def test_chunk_dedup_stage(spark, dup_corpus, tmp_path_factory):
     """chunk_dedup=True: repeated chunk content keeps only its first
     occurrence; kept + dropped = chunks; audit is consistent; and the
-    kept table has no repeated eligible fingerprints."""
+    kept set has no repeated eligible fingerprints."""
     out = str(tmp_path_factory.mktemp("kg_cdedup_out"))
     m = run(spark, dup_corpus, out, embedding_dim=32, n_buckets=8,
             chunk_dedup=True)
     assert m["chunk_dedup_kept"] + m["chunk_dedup_dropped"] == m["chunks"]
     # the dup corpus plants verbatim clones -> repeated chunks exist
     assert m["chunk_dedup_dropped"] > 0
+    # the stage records its decision only: no second chunks table
+    assert not os.path.exists(f"{out}/chunks_dedup")
 
-    kept = spark.read.parquet(f"{out}/chunks_dedup")
+    kept = _kept_chunks(spark, out)
     assert kept.count() == m["chunk_dedup_kept"]
     from driftmind_spark.operators.passages import chunk_dedup as cd
     again = cd(kept.select("url", "chunk_index", "content"))
@@ -700,6 +750,15 @@ def test_chunk_dedup_stage(spark, dup_corpus, tmp_path_factory):
         kept.select("url", "chunk_index"), ["url", "chunk_index"], "left_anti"
     )
     assert missing.count() == 0
+
+    # the stage's lineage row is the committed chunks minus the dropped
+    lin = {(r["stage"], r["bucket"]): r["row_count"]
+           for r in spark.read.parquet(f"{out}/lineage")
+           .filter("status = 'done'").collect()}
+    n_chunks = sum(n for (stage, _), n in lin.items() if stage == "chunks")
+    assert lin[("chunk_dedup", -1)] == (
+        n_chunks - lin[("chunk_dedup_dropped", -1)])
+    assert lin[("chunk_dedup", -1)] == m["chunk_dedup_kept"]
 
 
 def test_chunk_dedup_kill_and_resume_identical(spark, dup_corpus,
@@ -720,8 +779,11 @@ def test_chunk_dedup_kill_and_resume_identical(spark, dup_corpus,
     run(spark, dup_corpus, out_full, embedding_dim=32, n_buckets=8,
         chunk_dedup=True)
 
+    kept_cols = ["url", "chunk_index", "content"]
+    assert _df_fingerprint(_kept_chunks(spark, out_killed), kept_cols) == (
+        _df_fingerprint(_kept_chunks(spark, out_full), kept_cols)
+    ), "kept chunks differ after resume"
     for table, cols in [
-        ("chunks_dedup", ["url", "chunk_index", "content"]),
         ("chunk_dedup_audit",
          ["url", "chunk_index", "fingerprint", "keeper_doc", "keeper_idx"]),
         ("edges", ["url", "subj_canonical", "pred", "obj_canonical"]),
@@ -853,10 +915,11 @@ def test_quality_filter_partial_collision_fails_loudly(spark):
 # junk and clones ran 211 Spark jobs when every stage read its output
 # back, probed isEmpty before each write and kept lineage as Spark
 # appends; with one observed write per table and driver-side lineage it
-# ran 76, and 67 once stage re-reads carry their schema and corpus
-# dedup carries each text group's doc count through the closure.  The
-# budget is 67 plus 10%.
-MAX_BUILD_JOBS = 74
+# ran 76, 67 once stage re-reads carry their schema and corpus dedup
+# carries each text group's doc count through the closure, and 63 once
+# the chunk-dedup stage writes only its dropped rows.  The budget is 63
+# plus 10%.
+MAX_BUILD_JOBS = 69
 
 
 def test_build_job_budget(spark, tmp_path_factory):
